@@ -1,10 +1,14 @@
 package graft.ml
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
 import org.apache.spark.ml.clustering.{GaussianMixture, GaussianMixtureModel, KMeans}
-import org.apache.spark.ml.classification.RandomForestClassifier
-import org.apache.spark.ml.feature.{PCA, StringIndexer, StringIndexerModel}
-import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.ml.classification.{RandomForestClassificationModel, RandomForestClassifier}
+import org.apache.spark.ml.feature.{PCA, StringIndexerModel}
+import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,19 +25,22 @@ import org.apache.spark.sql.functions._
   *     1925-1943`).
   *
   * Spark-native re-expression of the notebook's loop:
-  *   - cluster composition = one groupBy (not a crosstab collect);
-  *   - per-cluster models are fitted from a driver loop (unavoidable —
-  *     model fitting is iterative) over FILTERED views of the cached
-  *     training frame;
-  *   - scoring is a union of per-cluster transforms plus a map-lookup
-  *     expression for hardcoded clusters — evaluated as ONE DataFrame over
-  *     ONE cached clustering pass (the clustered frame is cached so the
-  *     K+1 union branches share a single InMemoryTableScan instead of
-  *     re-scoring the clusterer per branch).
+  *   - cluster composition = one groupBy(cluster, label) (not a crosstab
+  *     collect); its counts also give each forest's label order, so no
+  *     per-cluster StringIndexer is fitted;
+  *   - the per-cluster forests are fitted concurrently from a per-`fit`
+  *     thread pool over FILTERED views of the cached clustered frame — each
+  *     forest is a chain of small jobs with driver work between them, and
+  *     running the chains side by side overlaps those gaps;
+  *   - scoring is ONE projection over the clusterer's output: a forest's
+  *     cluster rows get `predictProbability(features)(attackIdx)` of that
+  *     forest, the other clusters a map lookup of their hardcoded
+  *     probability. Nothing is cached.
   *
   * The probability remap (reference `udf_remap_prob`, `README.md:1679-1680`)
-  * is `vector_to_array(probability)[i]` with i chosen from the per-cluster
-  * StringIndexer's label order — a native expression, not a UDF.
+  * picks index i of the forest's probability vector, with i chosen from the
+  * cluster's label order (frequencyDesc can flip the class index per
+  * cluster).
   */
 class ClusteredClassifier(
     val k: Int = 8,
@@ -69,40 +76,59 @@ class ClusteredClassifier(
     val clustered = clusterModel.transform(train)
       .drop(auxCols: _*)
       .cache()
+    try {
+      // cluster composition: one aggregation, a few (cluster, label, n)
+      // rows to the driver; a null label counts toward the cluster size only
+      val rows = clustered.groupBy(col("cluster"), col(labelCol).cast("string"))
+        .count().collect()
+      val size = rows.groupMapReduce(_.getInt(0))(_.getLong(2))(_ + _)
+      val labelCounts = rows.groupBy(_.getInt(0)).map { case (c, rs) =>
+        c -> rs.collect { case r if !r.isNullAt(1) => r.getString(1) -> r.getLong(2) }.toMap
+      }
+      def attack(c: Int): Long = labelCounts(c).getOrElse("attack", 0L)
+      def normal(c: Int): Long = labelCounts(c).values.sum - attack(c)
 
-    // cluster composition: one aggregation, k tiny rows to the driver
-    val comp = clustered.groupBy(col("cluster"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col(labelCol) === "attack", 1L).otherwise(0L)).as("attack"),
-        sum(when(col(labelCol) =!= "attack", 1L).otherwise(0L)).as("normal"))
-      .collect()
-      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
-      .toMap
+      val (trainable, hardcoded) = size.keys.toSeq.sorted.partition(c =>
+        size(c) > minClusterSize && attack(c) > 0 && normal(c) > 0)
 
-    val (trainable, hardcoded) = comp.partition { case (_, (n, a, nm)) =>
-      n > minClusterSize && a > 0 && nm > 0
-    }
-
-    val models = trainable.keys.toSeq.sorted.map { c =>
-      val sub = clustered.filter(col("cluster") === c)
-      val pipeline = new Pipeline().setStages(Array(
-        new StringIndexer().setInputCol(labelCol).setOutputCol("label_idx")
-          .setStringOrderType("frequencyDesc"),
+      def fitForest(c: Int): PipelineModel = new Pipeline().setStages(Array(
+        new StringIndexerModel(ClusteredClassifier.frequencyDesc(labelCounts(c)))
+          .setInputCol(labelCol).setOutputCol("label_idx"),
         new RandomForestClassifier().setLabelCol("label_idx")
           .setFeaturesCol(featuresCol).setNumTrees(numTrees).setMaxDepth(maxDepth)
           .setFeatureSubsetStrategy("sqrt").setSeed(seed)))
-      c -> pipeline.fit(sub)
-    }.toMap
+        .fit(clustered.filter(col("cluster") === c))
 
-    // majority-class prob for clusters too small/pure to train
-    // (reference cluster_mapping, README.md:1603-1615)
-    val mapping = hardcoded.map { case (c, (_, a, nm)) =>
-      c -> (if (a > nm) 1.0 else 0.0)
-    }
+      // created here, not shared, so its threads inherit the caller's Spark
+      // local properties (job group, scheduler pool)
+      val models = if (trainable.isEmpty) Map.empty[Int, PipelineModel] else {
+        val pool = Executors.newFixedThreadPool(
+          trainable.size min train.sparkSession.sparkContext.defaultParallelism)
+        try {
+          val tasks = trainable.map(c => (() => c -> fitForest(c)): Callable[(Int, PipelineModel)])
+          // invokeAll returns once every fit has ended, failed ones included
+          pool.invokeAll(tasks.asJava).asScala.map { f =>
+            try f.get() catch { case e: ExecutionException => throw e.getCause }
+          }.toMap
+        } finally pool.shutdownNow()
+      }
 
-    clustered.unpersist()
-    new ClusteredClassifierModel(clusterModel, models, mapping, labelCol, auxCols)
+      // majority-class prob for clusters too small/pure to train
+      // (reference cluster_mapping, README.md:1603-1615)
+      val mapping = hardcoded.map(c => c -> (if (attack(c) > normal(c)) 1.0 else 0.0)).toMap
+
+      new ClusteredClassifierModel(clusterModel, models, mapping, labelCol, auxCols)
+    } finally clustered.unpersist()
   }
+}
+
+object ClusteredClassifier {
+
+  /** Labels ordered as a `StringIndexer` with `frequencyDesc` orders them:
+    * by descending count, ties by ascending label.
+    */
+  private[graft] def frequencyDesc(counts: Map[String, Long]): Array[String] =
+    counts.toArray.sortBy { case (l, n) => (-n, l) }.map(_._1)
 }
 
 class ClusteredClassifierModel(
@@ -113,45 +139,31 @@ class ClusteredClassifierModel(
     private val auxCols: Seq[String]) extends Serializable {
 
   /** Score: returns the input plus (cluster, prob) where prob = P(attack).
-    * The clusterer scores the input ONCE into a cached frame; the union's
-    * K+1 branches all read that cache (visible as one InMemoryTableScan
-    * reused per branch in `.explain`). Callers holding the result long-term
-    * should `unpersist()` via [[clearScoringCache]] when done.
-    *
-    * CACHE CONTRACT — one scoring cache at a time: each call releases the
-    * PREVIOUS call's scoring cache before caching the new frame. A
-    * DataFrame returned by an earlier `transform` stays correct but loses
-    * its cache backing, so later actions on it silently re-run the full
-    * clustering+RF scoring pass. Materialize (e.g. `count()`/write) or copy
-    * a result you need before scoring another frame — `NslKddFlow` does
-    * exactly this with its `cvPreds.count()`.
+    * One projection over the clusterer's output: rows of a forest's cluster
+    * get `predictProbability(features)(attackIdx)` of that forest — the
+    * call its own `transform` makes for the `probability` column — and the
+    * other clusters their hardcoded probability (0.0 for a cluster unseen
+    * in training). The result is a plain lazy DataFrame; nothing is cached.
     */
   def transform(df: DataFrame): DataFrame = {
-    // release the previous scoring cache BEFORE caching the new frame:
-    // unpersisting after would remove the just-created entry when df is the
-    // same frame as last time (CacheManager dedups by canonicalized plan),
-    // and it would kill a not-yet-materialized prior cache mid-use
-    lastScored.foreach(_.unpersist())
-    val clustered = clusterModel.transform(df).drop(auxCols: _*).cache()
-    lastScored = Some(clustered)
-    val branches = clusterModels.toSeq.sortBy(_._1).map { case (c, pm) =>
-      // index of "attack" in this cluster's label order (reference maj_label
-      // check — frequencyDesc can flip the class index per cluster)
+    // per forest: the model and the index of "attack" in its label order
+    // (reference maj_label check)
+    val forests = clusterModels.map { case (c, pm) =>
       val labels = pm.stages.head.asInstanceOf[StringIndexerModel].labelsArray.head
-      val attackIdx = labels.indexOf("attack") max 0
-      pm.transform(clustered.filter(col("cluster") === c))
-        .withColumn("prob", vector_to_array(col("probability"))(attackIdx))
-        .drop("label_idx", "rawPrediction", "probability", "prediction")
+      c -> (pm.stages.last.asInstanceOf[RandomForestClassificationModel],
+        labels.indexOf("attack") max 0)
     }
-    val hardcodedRows = {
-      val m = typedlit(hardcodedProb)
-      clustered.filter(!col("cluster").isin(clusterModels.keys.toSeq: _*))
-        .withColumn("prob", coalesce(element_at(m, col("cluster")), lit(0.0)))
+    val hardcoded = coalesce(element_at(typedlit(hardcodedProb), col("cluster")), lit(0.0))
+    val prob = forests.values.headOption.fold(hardcoded) { case (first, _) =>
+      val forestProb = udf { (c: Int, v: Vector) =>
+        val (rf, i) = forests(c)
+        rf.predictProbability(v)(i)
+      }
+      when(col("cluster").isin(forests.keys.toSeq: _*),
+        forestProb(col("cluster"), col(first.getFeaturesCol))).otherwise(hardcoded)
     }
-    (branches :+ hardcodedRows).reduce(_ unionByName _)
+    clusterModel.transform(df).drop(auxCols: _*).withColumn("prob", prob)
   }
-
-  @transient private var lastScored: Option[DataFrame] = None
 
   /** The fitted GaussianMixture inside the clusterer pipeline, if this model
     * was trained in `gm` mode (None in kmeans mode).
@@ -171,11 +183,10 @@ class ClusteredClassifierModel(
     */
   def gmGaussians: Option[DataFrame] = gaussianMixture.map(_.gaussiansDF)
 
-  /** Release the cached clustering pass from the most recent [[transform]]. */
-  def clearScoringCache(): Unit = {
-    lastScored.foreach(_.unpersist())
-    lastScored = None
-  }
+  /** No-op: [[transform]] caches nothing. Kept for callers written when
+    * scoring held a cache until released here.
+    */
+  def clearScoringCache(): Unit = ()
 
   /** Persist to `path` (any Hadoop-visible filesystem): the clusterer and
     * per-cluster pipelines via spark.ml persistence, the driver-side maps as

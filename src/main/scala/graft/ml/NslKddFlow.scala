@@ -85,15 +85,10 @@ object NslKddFlow {
           testPath: Option[String] = None,
           cfg: Config = Config()): Result = {
     val b = build(spark, trainPath, cfg)
-    def metricsOf(df: DataFrame): Metrics.BinaryMetrics = {
-      val scored = b.model.transform(df)
-      val m = Metrics.binaryMetrics(
-        scored.withColumn("pred",
-          RelationalOps.threshold(col("prob"), cfg.predictionThreshold)),
-        "labels2_index", "pred")
-      b.model.clearScoringCache()
-      m
-    }
+    def metricsOf(df: DataFrame): Metrics.BinaryMetrics = Metrics.binaryMetrics(
+      b.model.transform(df).withColumn("pred",
+        RelationalOps.threshold(col("prob"), cfg.predictionThreshold)),
+      "labels2_index", "pred")
     val cvMetrics = metricsOf(b.cv)
     val testMetrics = testPath.map(p =>
       metricsOf(b.prepare(b.label(NslKddSource.load(spark, p)))))
@@ -138,8 +133,6 @@ object NslKddFlow {
         Ensembles.stackFeatures(acc,
           m.transform(df).select(col("id"), Ensembles.probOf(col("probability")).as(name)))
       }
-      // scoring cache released at the end of the flow — the union branches
-      // must share it while cvPreds/evalPreds materialize
     }
     val probCols = "cc_prob" +: catModels.map(_._1)
     def withPreds(df: DataFrame): DataFrame =
@@ -147,10 +140,9 @@ object NslKddFlow {
         Ensembles.predAt(col(c), cfg.predictionThreshold)))
     val predCols = probCols.map(_.replace("_prob", "_pred"))
 
+    // cached: the OR vote (without a test file), the stack fit and the base
+    // metrics all read it
     val cvPreds = withPreds(allProbs(b.cv)).cache()
-    // materialize THROUGH the cv scoring cache now — the eval-side
-    // transform() below releases it (one scoring cache lives at a time)
-    cvPreds.count()
     val evalPreds = testPath match {
       case Some(p) =>
         withPreds(allProbs(b.prepare(b.label(NslKddSource.load(spark, p))))).cache()
@@ -182,7 +174,6 @@ object NslKddFlow {
       testPath.map(_ => ccMetrics(evalPreds)))
 
     cvPreds.unpersist(); if (evalPreds ne cvPreds) evalPreds.unpersist()
-    b.model.clearScoringCache()
     b.release()
     EnsembleResult(base, orVoteMetrics, stackMetrics)
   }

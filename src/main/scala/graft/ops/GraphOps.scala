@@ -813,12 +813,13 @@ object GraphOps {
     // without decoding. Per-round data doubles (two tiny graphs instead
     // of one) but the round/job COUNT halves — the sampled-graph tier's
     // measured cost is per-round constants, not rows. Id contract:
-    // |id| < 2^62 (the engine's ids are row ids or 60-bit md5 hashes).
+    // |id| < 2^62 (the engine's ids are row ids or 60-bit md5 hashes); the
+    // ids are widened to long first, so an int id ≥ 2^30 cannot wrap.
     val truss = s"truss$k"
     val ue = und
-      .select((col("a") * 2).as("a"), (col("b") * 2).as("b"))
-      .unionByName(trussE
-        .select((col("a") * 2 + 1).as("a"), (col("b") * 2 + 1).as("b")))
+      .select((col("a").cast("long") * 2).as("a"), (col("b").cast("long") * 2).as("b"))
+      .unionByName(trussE.select((col("a").cast("long") * 2 + 1).as("a"),
+        (col("b").cast("long") * 2 + 1).as("b")))
     val uv = ue.select(col("a").as("id"))
       .unionByName(ue.select(col("b").as("id"))).distinct()
     val comp = connectedComponents(ue, uv)

@@ -155,7 +155,6 @@ class NslKddPipelineSpec extends SparkTestBase {
     assert(m.far < 0.1, s"FAR ${m.far}")
     assert(m.f1 > 0.85, s"F1 ${m.f1}")
     assert(m.aucBinarized > 0.85 && m.aucBinarized <= 1.0)
-    model.clearScoringCache()
   }
 
   test("ClusteredClassifier (GM mode): PCA→GaussianMixture variant scores sanely (README.md:1831-1943)") {
@@ -182,7 +181,6 @@ class NslKddPipelineSpec extends SparkTestBase {
     val g = model.gmGaussians.get
     assert(g.count() === 4L)
     assert(g.columns.toSeq === Seq("mean", "cov"))
-    model.clearScoringCache()
   }
 
   test("cross-dataset transfer: train-fitted prep + model score KDDTest+ (unseen categories)") {
@@ -212,7 +210,6 @@ class NslKddPipelineSpec extends SparkTestBase {
     assert(m.accuracy > 0.7, s"transfer accuracy ${m.accuracy}")
     assert(m.detectionRate > 0.55, s"transfer DR ${m.detectionRate}")
     assert(m.far < 0.2, s"transfer FAR ${m.far}")
-    model.clearScoringCache()
   }
 
   test("M10 PCA standalone: k=2 projection for viz (README.md:1489-1503)") {
@@ -282,8 +279,6 @@ class NslKddPipelineSpec extends SparkTestBase {
     val pos05 = cvP.filter(Ensembles.predAt(col("prob"), 0.5) === 1.0).count()
     val pos005 = cvP.filter(Ensembles.predAt(col("prob"), 0.05) === 1.0).count()
     assert(pos005 >= pos05)
-
-    model.clearScoringCache()
   }
 
   test("per-category RFs: one-vs-normal models + OR-vote combo (README.md:2039-2975,3141)") {
@@ -349,7 +344,6 @@ class NslKddPipelineSpec extends SparkTestBase {
     assert(m.accuracy > 0.9, s"stack accuracy ${m.accuracy}")
     assert(m.detectionRate > 0.9, s"stack DR ${m.detectionRate}")
     assert(m.far < 0.1, s"stack FAR ${m.far}")
-    model.clearScoringCache()
   }
 
   test("ClusteredClassifierModel save/load round-trip produces identical scores") {
@@ -368,7 +362,7 @@ class NslKddPipelineSpec extends SparkTestBase {
     val again = reloaded.transform(sample).select("id", "prob").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(orig === again)
-    model.clearScoringCache(); reloaded.clearScoringCache(); sample.unpersist()
+    sample.unpersist()
   }
 
   test("NslKddFlow.run: the whole reference flow in one call (small config, train+test)") {

@@ -349,6 +349,21 @@ class OpsSpec extends SparkTestBase {
     assert(eff("truss3") === ((9L, 2L, 7L, 4L, 5L)))
   }
 
+  test("trussDedupEffect: int ids from 2^30 up to near 2^31 keep the two schemes apart") {
+    val edges = Seq((1, 2), (2, 3), (1, 3), (1, 8), (4, 5), (5, 6), (6, 7),
+      (10, 11), (10, 12), (10, 13), (11, 12), (11, 13), (12, 13))
+    // the parity tag doubles each id: in int arithmetic these would wrap
+    Seq(1 << 30, Int.MaxValue - 20).foreach { base =>
+      val pairs = edges.map { case (a, b) => (base + a, base + b) }.toDF("a", "b")
+      assert(pairs.schema.map(_.dataType.typeName) === Seq("integer", "integer"))
+      val eff = GraphOps.trussDedupEffect(pairs, k = 3).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5))).toMap
+      assert(eff("closure") === ((13L, 3L, 12L, 4L, 9L)), s"base $base")
+      assert(eff("truss3") === ((9L, 2L, 7L, 4L, 5L)), s"base $base")
+    }
+  }
+
   test("transitionMatrix: per-user consecutive pairs, row-normalized micro probabilities") {
     def ts(s: Long) = new java.sql.Timestamp(s * 1000L)
     // u1: a->b->a->c ; u2: b->a ; u3: singleton (no transitions).
