@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 object Bench {
 
@@ -52,23 +51,26 @@ object Bench {
     * per-query line grew past the driver's ~2000-char tail window at 210
     * queries, truncating mid-line — `parsed` came back null for BOTH r14
     * and r15 artifacts and the whole PERF comparison was lost (VERDICT
-    * r15 item 1). This line carries the totals, the error map (errors
-    * must stay loud), and the PATH of the full artifact holding the
-    * complete per-query map; it stays well under the tail window at any
-    * query count.
+    * r15 item 1). This line carries the totals, the error count with the
+    * first 3 errors by name (errors must stay loud, but a sweep where every
+    * query fails must not push the line past the window), and the PATH of
+    * the full artifact holding the complete per-query map, or null when no
+    * file was written; it stays well under the tail window at any query
+    * count.
     */
   private[graft] def renderCompactJson(
       merged: Map[String, Either[String, Double]], sfDir: String,
-      retimed: Map[String, Double], fullPath: String): String = {
+      retimed: Map[String, Double], fullPath: Option[String]): String = {
     val ok = merged.collect { case (k, Right(v)) => k -> v }
-    val errs = merged.collect { case (k, Left(e)) => k -> e }
-    val es = errs.map { case (k, e) =>
+    val errs = merged.collect { case (k, Left(e)) => k -> e }.toSeq.sortBy(_._1)
+    val es = errs.take(3).map { case (k, e) =>
       s"\"" + k + "\":\"" + e.replaceAll("[\\p{Cntrl}\"\\\\]", " ") + "\""
     }.mkString("{", ",", "}")
     val total = if (ok.nonEmpty) ok.values.sum else 0.0
+    val file = fullPath.fold("null")(p => "\"" + p + "\"")
     s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""queries":${ok.size},"errors":$es,"retimed":${retimed.size},""" +
-      s""""queries_file":"$fullPath","sf":"$sfDir"}"""
+      s""""queries":${ok.size},"n_errors":${errs.size},"errors":$es,""" +
+      s""""retimed":${retimed.size},"queries_file":$file,"sf":"$sfDir"}"""
   }
 
   /** Previous artifact's per-query seconds, parsed leniently (query keys
@@ -106,7 +108,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // optional comma-separated query-name subset, for timing a few queries
     // at a large SF without paying the full two-pass sweep (SCALE_NOTES
     // exponent runs); absent → all queries, the driver's path
@@ -119,15 +121,7 @@ object Bench {
       require(unknown.isEmpty,
         s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // warm up the JVM/codegen/scan paths once so per-query numbers measure
     // the queries, not first-query JIT; run in deterministic name order
     // Timing action: write to the noop datasource, not count(). count() lets
@@ -277,9 +271,9 @@ object Bench {
     // misreport the engine; subset runs must name their output explicitly.
     val out = sys.env.get("SPARK_GRAFT_BENCH_OUT")
       .orElse(if (only.isEmpty) Some("BENCH_last.json") else None)
-    out.foreach { o =>
-      try Files.writeString(Paths.get(o), json + "\n")
-      catch { case _: Throwable => () }
+    val outWritten = out.filter { o =>
+      try { Files.writeString(Paths.get(o), json + "\n"); true }
+      catch { case scala.util.control.NonFatal(_) => false }
     }
     // ROUND-STAMPED full artifact: the driver's BENCH_r{N}.json keeps only
     // a 2000-char stdout tail — too short for the full per-query map — so
@@ -296,9 +290,9 @@ object Bench {
           .foldLeft(0)(math.max)
         val p = f"BENCH_full_r$rn%02d.json"
         Files.writeString(Paths.get(p), json + "\n")
-        p
-      } catch { case _: Throwable => "BENCH_last.json" }
-    } else out.getOrElse("")
+        Some(p)
+      } catch { case scala.util.control.NonFatal(_) => outWritten }
+    } else outWritten
     // print the full line FIRST (complete record in the log for a human),
     // then the COMPACT line LAST so the driver's ~2000-char stdout tail
     // always contains one complete parseable JSON line (the full line

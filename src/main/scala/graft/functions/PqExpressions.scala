@@ -23,7 +23,53 @@ import org.apache.spark.sql.types._
   * pathological overflow would wrap identically); code tiebreak is
   * first-minimum (`array_position(ds, array_min(ds))`).
   */
-object PqExpressions
+object PqExpressions {
+
+  /** The nearest-centroid scan [[PqCodes]] and [[PqMinDists]] share: for
+    * each subspace m, `emit(m, code, dist)` with the first-minimum code
+    * over elements [m·subDim, (m+1)·subDim) and its INT distance. Fails,
+    * naming the expression, on a vector shorter than numSub·subDim or with
+    * a null element in that prefix: either would otherwise read past the
+    * array or read the null slot as 0.
+    */
+  private[functions] def nearest(arr: ArrayData, cb: Array[Array[Array[Int]]],
+                                 name: String)(emit: (Int, Int, Int) => Unit): Unit = {
+    val numSub = cb.length
+    val subDim = cb(0)(0).length
+    val need = numSub * subDim
+    if (arr.numElements() < need)
+      throw new IllegalArgumentException(s"$name: vector has ${arr.numElements()} " +
+        s"elements, expected at least numSub·subDim = $need")
+    var i = 0
+    while (i < need) {
+      if (arr.isNullAt(i))
+        throw new IllegalArgumentException(s"$name: null element at index $i")
+      i += 1
+    }
+    var m = 0
+    while (m < numSub) {
+      val cents = cb(m)
+      val off = m * subDim
+      var best = Int.MaxValue
+      var bestC = 0
+      var c = 0
+      while (c < cents.length) {
+        val cent = cents(c)
+        var d = 0
+        var j = 0
+        while (j < subDim) {
+          val diff = arr.getInt(off + j) - cent(j)
+          d += diff * diff
+          j += 1
+        }
+        if (d < best) { best = d; bestC = c }
+        c += 1
+      }
+      emit(m, bestC, best)
+      m += 1
+    }
+  }
+}
 
 /** All `numSub` PQ codes of a quantized int vector under a frozen integer
   * codebook, as ONE native call: array<int> of 0-based nearest-centroid
@@ -57,31 +103,8 @@ case class PqCodes(child: Expression, cb: Array[Array[Array[Int]]])
 
 object PqCodes {
   def compute(arr: ArrayData, cb: Array[Array[Array[Int]]]): ArrayData = {
-    val numSub = cb.length
-    val subDim = cb(0)(0).length
-    val out = new Array[Int](numSub)
-    var m = 0
-    while (m < numSub) {
-      val cents = cb(m)
-      val off = m * subDim
-      var best = Int.MaxValue
-      var bestC = 0
-      var c = 0
-      while (c < cents.length) {
-        val cent = cents(c)
-        var d = 0
-        var j = 0
-        while (j < subDim) {
-          val diff = arr.getInt(off + j) - cent(j)
-          d += diff * diff
-          j += 1
-        }
-        if (d < best) { best = d; bestC = c }
-        c += 1
-      }
-      out(m) = bestC
-      m += 1
-    }
+    val out = new Array[Int](cb.length)
+    PqExpressions.nearest(arr, cb, "pq_codes")((m, code, _) => out(m) = code)
     new GenericArrayData(out)
   }
 }
@@ -119,30 +142,8 @@ case class PqMinDists(child: Expression, cb: Array[Array[Array[Int]]])
 
 object PqMinDists {
   def compute(arr: ArrayData, cb: Array[Array[Array[Int]]]): ArrayData = {
-    val numSub = cb.length
-    val subDim = cb(0)(0).length
-    val out = new Array[Long](numSub)
-    var m = 0
-    while (m < numSub) {
-      val cents = cb(m)
-      val off = m * subDim
-      var best = Int.MaxValue
-      var c = 0
-      while (c < cents.length) {
-        val cent = cents(c)
-        var d = 0
-        var j = 0
-        while (j < subDim) {
-          val diff = arr.getInt(off + j) - cent(j)
-          d += diff * diff
-          j += 1
-        }
-        if (d < best) best = d
-        c += 1
-      }
-      out(m) = best.toLong
-      m += 1
-    }
+    val out = new Array[Long](cb.length)
+    PqExpressions.nearest(arr, cb, "pq_min_dists")((m, _, d) => out(m) = d.toLong)
     new GenericArrayData(out)
   }
 }

@@ -4,6 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Per-invocation registry of the caches an operator call creates, returned
@@ -54,4 +55,18 @@ object CacheScope {
   val default: CacheScope = new CacheScope
 
   def apply(): CacheScope = new CacheScope
+
+  /** Unpersists the blocks behind a frame returned by `localCheckpoint`
+    * (eager or lazy): the RDD at the root of its `LogicalRDD` plan, which
+    * the SQL CacheManager never sees, so no scope can release it. Free a
+    * frame only after an action has materialized every frame that reads
+    * it: checkpoints truncate lineage, so a successor materialized later
+    * would find its input blocks gone. Throws on any other frame.
+    */
+  private[graft] def freeCheckpoint(frame: DataFrame): Unit =
+    frame.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case p => throw new IllegalArgumentException(
+        s"freeCheckpoint needs a localCheckpoint frame, got a ${p.nodeName} plan")
+    }
 }

@@ -733,9 +733,11 @@ object DedupOps {
     // second insert mutates (localCheckpoint is eager — the returned
     // frame serves from checkpoint blocks, never the mutated table)
     val cappedM = capped.localCheckpoint(true)
-    sets.select(col("id"), col("hs"), col("sz"))
-      .write.insertInto(s"${tablePrefix}_sets")
-    cappedM.write.insertInto(s"${tablePrefix}_bands")
+    try {
+      sets.select(col("id"), col("hs"), col("sz"))
+        .write.insertInto(s"${tablePrefix}_sets")
+      cappedM.write.insertInto(s"${tablePrefix}_bands")
+    } finally CacheScope.freeCheckpoint(cappedM)
     if (newCorpusTag.nonEmpty) {
       val buckets = meta.getAs[Int]("buckets")
       val so = meta.getAs[Long]("split_occupancy")
@@ -1274,9 +1276,11 @@ object DedupOps {
     // Checkpoint blocks are invisible to table re-caching.
     val cappedM = plannedBandedAppend(sets, tablePrefix, k, bands, maxBucket)
       .localCheckpoint(true)
-    sets.select(col("id"), col("hs"), col("sz"))
-      .write.insertInto(s"${tablePrefix}_sets")
-    cappedM.write.insertInto(s"${tablePrefix}_bands")
+    try {
+      sets.select(col("id"), col("hs"), col("sz"))
+        .write.insertInto(s"${tablePrefix}_sets")
+      cappedM.write.insertInto(s"${tablePrefix}_bands")
+    } finally CacheScope.freeCheckpoint(cappedM)
     if (newCorpusTag.nonEmpty) {
       val buckets = meta.getAs[Int]("buckets")
       import spark.implicits._
@@ -1341,7 +1345,8 @@ object DedupOps {
       .unionByName(ids.select(col(idCol).cast("long").as("id")))
       .distinct()
       .localCheckpoint(true)
-    graft.sources.Bucketing.saveTable(merged, s"${tablePrefix}_deleted")
+    try graft.sources.Bucketing.saveTable(merged, s"${tablePrefix}_deleted")
+    finally CacheScope.freeCheckpoint(merged)
   }
 
   /** COMPACT the persisted banded index: physically drop every tombstoned
@@ -1381,10 +1386,15 @@ object DedupOps {
         .join(broadcast(deleted), Seq("id"), "left_anti")
         .select(col("id"), col("hs"), col("sz"))
         .localCheckpoint(true)
-      graft.sources.Bucketing.writeBucketed(bandsKeep,
-        s"${tablePrefix}_bands", Seq("band_idx", "band_sig"), buckets)
-      graft.sources.Bucketing.writeBucketed(setsKeep,
-        s"${tablePrefix}_sets", Seq("id"), buckets)
+      try {
+        graft.sources.Bucketing.writeBucketed(bandsKeep,
+          s"${tablePrefix}_bands", Seq("band_idx", "band_sig"), buckets)
+        graft.sources.Bucketing.writeBucketed(setsKeep,
+          s"${tablePrefix}_sets", Seq("id"), buckets)
+      } finally {
+        CacheScope.freeCheckpoint(bandsKeep)
+        CacheScope.freeCheckpoint(setsKeep)
+      }
       import spark.implicits._
       graft.sources.Bucketing.saveTable(
         Seq.empty[Long].toDF("id"), s"${tablePrefix}_deleted")

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import CacheScope.freeCheckpoint
+
 /** Distributed graph primitives for training-data pipelines — currently
   * connected components, the step that turns a near-duplicate PAIR list into
   * duplicate CLUSTERS (so dedup can keep exactly one representative per
@@ -89,54 +91,28 @@ object GraphOps {
                           idCol: String = "id",
                           aCol: String = "a", bCol: String = "b",
                           maxIter: Int = 50, propRounds: Int = 6): DataFrame = {
-    val sc = edges.sparkSession.sparkContext
-    // localCheckpoint persists an RDD invisible to the SQL CacheManager (so
-    // CacheScope can't free it); track each step's newly-persisted RDD ids
-    // and unpersist a step's blocks as soon as the next step supersedes
-    // them. Best-effort by id-set diff — a concurrent persist from another
-    // thread would at worst be left to the ContextCleaner, never freed early
-    // (we only free ids this loop itself created).
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint()
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    // LAZY variant for round intermediates that are immediately consumed by
-    // the round's own convergence action: persist registration is still
-    // eager (the id diff works), but materialization rides the action's
-    // job — one job per round instead of checkpoint-job + action-job. The
-    // caller must run an action on the frame BEFORE freeing its
-    // predecessor (materializing after the predecessor is gone would
-    // recompute through a truncated lineage).
-    def checkpointLazy(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint(eager = false)
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
     // normalized undirected edge list: (hi, lo) with hi > lo throughout —
     // both star steps emit (bigger, smaller) by construction, so the
     // invariant is free after the initial normalization
     // all three setup checkpoints are LAZY: round 1's Σcomp action (or,
     // when propRounds = 0, the quotient fingerprint) materializes them in
     // ONE job instead of three eager checkpoint jobs — the setup cost that
-    // dominated the tiny sampled-graph queries. Safe by the checkpointLazy
+    // dominated the tiny sampled-graph queries. Safe by the freeCheckpoint
     // rule: every one of them is materialized by an action before any
     // frame reading it is freed
-    val (e0, e0Ids) = checkpointLazy(
-      edges.select(
-          greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("hi"),
-          least(col(aCol).cast("long"), col(bCol).cast("long")).as("lo"))
-        .filter(col("hi") =!= col("lo")).distinct())
+    val e0 = edges.select(
+        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("hi"),
+        least(col(aCol).cast("long"), col(bCol).cast("long")).as("lo"))
+      .filter(col("hi") =!= col("lo")).distinct()
+      .localCheckpoint(eager = false)
 
     // ---- phase 1: bounded min-label propagation with pointer jumping ----
-    val (sym, symIds) = checkpointLazy(
-      e0.select(col("hi").as("x"), col("lo").as("nb"))
-        .union(e0.select(col("lo").as("x"), col("hi").as("nb"))))
-    var (labels, labelIds) = checkpointLazy(
-      vertices.select(col(idCol).cast("long").as("x"),
-        col(idCol).cast("long").as("comp")))
+    val sym = e0.select(col("hi").as("x"), col("lo").as("nb"))
+      .union(e0.select(col("lo").as("x"), col("hi").as("nb")))
+      .localCheckpoint(eager = false)
+    var labels = vertices.select(col(idCol).cast("long").as("x"),
+        col(idCol).cast("long").as("comp"))
+      .localCheckpoint(eager = false)
     var prevSum: java.math.BigDecimal = null
     var propDone = false
     var r = 0
@@ -156,33 +132,33 @@ object GraphOps {
       // lazy checkpoint: the Σcomp action below materializes `next` (one
       // job per round, not checkpoint + agg); the superseded round is
       // freed only after that action returns
-      val (next, nextIds) = checkpointLazy(jumped)
+      val next = jumped.localCheckpoint(eager = false)
       // labels are monotone non-increasing, so Σcomp unchanged ⇔ fixpoint;
       // decimal accumulation — a sum of n ids can overflow a long at scale
       val row = next.agg(sum(col("comp").cast("decimal(38,0)"))).head()
       val s = if (row.isNullAt(0)) java.math.BigDecimal.ZERO else row.getDecimal(0)
       propDone = prevSum != null && s.compareTo(prevSum) == 0
       prevSum = s
-      free(labelIds) // superseded round (next is already materialized)
+      freeCheckpoint(labels) // superseded round (next is already materialized)
       labels = next
-      labelIds = nextIds
       r += 1
     }
-    free(symIds)
+    freeCheckpoint(sym)
     if (propDone) {
       // true propagation fixpoint — labels already final (constant on each
       // component, minimum keeps itself); the star phase has nothing to do
-      free(e0Ids)
+      freeCheckpoint(e0)
       labels.select(col("x").as(idCol), col("comp"))
     } else {
       // ---- phase 2: star rounds on the label-contracted quotient graph ----
       // lazy: the fingerprint below materializes the quotient in its job
-      var (l, lIds) = checkpointLazy(
-        e0.join(labels.select(col("x").as("hi"), col("comp").as("ch")), Seq("hi"))
-          .join(labels.select(col("x").as("lo"), col("comp").as("cl")), Seq("lo"))
-          .select(greatest(col("ch"), col("cl")).as("hi"),
-            least(col("ch"), col("cl")).as("lo"))
-          .filter(col("hi") =!= col("lo")).distinct())
+      var l = e0
+        .join(labels.select(col("x").as("hi"), col("comp").as("ch")), Seq("hi"))
+        .join(labels.select(col("x").as("lo"), col("comp").as("cl")), Seq("lo"))
+        .select(greatest(col("ch"), col("cl")).as("hi"),
+          least(col("ch"), col("cl")).as("lo"))
+        .filter(col("hi") =!= col("lo")).distinct()
+        .localCheckpoint(eager = false)
       // cheap edge-set fingerprint; decimal accumulation — a sum of n 64-bit
       // hashes overflows a long at scale
       def fingerprint(df: DataFrame): (Long, java.math.BigDecimal) = {
@@ -219,8 +195,8 @@ object GraphOps {
       // e0 may be freed only AFTER the quotient is materialized: l's lazy
       // checkpoint reads e0's blocks, and an eager localCheckpoint has
       // truncated lineage — freeing first would make the star phase
-      // recompute through missing blocks (checkpointLazy's own rule)
-      free(e0Ids)
+      // recompute through missing blocks (the freeCheckpoint rule)
+      freeCheckpoint(e0)
       var it = 0
       var done = false
       while (!done && it < maxIter && cnt > 0) {
@@ -228,18 +204,17 @@ object GraphOps {
         // job (ls's shuffle output is shared by smallStar's two readers);
         // ls is freed only after that job, so nothing recomputes through
         // a truncated lineage
-        val (ls, lsIds) = checkpointLazy(largeStar(l))
-        val (ss, ssIds) = checkpointLazy(smallStar(ls))
+        val ls = largeStar(l).localCheckpoint(eager = false)
+        val ss = smallStar(ls).localCheckpoint(eager = false)
         val (c2, k2) = fingerprint(ss)
-        free(lsIds) // intermediate, superseded by ss (now materialized)
+        freeCheckpoint(ls) // intermediate, superseded by ss (now materialized)
         // fingerprint equality gates the exact check; `except` confirms the
         // true fixpoint (runs on two checkpointed frames, and only in the
         // rare rounds the fingerprints collide or the loop is converging)
         done = c2 == cnt && k2.compareTo(chk) == 0 &&
           ss.except(l).head(1).isEmpty
-        free(lIds)
+        freeCheckpoint(l)
         l = ss
-        lIds = ssIds
         cnt = c2
         chk = k2
         it += 1
@@ -294,7 +269,7 @@ object GraphOps {
                             aCol: String = "a", bCol: String = "b"): DataFrame = {
     // LAZY checkpoints (multi-consumer frames, materialized by the CC
     // run's first action before anything that reads them could recompute
-    // — the checkpointLazy rule; nothing here is ever explicitly freed):
+    // — the freeCheckpoint rule; nothing here is ever explicitly freed):
     // two eager checkpoint jobs per maintain epoch fold into the CC run
     val asg = assignments.select(col(idCol).cast("long").as("x"),
       col("comp").cast("long").as("comp")).localCheckpoint(eager = false)
@@ -499,63 +474,46 @@ object GraphOps {
                   dstCol: String = "dst", iterations: Int = 3,
                   scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1 && iterations <= 50, "iterations in [1, 50]")
-    val sc = edges.sparkSession.sparkContext
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint()
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def checkpointLazy(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint(eager = false)
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
     // vertices AND edges may be expensive subtrees (joins/distincts) that
     // would otherwise re-execute once per round — checkpointed up front.
     // All setup checkpoints are LAZY: v materializes in the n = count()
     // job, the degree-denormalized edge list (and e under it) in round
     // 1's eager round checkpoint — two setup jobs instead of five. Safe
-    // by the checkpointLazy rule: every frame is materialized by an
+    // by the freeCheckpoint rule: every frame is materialized by an
     // action (count / round 1) before anything reading it is freed, and
     // the frees all sit after the round loop
-    val (v, vIds) = checkpointLazy(
-      vertices.select(col(idCol).cast("long").as("x")))
-    val (e, eIds) = checkpointLazy(
-      edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")))
+    val v = vertices.select(col(idCol).cast("long").as("x"))
+      .localCheckpoint(eager = false)
+    val e = edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))
+      .localCheckpoint(eager = false)
     // out-degree DENORMALIZED onto the edge list ONCE: each round then
     // pays a single src-keyed join (ranks) instead of two — the per-round
     // arithmetic is unchanged, so ranks are bit-identical
-    val (deg, degIds) = checkpointLazy(
-      e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
-    val (ed, edIds) = checkpointLazy(e.join(deg, Seq("src")))
+    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .localCheckpoint(eager = false)
+    val ed = e.join(deg, Seq("src")).localCheckpoint(eager = false)
     val n = v.count()
     val init = scale / math.max(n, 1L)
     val base = 15L * init / 100L
-    var (ranks, rankIds) = checkpointLazy(
-      v.select(col("x"), lit(init).as("rank")))
+    var ranks = v.select(col("x"), lit(init).as("rank"))
+      .localCheckpoint(eager = false)
     (0 until iterations).foreach { _ =>
       val contribs = ed
         .join(ranks.select(col("x").as("src"), col("rank")), Seq("src"))
         .select(col("dst").as("x"),
           expr("(85 * (rank div deg)) div 100").as("c"))
         .groupBy(col("x")).agg(sum(col("c")).as("inflow"))
-      // localCheckpoint() is EAGER by default — next is fully materialized
-      // when checkpointTracked returns, so the superseded round frees safely
-      val (next, nextIds) = checkpointTracked(
-        v.join(contribs, Seq("x"), "left")
-          .select(col("x"),
-            (lit(base) + coalesce(col("inflow"), lit(0L))).as("rank")))
-      free(rankIds)
+      // an EAGER checkpoint — next is fully materialized when it returns,
+      // so the superseded round frees safely
+      val next = v.join(contribs, Seq("x"), "left")
+        .select(col("x"),
+          (lit(base) + coalesce(col("inflow"), lit(0L))).as("rank"))
+        .localCheckpoint(eager = true)
+      freeCheckpoint(ranks)
       ranks = next
-      rankIds = nextIds
     }
-    free(edIds)
-    free(degIds)
-    free(eIds)
-    free(vIds)
+    Seq(ed, deg, e, v).foreach(freeCheckpoint)
     // like connectedComponents: the FINAL round's checkpoint backs the
     // returned frame and is freed by the ContextCleaner once the caller
     // drops the frame — it cannot be freed here without invalidating the
@@ -724,38 +682,29 @@ object GraphOps {
     */
   private def trussPeel(und0: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, "k-truss needs k >= 3")
-    val sc = und0.sparkSession.sparkContext
-    def checkpointLazy(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint(eager = false)
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id)
-        .foreach(_.unpersist(blocking = false)))
     // lazy checkpoints throughout: each round's count() materializes its
     // frame in the same job (one job per round, not checkpoint + count);
     // the superseded round is freed only after that count returns
-    val (undC, undIds) = checkpointLazy(und0)
-    var (o, oIds) = checkpointLazy(oriented(undC, degrees(undC)))
+    val undC = und0.localCheckpoint(eager = false)
+    var o = oriented(undC, degrees(undC)).localCheckpoint(eager = false)
     var prevCount = o.count() // materializes undC and o in one job
-    free(undIds) // the oriented list is a bijection of the edge set
+    freeCheckpoint(undC) // the oriented list is a bijection of the edge set
     var r = 0
     var converged = false
     while (r < rounds && !converged) {
       // support >= k-2 >= 1 drops zero-support edges by construction
       // (they never earn a credit row), so the filtered support table IS
       // the next oriented edge list — no join back per round
-      val (next, nextIds) = checkpointLazy(
-        orientedSupport(o).filter(col("support") >= k - 2)
-          .select(col("src"), col("dst"), col("dd")))
+      val next = orientedSupport(o).filter(col("support") >= k - 2)
+        .select(col("src"), col("dst"), col("dd"))
+        .localCheckpoint(eager = false)
       // edge counts are monotone decreasing under peeling; an UNCHANGED
       // count means no edge was dropped, i.e. every edge already had
       // support >= k-2 within the current subgraph — the fixpoint, proven
       // without the extra verification pass (counts on checkpointed
       // frames are cheap)
       val n = next.count()
-      free(oIds); o = next; oIds = nextIds
+      freeCheckpoint(o); o = next
       converged = n == prevCount
       prevCount = n
       r += 1
@@ -775,7 +724,7 @@ object GraphOps {
     if (!converged) {
       val bad = fin.filter(col("support") < k - 2).limit(1).count()
       if (bad > 0) {
-        free(oIds)
+        freeCheckpoint(o)
         throw new IllegalStateException(
           s"trussEdges did not converge in $rounds rounds (k=$k) — raise " +
             "`rounds`; refusing to return a non-truss silently")

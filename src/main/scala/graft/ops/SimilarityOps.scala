@@ -1920,7 +1920,7 @@ object SimilarityOps {
     // LAZY: the count() right below materializes it — one job, not
     // checkpoint-job + count-job (the epoch's job-count diet: every
     // intermediate here is materialized by a later action BEFORE the
-    // inserts mutate the tables it reads, per the checkpointLazy rule)
+    // inserts mutate the tables it reads)
     val fresh = batch
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
       .dropDuplicates("id")
@@ -2553,11 +2553,15 @@ object SimilarityOps {
     * frozen — nCells rows read driver-side, broadcast, compiled
     * distance loop per batch row) and `insertInto` the bucketed cells
     * table, so the corpus files never rewrite and later probes scan old and
-    * new members of a cell together, still exchange-free.
+    * new members of a cell together, still exchange-free. Tombstoned ids
+    * and ids already in the index skip ([[ivfAdmitted]]), so a replayed
+    * batch is a no-op; that check adds one pruned scan of the `_cells` id
+    * column, semi-joined against the broadcast batch ids.
     *
     * Honest limit: a frozen quantizer degrades as the ingested distribution
     * drifts from the one the centroids were fit on — cells imbalance and
-    * partial-probe recall drops. Appends keep ingest |batch|-sized;
+    * partial-probe recall drops. Appends exchange and write only
+    * |batch|-sized data (plus the id-column scan above);
     * schedule a rebuild ([[writeIvfIndex]] / [[ensureIvfIndex]] with a new
     * tag) when drift matters, exactly like a FAISS IVF retrain.
     */
@@ -2570,13 +2574,8 @@ object SimilarityOps {
       .orderBy(col("cell"))
       .collect().map(_.getAs[scala.collection.Seq[Double]]("center").toArray)
     val bcCenters = spark.sparkContext.broadcast(centers)
-    // an un-compacted tombstoned id cannot be re-appended: its stale cells
-    // rows would resurface the moment the tombstone lifted — skip such ids
-    // until a [[compactIvfIndex]] (the banded-index append contract)
-    val dels = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
-    val admissible = batch.join(broadcast(dels),
-      batch(idCol).cast("long") === dels("id"), "left_anti")
-    val assigned = admissible
+    val admitted = ivfAdmitted(batch, tablePrefix, "neighbor_id", idCol, vecCol)
+    val assigned = admitted
       .select(col(idCol).cast("long").as("neighbor_id"),
         col(vecCol).cast("array<float>").as("cv"))
       .as[(Long, Array[Float])]
@@ -2594,7 +2593,37 @@ object SimilarityOps {
           (best, id, v)
         }
       }.toDF("cell", "neighbor_id", "cv")
-    assigned.write.insertInto(s"${tablePrefix}_cells")
+    try assigned.write.insertInto(s"${tablePrefix}_cells")
+    finally CacheScope.freeCheckpoint(admitted)
+  }
+
+  /** The rows of `batch` an IVF or IVF-PQ append may insert, as
+    * (`idCol`, `vecCol`):
+    *   - an id with a standing tombstone skips until a [[compactIvfIndex]]:
+    *     its stale `_cells` rows would resurface the moment the tombstone
+    *     lifted (the banded-index append contract);
+    *   - an id already in `_cells` skips, so a replayed batch inserts
+    *     nothing twice. The `_cells` member-id column (`memberId`) is
+    *     semi-joined against the broadcast batch ids first, so only the
+    *     batch-sized set of present ids joins the tombstones in the one
+    *     broadcast the batch is anti-joined against: one pruned scan and
+    *     no shuffle exchange, whatever the corpus size.
+    * Returned as an EAGER local checkpoint (the banded append's rule): the
+    * plan reads `_cells`, which the caller's insert mutates. The caller
+    * frees it with [[CacheScope.freeCheckpoint]] once the insert is done.
+    */
+  private def ivfAdmitted(batch: DataFrame, tablePrefix: String, memberId: String,
+                          idCol: String, vecCol: String): DataFrame = {
+    val spark = batch.sparkSession
+    val dels = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
+    val batchIds = batch.select(col(idCol).cast("long").as("batch_id"))
+    val present = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_cells")
+      .select(col(memberId).as("skip_id"))
+      .join(broadcast(batchIds), col("skip_id") === col("batch_id"), "left_semi")
+    val skip = dels.select(col("id").as("skip_id")).union(present)
+    batch.join(broadcast(skip), col(idCol).cast("long") === col("skip_id"), "left_anti")
+      .select(col(idCol), col(vecCol))
+      .localCheckpoint(eager = true)
   }
 
   /** LOGICAL delete from a persisted IVF or IVF-PQ index — the embedding
@@ -2621,7 +2650,8 @@ object SimilarityOps {
       .unionByName(ids.select(col(idCol).cast("long").as("id")))
       .distinct()
       .localCheckpoint(true)
-    graft.sources.Bucketing.saveTable(merged, s"${tablePrefix}_deleted")
+    try graft.sources.Bucketing.saveTable(merged, s"${tablePrefix}_deleted")
+    finally CacheScope.freeCheckpoint(merged)
   }
 
   /** COMPACT a persisted IVF or IVF-PQ index: physically rewrite `_cells`
@@ -2659,8 +2689,9 @@ object SimilarityOps {
           Seq(memberId), "left_anti")
         .select(cells.columns.map(col): _*)
         .localCheckpoint(true)
-      graft.sources.Bucketing.writeBucketed(keep, s"${tablePrefix}_cells",
+      try graft.sources.Bucketing.writeBucketed(keep, s"${tablePrefix}_cells",
         Seq("cell"), buckets)
+      finally CacheScope.freeCheckpoint(keep)
       graft.sources.Bucketing.saveTable(
         Seq.empty[Long].toDF("id"), s"${tablePrefix}_deleted")
     }
@@ -2679,7 +2710,8 @@ object SimilarityOps {
     val updated = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta")
       .withColumn("corpus_tag", lit(tag))
       .localCheckpoint(true)
-    graft.sources.Bucketing.saveTable(updated, s"${tablePrefix}_meta")
+    try graft.sources.Bucketing.saveTable(updated, s"${tablePrefix}_meta")
+    finally CacheScope.freeCheckpoint(updated)
   }
 
   /** The shared tombstone → conditional-compact → append → restamp
@@ -2710,16 +2742,21 @@ object SimilarityOps {
     val gone = diff.filter(col("status").isin("removed", "changed"))
       .select(col(idCol))
     if (!gone.isEmpty) deleteFromIvfIndex(gone, tablePrefix, idCol)
+    // materialized once: the tombstone check, the emptiness check and the
+    // append's admission step each read it
     val fresh = newSnapshot.join(
       diff.filter(col("status").isin("added", "changed")).select(col(idCol)),
       Seq(idCol), "left_semi")
-    // a fresh id with a STANDING tombstone (changed now, or re-added after
-    // a removals-only cycle) forces the compact — the append's anti-join
-    // would otherwise silently drop it
-    val appendingTombstoned = fresh.select(col(idCol).cast("long").as("id"))
-      .join(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted"), Seq("id"), "left_semi")
-    if (!appendingTombstoned.isEmpty) compactIvfIndex(tablePrefix)
-    if (!fresh.isEmpty) append(fresh)
+      .localCheckpoint(eager = true)
+    try {
+      // a fresh id with a STANDING tombstone (changed now, or re-added after
+      // a removals-only cycle) forces the compact — the append's anti-join
+      // would otherwise silently drop it
+      val appendingTombstoned = fresh.select(col(idCol).cast("long").as("id"))
+        .join(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted"), Seq("id"), "left_semi")
+      if (!appendingTombstoned.isEmpty) compactIvfIndex(tablePrefix)
+      if (!fresh.isEmpty) append(fresh)
+    } finally CacheScope.freeCheckpoint(fresh)
     if (newCorpusTag.nonEmpty) restampIvfTag(spark, tablePrefix, newCorpusTag)
   }
 
@@ -3573,21 +3610,20 @@ object SimilarityOps {
   /** APPEND a batch into the persisted IVF-PQ index: assign to the FROZEN
     * coarse centroids (broadcast, compiled loop — [[appendToIvfIndex]]'s
     * shape), encode under the FROZEN PQ model ([[pqEncode]] — X106's
-    * stateless stage), `insertInto` the bucketed cells. Ingest is
-    * |batch|-sized; both quantizers drift as the distribution moves —
+    * stateless stage), `insertInto` the bucketed cells; tombstoned and
+    * already-indexed ids skip ([[ivfAdmitted]], one pruned scan of the
+    * `_cells` id column). Exchanged and written data is |batch|-sized;
+    * both quantizers drift as the distribution moves —
     * retrain = [[ensureIvfPqIndex]] with a new tag, and [[ivfDriftReport]]
     * on a full-vector twin measures when.
     */
   def appendToIvfPqIndex(batch: DataFrame, tablePrefix: String,
                          idCol: String = "vec_id",
                          vecCol: String = "embedding"): Unit = {
-    val spark = batch.sparkSession
-    // tombstoned ids skip until a compact (see [[appendToIvfIndex]])
-    val dels = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
-    val admissible = batch.join(broadcast(dels),
-      batch(idCol).cast("long") === dels("id"), "left_anti")
-    ivfPqAssignCodes(admissible, tablePrefix, idCol, vecCol)
+    val admitted = ivfAdmitted(batch, tablePrefix, "vec_id", idCol, vecCol)
+    try ivfPqAssignCodes(admitted, tablePrefix, idCol, vecCol)
       .write.insertInto(s"${tablePrefix}_cells")
+    finally CacheScope.freeCheckpoint(admitted)
   }
 
   /** [[maintainIvfIndexFromDiff]] for the IVF-PQ tier: identical

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines:
@@ -1637,6 +1637,59 @@ object TextOps {
       .otherwise(array().cast("array<struct<lhs:string,rhs:string>>"))
   }
 
+  /** Corpus word-frequency table (w, freq), REGISTERED: every tokenizer
+    * trainer and the sampling modulus read this ONE tokenize+explode+count
+    * pass (the bake-off previously paid it once per trainer). Per-trainer
+    * word predicates apply AFTER the aggregation — a per-word filter
+    * commutes with the word group-by, so counts are unchanged.
+    */
+  private def wordFreqs(documents: DataFrame, textCol: String,
+                        scope: graft.ops.CacheScope): DataFrame =
+    scope.register(documents.select(explode(tokens(col(textCol))).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("freq")))
+
+  /** Adjacent-pair counts of a segmentation table, weighted by word
+    * frequency: (lhs, rhs, pair_count). */
+  private def segPairCounts(segs: DataFrame): DataFrame =
+    segs.select(col("freq"), explode(segPairs(col("seg"))).as("p"))
+      .groupBy(col("p.lhs").as("lhs"), col("p.rhs").as("rhs"))
+      .agg(sum(col("freq")).as("pair_count"))
+
+  /** The merge loop behind [[trainBpe]] and [[trainWordPiece]], which
+    * differ only in `argmax`: the round's one-row query over the current
+    * segmentation (freq, seg), returning lhs, rhs, pair_count and then any
+    * extra columns. Returns each merge's rank and argmax row in training
+    * order; stops early once no adjacent pair remains.
+    */
+  private def trainMergeTable(documents: DataFrame, numMerges: Int,
+                              textCol: String, wordSampleK: Long,
+                              scope: graft.ops.CacheScope)
+                             (argmax: DataFrame => Array[Row]): Seq[(Int, Row)] = {
+    require(numMerges >= 1 && numMerges <= 64, "numMerges in [1, 64]")
+    var segs = maybeSampleWords(
+        wordFreqs(documents, textCol, scope)
+          .filter(length(col("w")) > 0 && !col("w").contains(BpeSep)),
+        "w", wordSampleK)
+      .select(col("freq"), initialSeg(col("w")).as("seg"))
+      .localCheckpoint(eager = true)
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, Row)]
+    // each round's merged segs checkpoint LAZILY: the next round's argmax
+    // action materializes it (one job per round, not checkpoint + argmax),
+    // and the superseded round frees only after that action has run
+    var top = argmax(segs) // ONE row: the round's argmax — the model update
+    while (top.nonEmpty) {
+      merges += ((merges.length + 1, top(0)))
+      val next = segs.withColumn("seg",
+          applyMergeToSeg(col("seg"), top(0).getString(0), top(0).getString(1)))
+        .localCheckpoint(eager = false)
+      top = if (merges.length < numMerges) argmax(next) else Array.empty
+      CacheScope.freeCheckpoint(segs)
+      segs = next
+    }
+    CacheScope.freeCheckpoint(segs)
+    merges.toSeq
+  }
+
   /** Distributed BPE merge-table training (Sennrich-style, over whitespace
     * words, character-initial segmentation, no end-of-word marker): for
     * `numMerges` rounds, count adjacent symbol pairs weighted by word
@@ -1654,84 +1707,29 @@ object TextOps {
     * is ONE row (the argmax pair — the model-update shape of every
     * iterative ML trainer here, cf. KMeans centroids), and the returned
     * merge table is model-sized (`numMerges` rows). Rounds chain map-only
-    * transformations on an eagerly localCheckpoint-ed frame (the q79
-    * PageRank pattern: lineage truncated per round, superseded round's
-    * blocks freed), so round k never re-executes rounds 1..k-1.
+    * transformations on a localCheckpoint-ed frame (the q79 PageRank
+    * pattern: lineage truncated per round, superseded round's blocks
+    * freed), so round k never re-executes rounds 1..k-1.
     *
     * Training stops early if no adjacent pair remains (corpus fully
     * merged) — with realistic corpora and bounded `numMerges` this does not
     * trigger, and the oracle replays the fixed unrolled iteration count.
     */
-  /** Corpus word-frequency table (w, freq), REGISTERED: every tokenizer
-    * trainer and the sampling modulus read this ONE tokenize+explode+count
-    * pass (the bake-off previously paid it once per trainer). Per-trainer
-    * word predicates apply AFTER the aggregation — a per-word filter
-    * commutes with the word group-by, so counts are unchanged.
-    */
-  private def wordFreqs(documents: DataFrame, textCol: String,
-                        scope: graft.ops.CacheScope): DataFrame =
-    scope.register(documents.select(explode(tokens(col(textCol))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("freq")))
-
   def trainBpe(documents: DataFrame, numMerges: Int = 6,
                textCol: String = "text",
                wordSampleK: Long = 1,
                scope: graft.ops.CacheScope = graft.ops.CacheScope.default)
       : DataFrame = {
-    require(numMerges >= 1 && numMerges <= 64, "numMerges in [1, 64]")
     val spark = documents.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint()
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-
-    def checkpointLazy(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint(eager = false)
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    var (segs, segIds) = checkpointTracked(
-      maybeSampleWords(
-        wordFreqs(documents, textCol, scope)
-          .filter(length(col("w")) > 0 && !col("w").contains(BpeSep)),
-        "w", wordSampleK)
-        .select(col("freq"), initialSeg(col("w")).as("seg")))
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    // the round's merged segs checkpoint LAZILY: the NEXT round's argmax
-    // action materializes it (one job per round, not checkpoint + argmax);
-    // the superseded round frees only after that action has run
-    var pendingFree = Set.empty[Int]
-    var k = 1
-    var exhausted = false
-    while (k <= numMerges && !exhausted) {
-      val top = segs
-        .select(col("freq"), explode(segPairs(col("seg"))).as("p"))
-        .groupBy(col("p.lhs").as("lhs"), col("p.rhs").as("rhs"))
-        .agg(sum(col("freq")).as("pair_count"))
+    trainMergeTable(documents, numMerges, textCol, wordSampleK, scope) { segs =>
+      segPairCounts(segs)
         .orderBy(col("pair_count").desc, col("lhs").asc, col("rhs").asc)
-        .limit(1).collect() // ONE row: the round's argmax — the model update
-      free(pendingFree) // segs materialized by the argmax — predecessor safe
-      pendingFree = Set.empty
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((k, l, r, l + r, cnt))
-        val (next, nextIds) = checkpointLazy(
-          segs.withColumn("seg", applyMergeToSeg(col("seg"), l, r)))
-        pendingFree = segIds
-        segs = next
-        segIds = nextIds
-        k += 1
-      }
-    }
-    free(pendingFree)
-    free(segIds)
-    merges.toSeq.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
+        .limit(1).collect()
+    }.map { case (k, t) =>
+      val (l, r) = (t.getString(0), t.getString(1))
+      (k, l, r, l + r, t.getLong(2))
+    }.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
   }
 
   /** Distributed WORDPIECE merge-table training (Schuster & Nakajima 2012;
@@ -1768,46 +1766,15 @@ object TextOps {
                      wordSampleK: Long = 1,
                      scope: graft.ops.CacheScope = graft.ops.CacheScope.default)
       : DataFrame = {
-    require(numMerges >= 1 && numMerges <= 64, "numMerges in [1, 64]")
     val spark = documents.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint()
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-
-    def checkpointLazy(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint(eager = false)
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    var (segs, segIds) = checkpointTracked(
-      maybeSampleWords(
-        wordFreqs(documents, textCol, scope)
-          .filter(length(col("w")) > 0 && !col("w").contains(BpeSep)),
-        "w", wordSampleK)
-        .select(col("freq"), initialSeg(col("w")).as("seg")))
-    val merges =
-      scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long, Long)]
-    // lazy round checkpoints + deferred frees — the trainBpe rule
-    var pendingFree = Set.empty[Int]
-    var k = 1
-    var exhausted = false
-    while (k <= numMerges && !exhausted) {
+    trainMergeTable(documents, numMerges, textCol, wordSampleK, scope) { segs =>
       val symCnt = segs
         .select(col("freq"), explode(segSymbols(col("seg"))).as("sym"))
         .groupBy(col("sym")).agg(sum(col("freq")).as("cnt"))
-      val pairCnt = segs
-        .select(col("freq"), explode(segPairs(col("seg"))).as("p"))
-        .groupBy(col("p.lhs").as("lhs"), col("p.rhs").as("rhs"))
-        .agg(sum(col("freq")).as("pair_count"))
       // both symbol-count joins are model-vocabulary-sized → broadcast;
       // inner joins are total (a pair's parts are symbols of the same segs)
-      val top = pairCnt
+      segPairCounts(segs)
         .join(broadcast(symCnt.select(col("sym").as("lhs"), col("cnt").as("lcnt"))), Seq("lhs"))
         .join(broadcast(symCnt.select(col("sym").as("rhs"), col("cnt").as("rcnt"))), Seq("rhs"))
         .withColumn("score",
@@ -1816,25 +1783,11 @@ object TextOps {
         .orderBy(col("score").desc, col("pair_count").desc,
           col("lhs").asc, col("rhs").asc)
         .limit(1).select("lhs", "rhs", "pair_count", "score")
-        .collect() // ONE row: the round's argmax — the model update
-      free(pendingFree) // segs materialized by the argmax — predecessor safe
-      pendingFree = Set.empty
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, cnt, sc2) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2), top(0).getLong(3))
-        merges += ((k, l, r, l + r, cnt, sc2))
-        val (next, nextIds) = checkpointLazy(
-          segs.withColumn("seg", applyMergeToSeg(col("seg"), l, r)))
-        pendingFree = segIds
-        segs = next
-        segIds = nextIds
-        k += 1
-      }
-    }
-    free(pendingFree)
-    free(segIds)
-    merges.toSeq.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count", "score")
+        .collect()
+    }.map { case (k, t) =>
+      val (l, r) = (t.getString(0), t.getString(1))
+      (k, l, r, l + r, t.getLong(2), t.getLong(3))
+    }.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count", "score")
   }
 
   /** The md5 word-sample modulus for the tokenizer tier's sf-scaled gate
@@ -2103,6 +2056,7 @@ object TextOps {
       model = unigramQuantize(counts)
       bc.destroy()
     }
+    CacheScope.freeCheckpoint(words)
     model.toDF("piece", "cnt", "llq_micro")
   }
 

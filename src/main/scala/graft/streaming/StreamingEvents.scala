@@ -591,7 +591,9 @@ object StreamingEvents {
     * Scale shape: per batch, routing+encoding is map-only against
     * broadcast models; the collision check joins the BROADCAST batch codes
     * against the bucketed cells scan — the corpus is read, never
-    * exchanged, and ingest work is |batch|-sized plus one cells scan.
+    * exchanged, and ingest work is |batch|-sized plus two cells scans
+    * (the collision check's, and the append's pruned id-column scan that
+    * skips ids already indexed).
     */
   def ivfPqIndexIngest(vectors: DataFrame, tablePrefix: String,
                        idCol: String = "vec_id", vecCol: String = "embedding",

@@ -76,6 +76,23 @@ class BenchReportSpec extends AnyFunSuite {
     assert(Bench.refTimes("/nonexistent/bench.json") === Map.empty)
   }
 
+  test("renderCompactJson: errors capped at 3 by name with n_errors; no file written gives a null path") {
+    val merged: Map[String, Either[String, Double]] =
+      (1 to 50).map(i => f"q$i%03d_bad" -> (Left(s"boom $i" * 20): Either[String, Double]))
+        .toMap + ("q999_ok" -> Right(1.5))
+    val line = Bench.renderCompactJson(merged, "/d", Map.empty, None)
+    assert(line.contains("\"n_errors\":50"), line)
+    assert(line.contains("\"errors\":{\"q001_bad\":") && line.contains("q003_bad") &&
+      !line.contains("q004_bad"), s"first 3 errors by name only: $line")
+    assert(line.contains("\"queries_file\":null"), line)
+    assert(line.contains("\"queries\":1") && line.contains("\"value\":1.5"))
+    assert(line.length < 1500, s"compact line too long: ${line.length}")
+    val clean = Bench.renderCompactJson(Map("q01_x" -> Right(2.0)), "/d",
+      Map.empty, Some("BENCH_last.json"))
+    assert(clean.contains("\"n_errors\":0,\"errors\":{}") &&
+      clean.contains("\"queries_file\":\"BENCH_last.json\""), clean)
+  }
+
   test("renderJson: retimed floors ride beside the sweep numbers") {
     val merged = Map[String, Either[String, Double]]("q01_x" -> Right(4.0))
     val json = Bench.renderJson(merged, "/d", Map("q01_x" -> 1.5))

@@ -684,6 +684,82 @@ class BucketingSpec extends SparkTestBase {
       spark.sql(s"DROP TABLE IF EXISTS t_ivf_app_$s"))
   }
 
+  test("IVF and IVF-PQ appends skip ids already indexed: a replayed batch changes nothing") {
+    import graft.ops.SimilarityOps
+    val emb = Tables(spark, SparkTestBase.sf001, "embeddings")
+    val corpus = emb.filter(col("vec_id") < 150)
+    val batch = emb.filter(col("vec_id") >= 150 && col("vec_id") < 220)
+    val queries = emb.filter(col("vec_id") < 5)
+    val scope = graft.ops.CacheScope()
+    SimilarityOps.writeIvfIndex(corpus, "t_ivf_rep", nCells = 4, buckets = 4)
+    SimilarityOps.ensureIvfPqIndex(corpus, "t_ivfpq_rep", corpusTag = "c150",
+      nCells = 4, buckets = 4, scope = scope)
+    try {
+      val families = Seq[(String, org.apache.spark.sql.DataFrame => Unit,
+          () => org.apache.spark.sql.DataFrame)](
+        ("t_ivf_rep", SimilarityOps.appendToIvfIndex(_, "t_ivf_rep"),
+          () => SimilarityOps.ivfTopKPersisted(queries, "t_ivf_rep", k = 5, nProbe = 4)),
+        ("t_ivfpq_rep", SimilarityOps.appendToIvfPqIndex(_, "t_ivfpq_rep"),
+          () => SimilarityOps.ivfPqTopKPersisted(queries, "t_ivfpq_rep", k = 5, nProbe = 4)))
+      for ((prefix, append, probe) <- families) {
+        def state = (spark.table(s"${prefix}_cells").count(), probe().collect().toSet)
+        append(batch)
+        val once = state
+        assert(once._1 === corpus.count() + batch.count(), prefix)
+        append(batch)
+        assert(state === once, s"$prefix: a replayed append must insert nothing")
+      }
+    } finally {
+      Seq("cells", "centroids", "meta", "deleted").foreach(s =>
+        spark.sql(s"DROP TABLE IF EXISTS t_ivf_rep_$s"))
+      Seq("cells", "centroids", "codebook", "meta", "deleted").foreach(s =>
+        spark.sql(s"DROP TABLE IF EXISTS t_ivfpq_rep_$s"))
+      scope.release()
+    }
+  }
+
+  test("index lifecycle writes free the checkpoints they materialize") {
+    import graft.ops.{DedupOps, SimilarityOps}
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val docs = Tables(spark, SparkTestBase.sf001, "documents")
+    val emb = Tables(spark, SparkTestBase.sf001, "embeddings")
+    val ivfCorpus = emb.filter(col("vec_id") < 150)
+    DedupOps.writeBandedIndex(docs.filter(col("doc_id") % 5 =!= 0), "t_lc_bd",
+      buckets = 4, corpusTag = "lc")
+    SimilarityOps.writeIvfIndex(ivfCorpus, "t_lc_iv", nCells = 4, buckets = 4)
+    try {
+      val noDiff = Seq.empty[(Long, String)].toDF("vec_id", "status")
+      // each step's own caches go with its scope; what remains is checkpoints
+      val steps: Seq[(String, graft.ops.CacheScope => Unit)] = Seq(
+        "banded append" -> (s => DedupOps.appendToBandedIndex(
+          docs.filter(col("doc_id") % 5 === 0), "t_lc_bd", scope = s)),
+        "banded delete" -> (_ => DedupOps.deleteFromBandedIndex(
+          docs.filter(col("doc_id") % 7 === 1).select(col("doc_id")), "t_lc_bd")),
+        "banded compact" -> (_ => DedupOps.compactBandedIndex("t_lc_bd")),
+        "ivf append" -> (_ => SimilarityOps.appendToIvfIndex(
+          emb.filter(col("vec_id") >= 150 && col("vec_id") < 200), "t_lc_iv")),
+        "ivf delete" -> (_ => SimilarityOps.deleteFromIvfIndex(
+          emb.filter(col("vec_id") % 7 === 1).select(col("vec_id")), "t_lc_iv")),
+        "ivf compact" -> (_ => SimilarityOps.compactIvfIndex("t_lc_iv")),
+        "ivf restamp" -> (_ => SimilarityOps.maintainIvfIndexFromDiff(
+          ivfCorpus, noDiff, "t_lc_iv", newCorpusTag = "lc2")))
+      for ((name, step) <- steps) {
+        val before = sc.getPersistentRDDs.keySet.toSet
+        val scope = graft.ops.CacheScope()
+        step(scope)
+        scope.release()
+        assert(sc.getPersistentRDDs.keySet.toSet -- before === Set.empty[Int], name)
+      }
+      assert(spark.table("t_lc_iv_meta").head().getAs[String]("corpus_tag") === "lc2")
+    } finally {
+      DedupOps.bandedIndexTables.foreach(s =>
+        spark.sql(s"DROP TABLE IF EXISTS t_lc_bd_$s"))
+      Seq("cells", "centroids", "meta", "deleted").foreach(s =>
+        spark.sql(s"DROP TABLE IF EXISTS t_lc_iv_$s"))
+    }
+  }
+
   test("persisted IVF-PQ index: exhaustive probe == pqSearch; append stays frozen-model-consistent") {
     import graft.ops.SimilarityOps
     val emb = Tables(spark, SparkTestBase.sf001, "embeddings")

@@ -4730,4 +4730,47 @@ class OpsSpec extends SparkTestBase {
       assert(shardOf(a) === shardOf(b), "pairs never straddle a shard")
     }
   }
+
+  test("round-loop operators leave no checkpoint behind beyond what backs their result") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    // a 200-vertex path outruns six propagation rounds (star phase after
+    // propagation); the triangle-rich graph converges inside propagation
+    val path = (0L until 199L).map(i => (i, i + 1)).toDF("a", "b")
+    val pathV = (0L until 200L).toDF("id")
+    val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (3L, 5L),
+      (5L, 6L)).toDF("a", "b")
+    val triV = (1L to 6L).toDF("id")
+    val docs = Seq("the cat sat on the mat", "the dog sat on the log",
+      "a cat and a dog ate the hot dog").toDF("text")
+    val cases: Seq[(String, CacheScope => DataFrame)] = Seq(
+      "cc, propagation converges" -> (_ => GraphOps.connectedComponents(tri, triV)),
+      "cc, star phase" -> (_ => GraphOps.connectedComponents(path, pathV)),
+      "cc, propRounds = 0" ->
+        (_ => GraphOps.connectedComponents(path, pathV, propRounds = 0)),
+      "pageRankInt" -> (_ => GraphOps.pageRankInt(
+        tri.select(col("a").as("src"), col("b").as("dst")), triV)),
+      "trussEdges" -> (_ => GraphOps.trussEdges(tri)),
+      "trainBpe" -> (s => TextOps.trainBpe(docs, numMerges = 4, scope = s)),
+      "trainWordPiece" -> (s => TextOps.trainWordPiece(docs, numMerges = 4, scope = s)),
+      "trainUnigramLm" -> (s => TextOps.trainUnigramLm(docs, scope = s)))
+    for ((name, run) <- cases) {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val scope = CacheScope()
+      val out = run(scope)
+      assert(out.collect().nonEmpty, name)
+      scope.release()
+      val added = sc.getPersistentRDDs.keySet.toSet -- before
+      val backing = out.queryExecution.logical.collect {
+        case r: LogicalRDD => r.rdd.id
+      }.toSet
+      assert(added.subsetOf(backing),
+        s"$name left RDDs ${added -- backing} that its result does not read")
+    }
+    // the function frees only frames that localCheckpoint returned
+    val cp = path.localCheckpoint(eager = false)
+    intercept[IllegalArgumentException](CacheScope.freeCheckpoint(cp.select(col("a"))))
+    CacheScope.freeCheckpoint(cp)
+  }
 }

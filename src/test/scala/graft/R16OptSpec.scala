@@ -121,6 +121,20 @@ class R16OptSpec extends SparkTestBase {
       assert(r.getInt(0) === r.getInt(2) && r.getInt(1) === r.getInt(3))
       assert(r.getLong(4) === r.getLong(5))
     }
+    // inputs both scans must refuse, naming the expected length or the
+    // null position, instead of reading past the vector or reading a null
+    // slot as 0
+    val shortV = Seq(Seq(Option(1), Option(2), Option(3))).toDF("qv")
+    val nullV = Seq((0 until 8).map(i => if (i == 5) None else Some(i))).toDF("qv")
+    for ((in, want) <- Seq(
+           shortV -> "pq_: vector has 3 elements, expected at least numSub·subDim = 8",
+           nullV -> "pq_: null element at index 5");
+         (e, name) <- Seq(codes -> "pq_codes", mins -> "pq_min_dists")) {
+      val err = intercept[Exception](in.select(e).collect())
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString("\n")
+      assert(msgs.contains(want.replace("pq_", name)), msgs)
+    }
     // SqDistL2 vs the zip_with/aggregate fold, self- and cross-pairs
     val a = df.select(col("id").as("ia"), col("qv").as("va"))
     val b = df.select(col("id").as("ib"), col("qv").as("vb"))
@@ -181,7 +195,7 @@ class R16OptSpec extends SparkTestBase {
       (1 to 210).map(i => f"q$i%02d_x" -> (Right(0.5): Either[String, Double]))
         .toMap + ("q999_bad" -> Left("Boom: \"quoted\"\npath"))
     val line = Bench.renderCompactJson(merged, "/d", Map("q01_x" -> 0.4),
-      "BENCH_full_r16.json")
+      Some("BENCH_full_r16.json"))
     assert(line.length < 400, s"compact line too long: ${line.length}")
     assert(line.contains("\"queries\":210"))
     assert(line.contains("\"queries_file\":\"BENCH_full_r16.json\""))
