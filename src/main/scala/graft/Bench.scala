@@ -51,27 +51,36 @@ object Bench {
     * per-query line grew past the driver's ~2000-char tail window at 210
     * queries, truncating mid-line — `parsed` came back null for BOTH r14
     * and r15 artifacts and the whole PERF comparison was lost (VERDICT
-    * r15 item 1). This line carries the totals, the error count with the
-    * first 3 errors by name (errors must stay loud, but a sweep where every
-    * query fails must not push the line past the window), and the PATH of
-    * the full artifact holding the complete per-query map, or null when no
-    * file was written; it stays well under the tail window at any query
-    * count.
+    * r15 item 1). This line carries the totals, `n_queries`, `queries`
+    * holding only the slowest successes that fit in [[compactQueriesChars]]
+    * (ties by name), the error count with the first 3 errors by name
+    * (errors must stay loud, but a sweep where every query fails must not
+    * push the line past the window), and the PATH of the full artifact
+    * holding every query, or null when no file was written.
     */
   private[graft] def renderCompactJson(
       merged: Map[String, Either[String, Double]], sfDir: String,
       retimed: Map[String, Double], fullPath: Option[String]): String = {
     val ok = merged.collect { case (k, Right(v)) => k -> v }
     val errs = merged.collect { case (k, Left(e)) => k -> e }.toSeq.sortBy(_._1)
+    val slowest = ok.toSeq.sortBy { case (k, v) => (-v, k) }
+      .map { case (k, v) => s"\"" + k + "\":" + v }
+    // "{}" plus each entry and its comma
+    val fit = slowest.scanLeft(2)(_ + _.length + 1).tail
+      .count(_ <= compactQueriesChars)
+    val qs = slowest.take(fit).mkString("{", ",", "}")
     val es = errs.take(3).map { case (k, e) =>
       s"\"" + k + "\":\"" + e.replaceAll("[\\p{Cntrl}\"\\\\]", " ") + "\""
     }.mkString("{", ",", "}")
     val total = if (ok.nonEmpty) ok.values.sum else 0.0
     val file = fullPath.fold("null")(p => "\"" + p + "\"")
     s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""queries":${ok.size},"n_errors":${errs.size},"errors":$es,""" +
+      s""""n_queries":${ok.size},"queries":$qs,""" +
+      s""""n_errors":${errs.size},"errors":$es,""" +
       s""""retimed":${retimed.size},"queries_file":$file,"sf":"$sfDir"}"""
   }
+
+  private[graft] val compactQueriesChars = 1500
 
   /** Previous artifact's per-query seconds, parsed leniently (query keys
     * are `q<digits>_<snake>`; error values are quoted strings so the

@@ -958,10 +958,10 @@ object SparkEntry {
         .orderBy(col("doc_id"), col("span_start"))
     },
 
-    // BPE merge-table TRAINING: 6 rounds of distributed pair counting over
-    // the word-frequency table with a total deterministic tiebreak (count
-    // desc, lhs asc, rhs asc); the oracle replays every round verbatim via
-    // the same guarded-delimiter literal replace
+    // BPE merge-table TRAINING: 6 rounds of pair counting over the
+    // word-frequency table, run inside one task, with a total deterministic
+    // tiebreak (count desc, lhs asc, rhs asc); the oracle replays every
+    // round verbatim via the same guarded-delimiter literal replace
     "q97_bpe_train" -> ((s, d) =>
       TextOps.trainBpe(t(s, d, "documents"), numMerges = 6)
         .orderBy(col("merge_rank"))),

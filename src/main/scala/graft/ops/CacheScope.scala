@@ -69,4 +69,13 @@ object CacheScope {
       case p => throw new IllegalArgumentException(
         s"freeCheckpoint needs a localCheckpoint frame, got a ${p.nodeName} plan")
     }
+
+  /** The local checkpoints one write takes: [[freeAll]] them in a `finally`
+    * after the write's last read, so a throwing write leaks none either. */
+  private[graft] final class Checkpoints {
+    private val taken = ArrayBuffer.empty[DataFrame]
+    def apply(df: DataFrame, eager: Boolean = true): DataFrame =
+      (taken += df.localCheckpoint(eager)).last
+    def freeAll(): Unit = taken.foreach(freeCheckpoint)
+  }
 }

@@ -518,21 +518,23 @@ object DedupOps {
     val w2 = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band_idx"), col("band_sig"), col("sub"))
     val counted = keyed.withColumn("bn2", count(lit(1)).over(w2))
-    // sets BEFORE bands (the v3 crash order: orphan sets rows are
-    // harmless, band rows without sets would break the rerank)
-    Bucketing.writeBucketed(sets.select(col("id"), col("hs"), col("sz")),
-      s"${tablePrefix}_sets", Seq("id"), buckets)
-    Bucketing.writeBucketed(
-      counted.filter(col("bn2") <= maxBucket)
-        .select(col("band_idx"), col("band_sig"), col("sub"), col("id"),
-          lit(1L).as("lver")),
-      s"${tablePrefix}_bands", Seq("band_idx", "band_sig"), buckets)
-    Bucketing.saveTable(splitCells.withColumn("fver", lit(1L)),
-      s"${tablePrefix}_split")
-    Bucketing.saveTable(
-      counted.filter(col("bn2") > maxBucket)
-        .select(col("band_idx"), col("band_sig"), col("sub")).distinct(),
-      s"${tablePrefix}_dropped")
+    try {
+      // sets BEFORE bands (the v3 crash order: orphan sets rows are
+      // harmless, band rows without sets would break the rerank)
+      Bucketing.writeBucketed(sets.select(col("id"), col("hs"), col("sz")),
+        s"${tablePrefix}_sets", Seq("id"), buckets)
+      Bucketing.writeBucketed(
+        counted.filter(col("bn2") <= maxBucket)
+          .select(col("band_idx"), col("band_sig"), col("sub"), col("id"),
+            lit(1L).as("lver")),
+        s"${tablePrefix}_bands", Seq("band_idx", "band_sig"), buckets)
+      Bucketing.saveTable(splitCells.withColumn("fver", lit(1L)),
+        s"${tablePrefix}_split")
+      Bucketing.saveTable(
+        counted.filter(col("bn2") > maxBucket)
+          .select(col("band_idx"), col("band_sig"), col("sub")).distinct(),
+        s"${tablePrefix}_dropped")
+    } finally CacheScope.freeCheckpoint(splitCells)
     import spark.implicits._
     Bucketing.saveTable(Seq.empty[Long].toDF("id"), s"${tablePrefix}_deleted")
     Bucketing.saveTable(
@@ -863,86 +865,84 @@ object DedupOps {
       (meta.getAs[Int]("k"), meta.getAs[Int]("bands"),
         meta.getAs[Int]("max_bucket"), meta.getAs[Long]("split_occupancy"),
         meta.getAs[Long]("layout_ver"))
-    val splitT = Bucketing.freshTable(spark, s"${tablePrefix}_split")
-      .localCheckpoint(true)
-    // a crashed refreeze's cells: frozen past the committed layout —
-    // their re-key may or may not have landed; this pass completes it
-    val pending = splitT.filter(col("fver") > l)
-      .select(col("band_idx"), col("band_sig"), col("fver"))
-    // the audit's outgrown set: un-frozen cells over the threshold, from
-    // the LIVE view (computed before any write below)
-    val fver = math.max(l + 1L,
-      pending.agg(coalesce(max(col("fver")), lit(0L))).head().getLong(0))
-    val outgrown = liveSplitBands(spark, tablePrefix)
-      .join(broadcast(splitT.select(col("band_idx"), col("band_sig"))),
-        Seq("band_idx", "band_sig"), "left_anti")
-      .groupBy(col("band_idx"), col("band_sig"))
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") > so)
-      .select(col("band_idx"), col("band_sig"), lit(fver).as("fver"))
-      .localCheckpoint(true)
-    val targets = outgrown.unionByName(pending).localCheckpoint(true)
-    if (targets.isEmpty) return
-    // 1. FREEZE: the new cells join the layout (skew-tail-sized rewrite)
-    if (!outgrown.isEmpty)
-      Bucketing.saveTable(splitT.unionByName(outgrown),
-        s"${tablePrefix}_split")
-    // 2. RE-KEY the target cells' pre-freeze rows — minus cells whose
-    // re-keyed rows already landed (a crash between insert and commit):
-    // the re-key is deterministic, so presence at lver >= fver == done
-    val bandsRaw = Bucketing.freshTable(spark, s"${tablePrefix}_bands")
-    val done = bandsRaw
-      .join(broadcast(targets), Seq("band_idx", "band_sig"))
-      .filter(col("lver") >= col("fver"))
-      .select(col("band_idx"), col("band_sig")).distinct()
-    val todo = targets.join(broadcast(done), Seq("band_idx", "band_sig"),
-        "left_anti")
-      .localCheckpoint(true)
-    if (!todo.isEmpty) {
-      val members = bandsRaw
-        .join(broadcast(todo), Seq("band_idx", "band_sig"))
-        .filter(col("lver") < col("fver"))
-        .select(col("band_idx"), col("band_sig"), col("id"), col("fver"))
-      import org.apache.spark.sql.graft.bridge
-      val extArr = bridge.column(graft.functions.MinHashBands(
-        bridge.expression(col("hs")), k + bands, k + bands))
-      val exts = members.select(col("id")).distinct()
-        .join(Bucketing.freshTable(spark, s"${tablePrefix}_sets")
-            .select(col("id"), col("hs")),
-          Seq("id"))
-        .select(col("id"), extArr.as("exts"))
-      val rekeyed = members.join(exts, Seq("id"))
-        .select(col("band_idx"), col("band_sig"),
-          element_at(col("exts"), col("band_idx") + lit(k + 1)).as("sub"),
-          col("id"), col("fver"))
-      val w2 = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("band_idx"), col("band_sig"), col("sub"))
-      val counted = rekeyed.withColumn("bn2", count(lit(1)).over(w2))
-      val dropNew = counted.filter(col("bn2") > maxBucket)
-        .select(col("band_idx"), col("band_sig"), col("sub")).distinct()
-        .localCheckpoint(true)
-      val keepNew = counted.filter(col("bn2") <= maxBucket)
-        .select(col("band_idx"), col("band_sig"), col("sub"), col("id"),
-          col("fver").as("lver"))
-        .localCheckpoint(true)
-      if (!dropNew.isEmpty)
-        Bucketing.saveTable(
-          Bucketing.freshTable(spark, s"${tablePrefix}_dropped")
-            .unionByName(dropNew).distinct().localCheckpoint(true),
-          s"${tablePrefix}_dropped")
-      keepNew.write.insertInto(s"${tablePrefix}_bands")
-    }
-    // 3. COMMIT: the layout version moves; tag and every build parameter
-    // survive (a refreeze never changes corpus membership, so ensure's
-    // up-to-date check must keep passing)
-    import spark.implicits._
-    Bucketing.saveTable(
-      Seq((k, bands, meta.getAs[Int]("shingle_k"), maxBucket,
-          meta.getAs[Int]("buckets"), meta.getAs[String]("corpus_tag"),
-          so, fver, bandedSplitIndexFormatVersion))
-        .toDF("k", "bands", "shingle_k", "max_bucket", "buckets",
-          "corpus_tag", "split_occupancy", "layout_ver", "fmt"),
-      s"${tablePrefix}_meta")
+    val cps = new CacheScope.Checkpoints // read only by this pass's writes
+    try {
+      val splitT = cps(Bucketing.freshTable(spark, s"${tablePrefix}_split"))
+      // a crashed refreeze's cells: frozen past the committed layout —
+      // their re-key may or may not have landed; this pass completes it
+      val pending = splitT.filter(col("fver") > l)
+        .select(col("band_idx"), col("band_sig"), col("fver"))
+      // the audit's outgrown set: un-frozen cells over the threshold, from
+      // the LIVE view (computed before any write below)
+      val fver = math.max(l + 1L,
+        pending.agg(coalesce(max(col("fver")), lit(0L))).head().getLong(0))
+      val outgrown = cps(liveSplitBands(spark, tablePrefix)
+        .join(broadcast(splitT.select(col("band_idx"), col("band_sig"))),
+          Seq("band_idx", "band_sig"), "left_anti")
+        .groupBy(col("band_idx"), col("band_sig"))
+        .agg(count(lit(1)).as("occ"))
+        .filter(col("occ") > so)
+        .select(col("band_idx"), col("band_sig"), lit(fver).as("fver")))
+      val targets = cps(outgrown.unionByName(pending))
+      if (targets.isEmpty) return
+      // 1. FREEZE: the new cells join the layout (skew-tail-sized rewrite)
+      if (!outgrown.isEmpty)
+        Bucketing.saveTable(splitT.unionByName(outgrown),
+          s"${tablePrefix}_split")
+      // 2. RE-KEY the target cells' pre-freeze rows — minus cells whose
+      // re-keyed rows already landed (a crash between insert and commit):
+      // the re-key is deterministic, so presence at lver >= fver == done
+      val bandsRaw = Bucketing.freshTable(spark, s"${tablePrefix}_bands")
+      val done = bandsRaw
+        .join(broadcast(targets), Seq("band_idx", "band_sig"))
+        .filter(col("lver") >= col("fver"))
+        .select(col("band_idx"), col("band_sig")).distinct()
+      val todo = cps(targets.join(broadcast(done), Seq("band_idx", "band_sig"),
+          "left_anti"))
+      if (!todo.isEmpty) {
+        val members = bandsRaw
+          .join(broadcast(todo), Seq("band_idx", "band_sig"))
+          .filter(col("lver") < col("fver"))
+          .select(col("band_idx"), col("band_sig"), col("id"), col("fver"))
+        import org.apache.spark.sql.graft.bridge
+        val extArr = bridge.column(graft.functions.MinHashBands(
+          bridge.expression(col("hs")), k + bands, k + bands))
+        val exts = members.select(col("id")).distinct()
+          .join(Bucketing.freshTable(spark, s"${tablePrefix}_sets")
+              .select(col("id"), col("hs")),
+            Seq("id"))
+          .select(col("id"), extArr.as("exts"))
+        val rekeyed = members.join(exts, Seq("id"))
+          .select(col("band_idx"), col("band_sig"),
+            element_at(col("exts"), col("band_idx") + lit(k + 1)).as("sub"),
+            col("id"), col("fver"))
+        val w2 = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("band_idx"), col("band_sig"), col("sub"))
+        val counted = rekeyed.withColumn("bn2", count(lit(1)).over(w2))
+        val dropNew = cps(counted.filter(col("bn2") > maxBucket)
+          .select(col("band_idx"), col("band_sig"), col("sub")).distinct())
+        val keepNew = cps(counted.filter(col("bn2") <= maxBucket)
+          .select(col("band_idx"), col("band_sig"), col("sub"), col("id"),
+            col("fver").as("lver")))
+        if (!dropNew.isEmpty)
+          Bucketing.saveTable(
+            cps(Bucketing.freshTable(spark, s"${tablePrefix}_dropped")
+              .unionByName(dropNew).distinct()),
+            s"${tablePrefix}_dropped")
+        keepNew.write.insertInto(s"${tablePrefix}_bands")
+      }
+      // 3. COMMIT: the layout version moves; tag and every build parameter
+      // survive (a refreeze never changes corpus membership, so ensure's
+      // up-to-date check must keep passing)
+      import spark.implicits._
+      Bucketing.saveTable(
+        Seq((k, bands, meta.getAs[Int]("shingle_k"), maxBucket,
+            meta.getAs[Int]("buckets"), meta.getAs[String]("corpus_tag"),
+            so, fver, bandedSplitIndexFormatVersion))
+          .toDF("k", "bands", "shingle_k", "max_bucket", "buckets",
+            "corpus_tag", "split_occupancy", "layout_ver", "fmt"),
+        s"${tablePrefix}_meta")
+    } finally cps.freeAll()
   }
 
   /** Theoretical LSH collision probability 1-(1-J^r)^b at the threshold,

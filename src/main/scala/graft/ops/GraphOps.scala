@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -460,65 +461,54 @@ object GraphOps {
     * The `div`-truncation dust (< 1 unit per edge per round) is the price
     * of determinism; with scale = 10^12 it is ~1e-12 of the mass.
     *
-    * Scale shape per round: one (src-keyed) edge⋈rank join + one dst-keyed
-    * sum — the same two shuffles any distributed PageRank pays. A FIXED
-    * iteration count (no convergence action) keeps the plan a pure unrolled
-    * dataflow; lineage is truncated per round like [[connectedComponents]].
-    * Dangling mass is dropped (standard simplification), deterministically.
+    * Scale shape: one shuffle builds the persisted, hash-partitioned
+    * adjacency (each vertex with its out-neighbour array, duplicates kept;
+    * `n` is its count). All rounds then run as ONE job with one shuffle
+    * per round: the shares `reduceByKey` into the adjacency's partitioner,
+    * so the left join that takes `base + inflow` is narrow. No action runs
+    * between rounds and the driver holds nothing vertex-sized. The final
+    * ranks are one eager local checkpoint backing the returned frame
+    * (freed by the ContextCleaner once the caller drops it). Dangling mass
+    * is dropped (standard simplification), deterministically.
     *
     * Edges are directed (src, dst); pass both directions for an undirected
-    * graph. Every endpoint must appear in `vertices`.
+    * graph. Vertex ids are distinct and non-null, and every endpoint must
+    * appear in `vertices`.
     */
   def pageRankInt(edges: DataFrame, vertices: DataFrame,
                   idCol: String = "id", srcCol: String = "src",
                   dstCol: String = "dst", iterations: Int = 3,
                   scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1 && iterations <= 50, "iterations in [1, 50]")
-    // vertices AND edges may be expensive subtrees (joins/distincts) that
-    // would otherwise re-execute once per round — checkpointed up front.
-    // All setup checkpoints are LAZY: v materializes in the n = count()
-    // job, the degree-denormalized edge list (and e under it) in round
-    // 1's eager round checkpoint — two setup jobs instead of five. Safe
-    // by the freeCheckpoint rule: every frame is materialized by an
-    // action (count / round 1) before anything reading it is freed, and
-    // the frees all sit after the round loop
-    val v = vertices.select(col(idCol).cast("long").as("x"))
-      .localCheckpoint(eager = false)
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .localCheckpoint(eager = false)
-    // out-degree DENORMALIZED onto the edge list ONCE: each round then
-    // pays a single src-keyed join (ranks) instead of two — the per-round
-    // arithmetic is unchanged, so ranks are bit-identical
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(eager = false)
-    val ed = e.join(deg, Seq("src")).localCheckpoint(eager = false)
-    val n = v.count()
+    val spark = vertices.sparkSession
+    import spark.implicits._
+    val vs = vertices.select(col(idCol).cast("long")).rdd
+      .map(r => (r.getLong(0), ()))
+    val es = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
+      .rdd.map(r => (r.getLong(0), r.getLong(1)))
+    val part = new HashPartitioner(math.max(
+      spark.sparkContext.defaultParallelism, es.getNumPartitions))
+    // an edge whose src is not a vertex never holds rank: dropped here
+    val adj = vs.cogroup(es, part)
+      .filter { case (_, (isV, _)) => isV.nonEmpty }
+      .mapValues { case (_, dsts) => dsts.toArray }
+      .cache()
+    val n = adj.count()
     val init = scale / math.max(n, 1L)
     val base = 15L * init / 100L
-    var ranks = v.select(col("x"), lit(init).as("rank"))
-      .localCheckpoint(eager = false)
+    var ranked = adj.mapValues(d => (d, init))
     (0 until iterations).foreach { _ =>
-      val contribs = ed
-        .join(ranks.select(col("x").as("src"), col("rank")), Seq("src"))
-        .select(col("dst").as("x"),
-          expr("(85 * (rank div deg)) div 100").as("c"))
-        .groupBy(col("x")).agg(sum(col("c")).as("inflow"))
-      // an EAGER checkpoint — next is fully materialized when it returns,
-      // so the superseded round frees safely
-      val next = v.join(contribs, Seq("x"), "left")
-        .select(col("x"),
-          (lit(base) + coalesce(col("inflow"), lit(0L))).as("rank"))
-        .localCheckpoint(eager = true)
-      freeCheckpoint(ranks)
-      ranks = next
+      val inflow = ranked.flatMap { case (_, (dsts, rank)) =>
+        val c = if (dsts.isEmpty) 0L else 85L * (rank / dsts.length) / 100L
+        dsts.iterator.map(d => (d, c))
+      }.reduceByKey(part, _ + _)
+      ranked = adj.leftOuterJoin(inflow, part)
+        .mapValues { case (dsts, in) => (dsts, base + in.getOrElse(0L)) }
     }
-    Seq(ed, deg, e, v).foreach(freeCheckpoint)
-    // like connectedComponents: the FINAL round's checkpoint backs the
-    // returned frame and is freed by the ContextCleaner once the caller
-    // drops the frame — it cannot be freed here without invalidating the
-    // result (localCheckpoint truncates lineage, so there is no recompute)
-    ranks.select(col("x").as(idCol), col("rank"))
+    val out = ranked.map { case (x, (_, rank)) => (x, rank) }
+      .toDF(idCol, "rank").localCheckpoint(eager = true)
+    adj.unpersist(blocking = false)
+    out
   }
 
   /** Normalize a pair list to a simple undirected edge set: (a < b),

@@ -1911,115 +1911,114 @@ object SimilarityOps {
     val cells = graft.sources.Bucketing.freshTableGated(spark,
       s"${tablePrefix}_cells", token)
     import graft.functions.VectorExpressions.dotF
-    // replayed ids drop structurally; consumed by banding AND verify AND
-    // the inserts — materialize the (batch-sized) frame once. A
-    // TOMBSTONED id cannot re-enter before a compact (the banded-index
-    // X85 rule: the tombstone suppresses its stale committed rows, so a
-    // re-insert under the same id would vanish with them on read and
-    // resurface BOTH after a naive un-tombstone)
-    // LAZY: the count() right below materializes it — one job, not
-    // checkpoint-job + count-job (the epoch's job-count diet: every
-    // intermediate here is materialized by a later action BEFORE the
-    // inserts mutate the tables it reads)
-    val fresh = batch
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .dropDuplicates("id")
-      .join(vecs.select(col("id")), Seq("id"), "left_anti")
-      .join(broadcast(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")),
-        Seq("id"), "left_anti")
-      .withColumn("nrm", sqrt(dotF(col("vec"), col("vec"))))
-      .localCheckpoint(eager = false)
-    val nFresh = fresh.count()
-    if (nFresh == 0) return
-    val nNext = m.getAs[Long]("n_vecs") + nFresh
-    val drift = autoPlanes(nNext, targetOcc) - planes
-    if (drift > maxPlaneDrift) throw new IllegalStateException(
-      s"kNN index '$tablePrefix' outgrew its frozen SRP operating point: " +
-        s"autoPlanes($nNext) = ${planes + drift} vs frozen planes = " +
-        s"$planes (drift $drift > $maxPlaneDrift). Candidate volume at " +
-        "the frozen point densifies ~2x per crossed boundary — re-run " +
-        "ensureKnnIndex under a new corpusTag to re-size, or raise " +
-        "maxPlaneDrift to accept the densification.")
-    val epoch = epochIdOf(fresh)
-    // band the batch at the FROZEN layout: stamped planes AND the
-    // ensure-frozen split cells, so a batch member landing in a hot cell
-    // probes at the same sub key the corpus rows were written under
-    val bandsNew = bandSplitFrozen(fresh.select(col("id"), col("vec")),
-      bandStrided(fresh.select(col("id"), col("vec")), planes, nTables,
-        dim),
-      planes, nTables, dim, cells).localCheckpoint(eager = false)
-    // candidates: batch bands probe (stored ∪ batch) bands — never
-    // corpus × corpus; orientation dedupes the (new, new) double hit
-    val cand = bandsNew
-      .select(col("tbl"), col("bucket"), col("sub"), col("id").as("x"))
-      .join(bands.select(col("id"), col("tbl"), col("bucket"), col("sub"))
-          .unionByName(bandsNew)
-          .select(col("tbl"), col("bucket"), col("sub"), col("id").as("y")),
-        Seq("tbl", "bucket", "sub"))
-      .filter(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"),
-        greatest(col("x"), col("y")).as("b"))
-      .distinct()
-    val allVecs = vecs.select(col("id"), col("vec"), col("nrm"))
-      .unionByName(fresh)
-    val va = allVecs.select(col("id").as("a"), col("vec").as("va"),
-      col("nrm").as("na"))
-    val vb = allVecs.select(col("id").as("b"), col("vec").as("vb"),
-      col("nrm").as("nb"))
-    val newPairs = cand.join(va, Seq("a")).join(vb, Seq("b"))
-      .select(col("a"), col("b"),
-        (dotF(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
-      .filter(col("cos") >= lit(minCos))
-      .localCheckpoint(eager = false)
-    val dirsNew = newPairs
-      .select(col("a").as("v"), col("b").as("nb"), col("cos"))
-      .unionByName(newPairs
-        .select(col("b").as("v"), col("a").as("nb"), col("cos")))
-    // bandsNew / newPairs / touched are all LAZY: keptAppend's eager
-    // checkpoint below is the epoch's ONE materialization job for the
-    // whole chain (it reads kept→touched→dirsNew→newPairs→cand→bandsNew),
-    // and it runs before the first insertInto mutates any table they read
-    val touched = dirsNew.select(col("v")).distinct()
-      .localCheckpoint(eager = false)
-    // re-rank touched vertices over (old kept ∪ new candidates); a kept
-    // (v, nb) row can never duplicate a new candidate — nb is new to
-    // this epoch in every new pair. Touched vertices always re-rank
-    // non-empty (each has at least its new direction row), so no
-    // empty-list markers arise here. Materialized BEFORE any insert: the
-    // plan reads the tables the inserts mutate. The kept read is SCOPED
-    // to the touched vertices (batch-candidate-sized), so the version
-    // window never sorts the O(n·kTop) state table inside an epoch
-    val kept = committedKept(spark, tablePrefix, v, token, Some(touched))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("v")).orderBy(col("cos").desc, col("nb"))
-    val next = v + 1L
-    val keptAppend = kept
-      .unionByName(dirsNew)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= kTop)
-      .select(col("v"), col("nb"), col("cos"))
-      .withColumn("kver", lit(next))
-      .localCheckpoint()
-    // TOUCHED-SIZED appends everywhere: insertInto re-buckets just the
-    // new rows (order is positional — match each table's layout); the
-    // kept delta replaces the round-13 full O(n·kTop) snapshot rewrite.
-    // Orphans from a crash anywhere below stay invisible until the meta
-    // append commits this epoch (bands/vecs by epoch id, kept by kver).
-    import graft.sources.Bucketing
-    import spark.implicits._
-    bandsNew.withColumn("epoch", lit(epoch))
-      .select(col("id"), col("tbl"), col("bucket"), col("sub"), col("epoch"))
-      .write.insertInto(s"${tablePrefix}_bands")
-    fresh.withColumn("epoch", lit(epoch))
-      .select(col("id"), col("vec"), col("nrm"), col("epoch"))
-      .write.insertInto(s"${tablePrefix}_vecs")
-    keptAppend.select(col("v"), col("nb"), col("cos"), col("kver"))
-      .write.insertInto(s"${tablePrefix}_kept")
-    Seq((knnIndexFormatVersion, m.getAs[String]("corpus_tag"), planes,
-      kTop, minCos, nTables, dim, m.getAs[Int]("buckets"), next, epoch,
-      nNext, targetOcc, splitOcc))
-      .toDF(knnMetaCols: _*)
-      .write.mode("append").saveAsTable(s"${tablePrefix}_meta")
+    val cps = new CacheScope.Checkpoints // read only by this epoch's inserts
+    try {
+      // replayed ids drop structurally; consumed by banding AND verify AND
+      // the inserts — materialize the (batch-sized) frame once. A
+      // TOMBSTONED id cannot re-enter before a compact (the banded-index
+      // X85 rule: the tombstone suppresses its stale committed rows, so a
+      // re-insert under the same id would vanish with them on read and
+      // resurface BOTH after a naive un-tombstone)
+      // LAZY: the count() right below materializes it — one job, not
+      // checkpoint-job + count-job (the epoch's job-count diet: every
+      // intermediate here is materialized by a later action BEFORE the
+      // inserts mutate the tables it reads)
+      val fresh = cps(batch
+        .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+        .dropDuplicates("id")
+        .join(vecs.select(col("id")), Seq("id"), "left_anti")
+        .join(broadcast(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")),
+          Seq("id"), "left_anti")
+        .withColumn("nrm", sqrt(dotF(col("vec"), col("vec")))), eager = false)
+      val nFresh = fresh.count()
+      if (nFresh == 0) return
+      val nNext = m.getAs[Long]("n_vecs") + nFresh
+      val drift = autoPlanes(nNext, targetOcc) - planes
+      if (drift > maxPlaneDrift) throw new IllegalStateException(
+        s"kNN index '$tablePrefix' outgrew its frozen SRP operating point: " +
+          s"autoPlanes($nNext) = ${planes + drift} vs frozen planes = " +
+          s"$planes (drift $drift > $maxPlaneDrift). Candidate volume at " +
+          "the frozen point densifies ~2x per crossed boundary — re-run " +
+          "ensureKnnIndex under a new corpusTag to re-size, or raise " +
+          "maxPlaneDrift to accept the densification.")
+      val epoch = epochIdOf(fresh)
+      // band the batch at the FROZEN layout: stamped planes AND the
+      // ensure-frozen split cells, so a batch member landing in a hot cell
+      // probes at the same sub key the corpus rows were written under
+      val bandsNew = cps(bandSplitFrozen(fresh.select(col("id"), col("vec")),
+        bandStrided(fresh.select(col("id"), col("vec")), planes, nTables,
+          dim),
+        planes, nTables, dim, cells), eager = false)
+      // candidates: batch bands probe (stored ∪ batch) bands — never
+      // corpus × corpus; orientation dedupes the (new, new) double hit
+      val cand = bandsNew
+        .select(col("tbl"), col("bucket"), col("sub"), col("id").as("x"))
+        .join(bands.select(col("id"), col("tbl"), col("bucket"), col("sub"))
+            .unionByName(bandsNew)
+            .select(col("tbl"), col("bucket"), col("sub"), col("id").as("y")),
+          Seq("tbl", "bucket", "sub"))
+        .filter(col("x") =!= col("y"))
+        .select(least(col("x"), col("y")).as("a"),
+          greatest(col("x"), col("y")).as("b"))
+        .distinct()
+      val allVecs = vecs.select(col("id"), col("vec"), col("nrm"))
+        .unionByName(fresh)
+      val va = allVecs.select(col("id").as("a"), col("vec").as("va"),
+        col("nrm").as("na"))
+      val vb = allVecs.select(col("id").as("b"), col("vec").as("vb"),
+        col("nrm").as("nb"))
+      val newPairs = cps(cand.join(va, Seq("a")).join(vb, Seq("b"))
+        .select(col("a"), col("b"),
+          (dotF(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
+        .filter(col("cos") >= lit(minCos)), eager = false)
+      val dirsNew = newPairs
+        .select(col("a").as("v"), col("b").as("nb"), col("cos"))
+        .unionByName(newPairs
+          .select(col("b").as("v"), col("a").as("nb"), col("cos")))
+      // bandsNew / newPairs / touched are all LAZY: keptAppend's eager
+      // checkpoint below is the epoch's ONE materialization job for the
+      // whole chain (it reads kept→touched→dirsNew→newPairs→cand→bandsNew),
+      // and it runs before the first insertInto mutates any table they read
+      val touched = cps(dirsNew.select(col("v")).distinct(), eager = false)
+      // re-rank touched vertices over (old kept ∪ new candidates); a kept
+      // (v, nb) row can never duplicate a new candidate — nb is new to
+      // this epoch in every new pair. Touched vertices always re-rank
+      // non-empty (each has at least its new direction row), so no
+      // empty-list markers arise here. Materialized BEFORE any insert: the
+      // plan reads the tables the inserts mutate. The kept read is SCOPED
+      // to the touched vertices (batch-candidate-sized), so the version
+      // window never sorts the O(n·kTop) state table inside an epoch
+      val kept = committedKept(spark, tablePrefix, v, token, Some(touched))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("v")).orderBy(col("cos").desc, col("nb"))
+      val next = v + 1L
+      val keptAppend = cps(kept
+        .unionByName(dirsNew)
+        .withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= kTop)
+        .select(col("v"), col("nb"), col("cos"))
+        .withColumn("kver", lit(next)))
+      // TOUCHED-SIZED appends everywhere: insertInto re-buckets just the
+      // new rows (order is positional — match each table's layout); the
+      // kept delta replaces the round-13 full O(n·kTop) snapshot rewrite.
+      // Orphans from a crash anywhere below stay invisible until the meta
+      // append commits this epoch (bands/vecs by epoch id, kept by kver).
+      import graft.sources.Bucketing
+      import spark.implicits._
+      bandsNew.withColumn("epoch", lit(epoch))
+        .select(col("id"), col("tbl"), col("bucket"), col("sub"), col("epoch"))
+        .write.insertInto(s"${tablePrefix}_bands")
+      fresh.withColumn("epoch", lit(epoch))
+        .select(col("id"), col("vec"), col("nrm"), col("epoch"))
+        .write.insertInto(s"${tablePrefix}_vecs")
+      keptAppend.select(col("v"), col("nb"), col("cos"), col("kver"))
+        .write.insertInto(s"${tablePrefix}_kept")
+      Seq((knnIndexFormatVersion, m.getAs[String]("corpus_tag"), planes,
+        kTop, minCos, nTables, dim, m.getAs[Int]("buckets"), next, epoch,
+        nNext, targetOcc, splitOcc))
+        .toDF(knnMetaCols: _*)
+        .write.mode("append").saveAsTable(s"${tablePrefix}_meta")
+    } finally cps.freeAll()
   }
 
   /** The served graph: mutual edges ([[mutualEdges]]) of the committed
@@ -3014,8 +3013,8 @@ object SimilarityOps {
     * broadcast codebook (numSub·numCentroids literals — model params), and
     * the centroid update is ONE explode+groupBy whose partial aggregation
     * collapses to ≤ numSub·numCentroids·subDim rows per task before a
-    * model-sized collect (the per-round driver transfer of every iterative
-    * trainer here, cf. trainBpe's argmax row). Returns (scale, codebook
+    * model-sized collect (a per-round driver transfer the size of the
+    * model, like KMeans centroids). Returns (scale, codebook
     * [sub][cell][dim]).
     */
   def pqTrainCodebook(

@@ -1,7 +1,10 @@
 package graft.ops
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, stats, stopword/quality scoring, heuristic language ID,
@@ -1626,17 +1629,6 @@ object TextOps {
   private def applyMergeToSeg(seg: Column, l: String, r: String): Column =
     replace(seg, lit(BpeSep + l + BpeSep2 + r + BpeSep), lit(BpeSep + l + r + BpeSep))
 
-  /** Adjacent symbol pairs of a segmentation, as structs (lhs, rhs); empty
-    * for single-symbol words (guarded — `sequence` would count backwards).
-    */
-  private def segPairs(seg: Column): Column = {
-    val syms = segSymbols(seg)
-    when(size(syms) >= 2,
-      transform(sequence(lit(1), size(syms) - 1), i =>
-        struct(element_at(syms, i).as("lhs"), element_at(syms, i + 1).as("rhs"))))
-      .otherwise(array().cast("array<struct<lhs:string,rhs:string>>"))
-  }
-
   /** Corpus word-frequency table (w, freq), REGISTERED: every tokenizer
     * trainer and the sampling modulus read this ONE tokenize+explode+count
     * pass (the bake-off previously paid it once per trainer). Per-trainer
@@ -1648,49 +1640,86 @@ object TextOps {
     scope.register(documents.select(explode(tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq")))
 
-  /** Adjacent-pair counts of a segmentation table, weighted by word
-    * frequency: (lhs, rhs, pair_count). */
-  private def segPairCounts(segs: DataFrame): DataFrame =
-    segs.select(col("freq"), explode(segPairs(col("seg"))).as("p"))
-      .groupBy(col("p.lhs").as("lhs"), col("p.rhs").as("rhs"))
-      .agg(sum(col("freq")).as("pair_count"))
-
-  /** The merge loop behind [[trainBpe]] and [[trainWordPiece]], which
-    * differ only in `argmax`: the round's one-row query over the current
-    * segmentation (freq, seg), returning lhs, rhs, pair_count and then any
-    * extra columns. Returns each merge's rank and argmax row in training
-    * order; stops early once no adjacent pair remains.
+  /** The merge loop behind [[trainBpe]] and [[trainWordPiece]]: Catalyst
+    * computes each sampled word's initial symbols, and one shuffle hands
+    * that table to ONE task that runs every round ([[mergeRounds]]).
+    * `repartition(1)`, not `coalesce(1)`, so the word count's reduce side
+    * stays parallel. Returns (merge_rank, lhs, rhs, merged, pair_count,
+    * score) in training order; BPE's score is its pair_count.
     */
   private def trainMergeTable(documents: DataFrame, numMerges: Int,
                               textCol: String, wordSampleK: Long,
-                              scope: graft.ops.CacheScope)
-                             (argmax: DataFrame => Array[Row]): Seq[(Int, Row)] = {
+                              scope: graft.ops.CacheScope,
+                              likelihood: Boolean): DataFrame = {
     require(numMerges >= 1 && numMerges <= 64, "numMerges in [1, 64]")
-    var segs = maybeSampleWords(
+    val spark = documents.sparkSession
+    import spark.implicits._
+    maybeSampleWords(
         wordFreqs(documents, textCol, scope)
           .filter(length(col("w")) > 0 && !col("w").contains(BpeSep)),
         "w", wordSampleK)
-      .select(col("freq"), initialSeg(col("w")).as("seg"))
-      .localCheckpoint(eager = true)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, Row)]
-    // each round's merged segs checkpoint LAZILY: the next round's argmax
-    // action materializes it (one job per round, not checkpoint + argmax),
-    // and the superseded round frees only after that action has run
-    var top = argmax(segs) // ONE row: the round's argmax — the model update
-    while (top.nonEmpty) {
-      merges += ((merges.length + 1, top(0)))
-      val next = segs.withColumn("seg",
-          applyMergeToSeg(col("seg"), top(0).getString(0), top(0).getString(1)))
-        .localCheckpoint(eager = false)
-      top = if (merges.length < numMerges) argmax(next) else Array.empty
-      CacheScope.freeCheckpoint(segs)
-      segs = next
-    }
-    CacheScope.freeCheckpoint(segs)
-    merges.toSeq
+      .select(col("freq"), segSymbols(initialSeg(col("w"))))
+      .repartition(1)
+      .rdd.mapPartitions(mergeRounds(_, numMerges, likelihood))
+      .collect().toSeq
+      .toDF("merge_rank", "lhs", "rhs", "merged", "pair_count", "score")
   }
 
-  /** Distributed BPE merge-table training (Sennrich-style, over whitespace
+  /** Up to `numMerges` rounds over (freq, initial symbols) rows. Each round
+    * recounts the frequency-weighted adjacent pairs and symbols, takes the
+    * argmax under (score desc, pair_count desc, lhs asc, rhs asc), strings
+    * in Spark's UTF-8 byte order, and merges it everywhere with
+    * [[mergeFold]]. Symbols are interned by string, as a delimited
+    * segmentation keys them. Stops early once no adjacent pair remains.
+    */
+  private def mergeRounds(rows: Iterator[Row], numMerges: Int,
+                          likelihood: Boolean)
+      : Iterator[(Int, String, String, String, Long, Long)] = {
+    val ids = mutable.HashMap.empty[UTF8String, Int]
+    val syms = mutable.ArrayBuffer.empty[UTF8String]
+    def intern(s: UTF8String): Int =
+      ids.getOrElseUpdate(s, { syms += s; syms.length - 1 })
+    val (freqs, words) = rows.map(r => (r.getLong(0), r.getSeq[String](1)
+      .map(s => intern(UTF8String.fromString(s))).toArray)).toArray.unzip
+    implicit val byteOrder: Ordering[UTF8String] = _.binaryCompare(_)
+    Iterator.from(1).take(numMerges).map { rank =>
+      val symCnt = new Array[Long](syms.length)
+      val pairCnt = mutable.LongMap.empty[Long] // (lhs << 32 | rhs) -> count
+      for (i <- words.indices; w = words(i); j <- w.indices) {
+        symCnt(w(j)) += freqs(i)
+        if (j > 0) {
+          val p = (w(j - 1).toLong << 32) | w(j)
+          pairCnt(p) = pairCnt.getOrElse(p, 0L) + freqs(i)
+        }
+      }
+      def score(p: Long, pc: Long): Long = if (!likelihood) pc else
+        (BigInt(pc) * 1000000000000L /
+          (BigInt(symCnt((p >>> 32).toInt)) * symCnt(p.toInt))).toLong
+      pairCnt.minByOption { case (p, pc) =>
+        (-score(p, pc), -pc, syms((p >>> 32).toInt), syms(p.toInt))
+      }.map { case (p, pc) =>
+        val (l, r) = ((p >>> 32).toInt, p.toInt)
+        val m = intern(UTF8String.concat(syms(l), syms(r)))
+        for (i <- words.indices) words(i) = mergeFold(words(i), l, r, m)
+        (rank, syms(l).toString, syms(r).toString, syms(m).toString, pc,
+          score(p, pc))
+      }
+    }.takeWhile(_.nonEmpty).flatten
+  }
+
+  /** Merges every leftmost non-overlapping (l, r) of a word into m, the
+    * semantics of [[applyMergeToSeg]]'s replace: `[a,a,a,a]` + (a,a)
+    * gives `[aa,aa]`, never `[aa,a,a]`. */
+  private def mergeFold(w: Array[Int], l: Int, r: Int, m: Int): Array[Int] = {
+    val out = mutable.ArrayBuilder.make[Int]
+    var j = 0
+    while (j < w.length)
+      if (j + 1 < w.length && w(j) == l && w(j + 1) == r) { out += m; j += 2 }
+      else { out += w(j); j += 1 }
+    out.result()
+  }
+
+  /** BPE merge-table training (Sennrich-style, over whitespace
     * words, character-initial segmentation, no end-of-word marker): for
     * `numMerges` rounds, count adjacent symbol pairs weighted by word
     * frequency, pick the most frequent pair with a TOTAL deterministic
@@ -1699,17 +1728,12 @@ object TextOps {
     * `(merge_rank, lhs, rhs, merged, pair_count)` in training order.
     *
     * Scale shape: training runs on the WORD-FREQUENCY table, not the corpus
-    * — one corpus-wide (word → count) shuffle up front, then every round is
-    * a map (pair explode ≤ word length) + a (lhs, rhs) partial-aggregated
-    * count shuffle + a TakeOrdered top-1 (per-partition heaps, no global
-    * sort). At 100 TB the word table is orders of magnitude smaller than
-    * the corpus and stays fully distributed; the per-round driver transfer
-    * is ONE row (the argmax pair — the model-update shape of every
-    * iterative ML trainer here, cf. KMeans centroids), and the returned
-    * merge table is model-sized (`numMerges` rows). Rounds chain map-only
-    * transformations on a localCheckpoint-ed frame (the q79 PageRank
-    * pattern: lineage truncated per round, superseded round's blocks
-    * freed), so round k never re-executes rounds 1..k-1.
+    * — one corpus-wide (word → count) shuffle up front, then every round
+    * runs in memory inside ONE task that holds the (sampled) word table:
+    * a round is a pass over that table, not a Spark job. A caller at
+    * corpus scale bounds the table with `wordSampleK` ([[wordSampleMod]];
+    * q193's sf-scaled gate sets it). The returned merge table is
+    * model-sized (`numMerges` rows).
     *
     * Training stops early if no adjacent pair remains (corpus fully
     * merged) — with realistic corpora and bounded `numMerges` this does not
@@ -1719,20 +1743,11 @@ object TextOps {
                textCol: String = "text",
                wordSampleK: Long = 1,
                scope: graft.ops.CacheScope = graft.ops.CacheScope.default)
-      : DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    trainMergeTable(documents, numMerges, textCol, wordSampleK, scope) { segs =>
-      segPairCounts(segs)
-        .orderBy(col("pair_count").desc, col("lhs").asc, col("rhs").asc)
-        .limit(1).collect()
-    }.map { case (k, t) =>
-      val (l, r) = (t.getString(0), t.getString(1))
-      (k, l, r, l + r, t.getLong(2))
-    }.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
-  }
+      : DataFrame =
+    trainMergeTable(documents, numMerges, textCol, wordSampleK, scope,
+      likelihood = false).drop("score")
 
-  /** Distributed WORDPIECE merge-table training (Schuster & Nakajima 2012;
+  /** WORDPIECE merge-table training (Schuster & Nakajima 2012;
     * the BERT tokenizer's trainer) — the third mainstream subword family
     * beside [[trainBpe]] (frequency rule) and [[trainUnigramLm]]
     * (likelihood EM). WordPiece is BPE's loop with ONE change, the merge
@@ -1746,49 +1761,25 @@ object TextOps {
     * [[applyBpeMerges]], the trainer's own representation, so the
     * fertility rollups consume all three tokenizers unchanged).
     *
-    * Determinism: the score is computed as the SCALED INTEGER FLOOR
-    * quotient `(pair_count · 10^12) div (cnt_lhs · cnt_rhs)` in exact
-    * decimal(38,0) arithmetic — no floating ratio whose rounding could
-    * flip an argmax across engines (DuckDB replays it as HUGEINT `//`);
-    * ties break (score desc, pair_count desc, lhs asc, rhs asc) — total.
-    * 10^12 headroom: pair_count ≤ min(cnt_lhs, cnt_rhs) bounds every
-    * score by 10^12, and corpus-scale counts (≤ ~10^12 words at 100 TB)
-    * keep the numerator ≤ 10^24 ≪ 10^38.
+    * Determinism: the score is the exact INTEGER FLOOR quotient
+    * `(pair_count · 10^12) div (cnt_lhs · cnt_rhs)` — no floating ratio
+    * whose rounding could flip an argmax across engines (DuckDB replays it
+    * as HUGEINT `//`); ties break (score desc, pair_count desc, lhs asc,
+    * rhs asc) — total. 10^12 headroom: pair_count ≤ min(cnt_lhs, cnt_rhs)
+    * bounds every score by 10^12.
     *
     * Returns `(merge_rank, lhs, rhs, merged, pair_count, score)` in
-    * training order. Scale shape = [[trainBpe]]'s (word-table-bounded
-    * rounds, one-row driver transfer per round) plus one extra
-    * symbol-count shuffle per round for the denominator counts — still
-    * never corpus-shaped after the initial word count.
+    * training order. Scale shape = [[trainBpe]]'s: one word count, then
+    * every round inside one task over the (sampled) word table, which
+    * also recounts the symbols for the denominator.
     */
   def trainWordPiece(documents: DataFrame, numMerges: Int = 6,
                      textCol: String = "text",
                      wordSampleK: Long = 1,
                      scope: graft.ops.CacheScope = graft.ops.CacheScope.default)
-      : DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    trainMergeTable(documents, numMerges, textCol, wordSampleK, scope) { segs =>
-      val symCnt = segs
-        .select(col("freq"), explode(segSymbols(col("seg"))).as("sym"))
-        .groupBy(col("sym")).agg(sum(col("freq")).as("cnt"))
-      // both symbol-count joins are model-vocabulary-sized → broadcast;
-      // inner joins are total (a pair's parts are symbols of the same segs)
-      segPairCounts(segs)
-        .join(broadcast(symCnt.select(col("sym").as("lhs"), col("cnt").as("lcnt"))), Seq("lhs"))
-        .join(broadcast(symCnt.select(col("sym").as("rhs"), col("cnt").as("rcnt"))), Seq("rhs"))
-        .withColumn("score",
-          expr("(CAST(pair_count AS DECIMAL(38,0)) * CAST(1000000000000 AS DECIMAL(38,0)))" +
-            " div (CAST(lcnt AS DECIMAL(38,0)) * CAST(rcnt AS DECIMAL(38,0)))"))
-        .orderBy(col("score").desc, col("pair_count").desc,
-          col("lhs").asc, col("rhs").asc)
-        .limit(1).select("lhs", "rhs", "pair_count", "score")
-        .collect()
-    }.map { case (k, t) =>
-      val (l, r) = (t.getString(0), t.getString(1))
-      (k, l, r, l + r, t.getLong(2), t.getLong(3))
-    }.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count", "score")
-  }
+      : DataFrame =
+    trainMergeTable(documents, numMerges, textCol, wordSampleK, scope,
+      likelihood = true)
 
   /** The md5 word-sample modulus for the tokenizer tier's sf-scaled gate
     * (the q165/q188 rule applied to the WORD table): k such that roughly
@@ -2003,7 +1994,7 @@ object TextOps {
     * Returns the final model `(piece, cnt, llq_micro)` — counts from the
     * last E-step, scores their M-step quantization.
     *
-    * Scale shape (the [[trainBpe]] contract): one corpus-wide word-count
+    * Scale shape: one corpus-wide word-count
     * shuffle up front; the seed is one substring explode (≤ len·maxPieceLen
     * rows per DISTINCT word) + a count shuffle + a model-sized top-k;
     * each round is a map-only Viterbi over the distinct-word table

@@ -85,12 +85,33 @@ class BenchReportSpec extends AnyFunSuite {
     assert(line.contains("\"errors\":{\"q001_bad\":") && line.contains("q003_bad") &&
       !line.contains("q004_bad"), s"first 3 errors by name only: $line")
     assert(line.contains("\"queries_file\":null"), line)
-    assert(line.contains("\"queries\":1") && line.contains("\"value\":1.5"))
+    assert(line.contains("\"n_queries\":1,\"queries\":{\"q999_ok\":1.5}") &&
+      line.contains("\"value\":1.5"), line)
     assert(line.length < 1500, s"compact line too long: ${line.length}")
     val clean = Bench.renderCompactJson(Map("q01_x" -> Right(2.0)), "/d",
       Map.empty, Some("BENCH_last.json"))
     assert(clean.contains("\"n_errors\":0,\"errors\":{}") &&
       clean.contains("\"queries_file\":\"BENCH_last.json\""), clean)
+  }
+
+  test("renderCompactJson: queries maps the slowest successes that fit in about 1500 chars") {
+    // 300 successes, q001 the fastest and q300 the slowest, plus errors
+    val merged: Map[String, Either[String, Double]] =
+      (1 to 300).map(i => f"q$i%03d_row" -> (Right(i / 100.0): Either[String, Double]))
+        .toMap ++ (1 to 2).map(i => s"q90$i" + "_bad" -> Left("boom"))
+    val line = Bench.renderCompactJson(merged, "/d", Map.empty, None)
+    assert(line.contains("\"n_queries\":300,") && line.contains("\"n_errors\":2,"), line)
+    val map = "\"queries\":(\\{[^}]*\\})".r.findFirstMatchIn(line).get.group(1)
+    val keys = "\"(q[0-9]+_[a-z]+)\":".r.findAllMatchIn(map).map(_.group(1)).toSeq
+    val slowestFirst = (300 to 1 by -1).map(i => f"q$i%03d_row")
+    assert(keys.nonEmpty && keys === slowestFirst.take(keys.size),
+      s"slowest first, no error rows: $map")
+    assert(map.length <= Bench.compactQueriesChars, map.length)
+    val next = "\"" + slowestFirst(keys.size) + "\":" + (300 - keys.size) / 100.0
+    assert(map.length + next.length + 1 > Bench.compactQueriesChars,
+      "as many entries as fit")
+    assert(map.contains("\"q300_row\":3.0,\"q299_row\":2.99"), map)
+    assert(line.length < 2000, s"compact line too long: ${line.length}")
   }
 
   test("renderJson: retimed floors ride beside the sweep numbers") {

@@ -728,6 +728,8 @@ class BucketingSpec extends SparkTestBase {
     DedupOps.writeBandedIndex(docs.filter(col("doc_id") % 5 =!= 0), "t_lc_bd",
       buckets = 4, corpusTag = "lc")
     SimilarityOps.writeIvfIndex(ivfCorpus, "t_lc_iv", nCells = 4, buckets = 4)
+    SimilarityOps.ensureKnnIndex(ivfCorpus, "t_lc_kn", corpusTag = "lc",
+      minCos = 0.2, kTop = 4, buckets = 4)
     try {
       val noDiff = Seq.empty[(Long, String)].toDF("vec_id", "status")
       // each step's own caches go with its scope; what remains is checkpoints
@@ -743,7 +745,15 @@ class BucketingSpec extends SparkTestBase {
           emb.filter(col("vec_id") % 7 === 1).select(col("vec_id")), "t_lc_iv")),
         "ivf compact" -> (_ => SimilarityOps.compactIvfIndex("t_lc_iv")),
         "ivf restamp" -> (_ => SimilarityOps.maintainIvfIndexFromDiff(
-          ivfCorpus, noDiff, "t_lc_iv", newCorpusTag = "lc2")))
+          ivfCorpus, noDiff, "t_lc_iv", newCorpusTag = "lc2")),
+        "knn maintain" -> (_ => SimilarityOps.maintainKnnIndex(
+          emb.filter(col("vec_id") >= 150 && col("vec_id") < 200), "t_lc_kn")),
+        "split build" -> (s => DedupOps.writeBandedIndexSplit(
+          docs.filter(col("doc_id") % 5 =!= 0), "t_lc_sp", buckets = 4,
+          corpusTag = "lc", splitOccupancy = 2, scope = s)),
+        "split append" -> (s => DedupOps.appendToBandedIndexSplit(
+          docs.filter(col("doc_id") % 5 === 0), "t_lc_sp", scope = s)),
+        "split refreeze" -> (_ => DedupOps.refreezeBandedIndexSplit(spark, "t_lc_sp")))
       for ((name, step) <- steps) {
         val before = sc.getPersistentRDDs.keySet.toSet
         val scope = graft.ops.CacheScope()
@@ -752,11 +762,17 @@ class BucketingSpec extends SparkTestBase {
         assert(sc.getPersistentRDDs.keySet.toSet -- before === Set.empty[Int], name)
       }
       assert(spark.table("t_lc_iv_meta").head().getAs[String]("corpus_tag") === "lc2")
+      assert(spark.table("t_lc_kn_meta").count() === 2, "the kNN batch committed")
+      assert(spark.table("t_lc_sp_meta").head().getAs[Long]("layout_ver") === 2L,
+        "the refreeze had outgrown cells to freeze")
     } finally {
       DedupOps.bandedIndexTables.foreach(s =>
         spark.sql(s"DROP TABLE IF EXISTS t_lc_bd_$s"))
       Seq("cells", "centroids", "meta", "deleted").foreach(s =>
         spark.sql(s"DROP TABLE IF EXISTS t_lc_iv_$s"))
+      spark.catalog.listTables().collect().map(_.name)
+        .filter(t => t.startsWith("t_lc_kn_") || t.startsWith("t_lc_sp_"))
+        .foreach(t => graft.sources.Bucketing.dropTableAndLocation(spark, t))
     }
   }
 
