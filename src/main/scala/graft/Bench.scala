@@ -23,25 +23,27 @@ object Bench {
   /** Render the bench JSON line: successful queries (and their sum) in
     * `queries`/`value`, failed ones in `errors` — a thrown query appears
     * ONLY as an error, never as a number the driver could mistake for a
-    * fast run — and the variance pass's floors in `retimed` beside the
-    * sweep numbers, so the artifact separates spread from signal itself.
+    * fast run — failed setup steps (step → message, in step order) in
+    * `setup_errors`, and the variance pass's floors in `retimed` beside
+    * the sweep numbers, so the artifact separates spread from signal
+    * itself.
     */
   private[graft] def renderJson(merged: Map[String, Either[String, Double]],
                                 sfDir: String,
-                                retimed: Map[String, Double] = Map.empty)
+                                retimed: Map[String, Double] = Map.empty,
+                                setupErrors: Seq[(String, String)] = Seq.empty)
       : String = {
     val ok = merged.collect { case (k, Right(v)) => k -> v }
     val errs = merged.collect { case (k, Left(e)) => k -> e }
     val qs = ok.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val es = errs.map { case (k, e) =>
-      s"\"" + k + "\":\"" + e.replaceAll("[\\p{Cntrl}\"\\\\]", " ") + "\""
-    }.mkString("{", ",", "}")
     val rt = retimed.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (ok.nonEmpty) ok.values.sum else 0.0
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""errors":$es,"retimed":$rt,"methodology":"min-of-two-passes; """ +
+      s""""errors":${stringMap(errs.toSeq)},""" +
+      s""""setup_errors":${stringMap(setupErrors)},""" +
+      s""""retimed":$rt,"methodology":"min-of-two-passes; """ +
       s"""errored queries excluded from queries/total; persisted indexes """ +
       s"""prebuilt; retimed = min-of-5 floors of the worst movers vs the """ +
       s"""previous artifact","sf":"$sfDir"}"""
@@ -55,12 +57,14 @@ object Bench {
     * holding only the slowest successes that fit in [[compactQueriesChars]]
     * (ties by name), the error count with the first 3 errors by name
     * (errors must stay loud, but a sweep where every query fails must not
-    * push the line past the window), and the PATH of the full artifact
+    * push the line past the window), the setup-error count with the first
+    * 3 failed steps in step order, and the PATH of the full artifact
     * holding every query, or null when no file was written.
     */
   private[graft] def renderCompactJson(
       merged: Map[String, Either[String, Double]], sfDir: String,
-      retimed: Map[String, Double], fullPath: Option[String]): String = {
+      retimed: Map[String, Double], fullPath: Option[String],
+      setupErrors: Seq[(String, String)] = Seq.empty): String = {
     val ok = merged.collect { case (k, Right(v)) => k -> v }
     val errs = merged.collect { case (k, Left(e)) => k -> e }.toSeq.sortBy(_._1)
     val slowest = ok.toSeq.sortBy { case (k, v) => (-v, k) }
@@ -69,18 +73,30 @@ object Bench {
     val fit = slowest.scanLeft(2)(_ + _.length + 1).tail
       .count(_ <= compactQueriesChars)
     val qs = slowest.take(fit).mkString("{", ",", "}")
-    val es = errs.take(3).map { case (k, e) =>
-      s"\"" + k + "\":\"" + e.replaceAll("[\\p{Cntrl}\"\\\\]", " ") + "\""
-    }.mkString("{", ",", "}")
     val total = if (ok.nonEmpty) ok.values.sum else 0.0
     val file = fullPath.fold("null")(p => "\"" + p + "\"")
     s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""n_queries":${ok.size},"queries":$qs,""" +
-      s""""n_errors":${errs.size},"errors":$es,""" +
+      s""""n_errors":${errs.size},"errors":${stringMap(errs.take(3))},""" +
+      s""""n_setup_errors":${setupErrors.size},""" +
+      s""""setup_errors":${stringMap(setupErrors.take(3))},""" +
       s""""retimed":${retimed.size},"queries_file":$file,"sf":"$sfDir"}"""
   }
 
   private[graft] val compactQueriesChars = 1500
+
+  /** A JSON object of string values, control characters, quotes and
+    * backslashes in the values blanked so the line stays one parseable line. */
+  private def stringMap(entries: Seq[(String, String)]): String =
+    entries.map { case (k, e) =>
+      s"\"" + k + "\":\"" + e.replaceAll("[\\p{Cntrl}\"\\\\]", " ") + "\""
+    }.mkString("{", ",", "}")
+
+  /** An exception as a short error entry: class name and the first 160
+    * characters of its message. */
+  private def errorText(e: Throwable): String =
+    e.getClass.getSimpleName + ": " +
+      String.valueOf(e.getMessage).replaceAll("[\\p{Cntrl}\"\\\\]", " ").take(160)
 
   /** Previous artifact's per-query seconds, parsed leniently (query keys
     * are `q<digits>_<snake>`; error values are quoted strings so the
@@ -139,7 +155,19 @@ object Bench {
     // column while writing nothing.
     def run(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-    try {
+    // every setup step records its failure under its name instead of
+    // swallowing it: both JSON lines carry `setup_errors`, and a failed
+    // persisted-index prebuild (which would make its query time a BUILD
+    // while the artifact claims probe-only) fails the run after printing
+    val setupErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    var prebuildFailed = false
+    def setup(step: String, prebuild: Boolean = true)(body: => Unit): Unit =
+      try body
+      catch { case e: Throwable =>
+        setupErrors(step) = errorText(e)
+        if (prebuild) prebuildFailed = true
+      }
+    setup("warmup", prebuild = false) {
       spark.range(1000000L).selectExpr("sum(id)").collect()
       run(SparkEntry.entry(spark))
       // warm whole-stage-codegen + JIT for every query shape against the
@@ -147,23 +175,23 @@ object Bench {
       // factors (Janino cache hit), while NO data is shared with the timed
       // runs — the timed numbers then measure execution, not first-call
       // compilation. Operator caches built on sf0.001 are dropped before
-      // timing starts.
+      // timing starts. A query failing here is left to the timed passes,
+      // which record it.
       SparkEntry.queries.values.foreach(fn =>
         try run(fn(spark, "/root/testdata/sf0.001"))
         catch { case _: Throwable => () })
       graft.ops.CacheScope.default.release()
-    } catch { case _: Throwable => () }
+    }
     // pre-materialize the dedup tier's SHARED caches at the timed SF (the
     // persisted token-hash/shingle-set tables a real pipeline maintains):
     // otherwise whichever dedup query runs first absorbs the build and
     // per-query numbers swing ±2-3 s run-to-run with no code change.
-    // Each setup step has its OWN guard: one failing step must not silently
-    // skip the others (a skipped index prebuild would make q89/q90 time a
-    // BUILD while the JSON still claimed probe-only — the round-6
-    // mismeasurement class)
-    try run(graft.ops.DedupOps.shingleHashSets(
-      graft.sources.Tables(spark, sfDir, "documents")))
-    catch { case _: Throwable => () }
+    // Each setup step has its OWN guard: one failing step must not skip the
+    // others
+    setup("dedup_cache", prebuild = false) {
+      run(graft.ops.DedupOps.shingleHashSets(
+        graft.sources.Tables(spark, sfDir, "documents")))
+    }
     // pre-build the PERSISTED indexes at the timed SF (tagged with the
     // source dir, so the queries' ensure step becomes a no-op): q89/q90
     // then time what they claim to — the probe of an existing index, not
@@ -175,49 +203,58 @@ object Bench {
       graft.sources.Tables(spark, sfDir, "documents"), sfDir)
     val embTag = graft.SparkEntry.corpusTagOf(
       graft.sources.Tables(spark, sfDir, "embeddings"), sfDir)
-    try graft.ops.DedupOps.ensureBandedIndex(
-      graft.sources.Tables(spark, sfDir, "documents")
-        .filter(org.apache.spark.sql.functions.col("doc_id") % 5 =!= 0),
-      "graft_q89_corpus", corpusTag = docsTag)
-    catch { case _: Throwable => () }
-    try graft.ops.DedupOps.ensureBandedIndexSplit(
-      graft.sources.Tables(spark, sfDir, "documents")
-        .filter(org.apache.spark.sql.functions.col("doc_id") % 5 =!= 0),
-      "graft_q208_split", corpusTag = docsTag, splitOccupancy = 2)
-    catch { case _: Throwable => () }
+    setup("graft_q89_corpus") {
+      graft.ops.DedupOps.ensureBandedIndex(
+        graft.sources.Tables(spark, sfDir, "documents")
+          .filter(org.apache.spark.sql.functions.col("doc_id") % 5 =!= 0),
+        "graft_q89_corpus", corpusTag = docsTag)
+    }
+    setup("graft_q208_split") {
+      graft.ops.DedupOps.ensureBandedIndexSplit(
+        graft.sources.Tables(spark, sfDir, "documents")
+          .filter(org.apache.spark.sql.functions.col("doc_id") % 5 =!= 0),
+        "graft_q208_split", corpusTag = docsTag, splitOccupancy = 2)
+    }
     // q209's appended state (ensure base + append batch happen inside the
     // query's meta-tag guard): the first call pays the lifecycle, timed
     // calls then measure the drift AUDIT — the row's claim — not a build
-    try run(graft.SparkEntry.queries("q209_split_layout_drift")(spark, sfDir))
-    catch { case _: Throwable => () }
+    setup("q209_split_layout_drift") {
+      run(graft.SparkEntry.queries("q209_split_layout_drift")(spark, sfDir))
+    }
     // q210's refrozen state (ensure + append + refreeze happen inside the
     // query's guard): timed calls then measure the drift audit over the
     // refrozen index — the row's claim — not the lifecycle build
-    try run(graft.SparkEntry.queries("q210_split_refreeze")(spark, sfDir))
-    catch { case _: Throwable => () }
-    try graft.ops.SimilarityOps.ensureIvfIndex(
-      graft.sources.Tables(spark, sfDir, "embeddings"),
-      "graft_q90_ivf", corpusTag = embTag, nCells = 8)
-    catch { case _: Throwable => () }
-    try graft.ops.SimilarityOps.ensureIvfPqIndex(
-      graft.sources.Tables(spark, sfDir, "embeddings"),
-      "graft_q108_ivfpq", corpusTag = embTag, nCells = 8)
-    catch { case _: Throwable => () }
-    try graft.ops.SimilarityOps.ensureIvfPqIndex(
-      graft.sources.Tables(spark, sfDir, "embeddings"),
-      "graft_q109_divfpq", corpusTag = embTag, nCells = 8, coarse = "lattice")
-    catch { case _: Throwable => () }
-    try graft.ops.SimilarityOps.ensureIvfPqIndex(
-      graft.sources.Tables(spark, sfDir, "embeddings"),
-      "graft_q111_ivfadc", corpusTag = embTag, nCells = 8, coarse = "lattice",
-      encode = "residual")
-    catch { case _: Throwable => () }
+    setup("q210_split_refreeze") {
+      run(graft.SparkEntry.queries("q210_split_refreeze")(spark, sfDir))
+    }
+    setup("graft_q90_ivf") {
+      graft.ops.SimilarityOps.ensureIvfIndex(
+        graft.sources.Tables(spark, sfDir, "embeddings"),
+        "graft_q90_ivf", corpusTag = embTag, nCells = 8)
+    }
+    setup("graft_q108_ivfpq") {
+      graft.ops.SimilarityOps.ensureIvfPqIndex(
+        graft.sources.Tables(spark, sfDir, "embeddings"),
+        "graft_q108_ivfpq", corpusTag = embTag, nCells = 8)
+    }
+    setup("graft_q109_divfpq") {
+      graft.ops.SimilarityOps.ensureIvfPqIndex(
+        graft.sources.Tables(spark, sfDir, "embeddings"),
+        "graft_q109_divfpq", corpusTag = embTag, nCells = 8, coarse = "lattice")
+    }
+    setup("graft_q111_ivfadc") {
+      graft.ops.SimilarityOps.ensureIvfPqIndex(
+        graft.sources.Tables(spark, sfDir, "embeddings"),
+        "graft_q111_ivfadc", corpusTag = embTag, nCells = 8, coarse = "lattice",
+        encode = "residual")
+    }
     // the shared (0.2, kTop 4) kNN index q184/q189/q197 serve from: the
     // ensure here makes the graph tier's rows price probes + consumers,
     // not per-query SRP rebuilds (a real pipeline maintains this index
     // across ingests — the build is paid once per corpus)
-    try run(graft.SparkEntry.servedKnnEdges(spark, sfDir))
-    catch { case _: Throwable => () }
+    setup("served_knn_edges") {
+      run(graft.SparkEntry.servedKnnEdges(spark, sfDir))
+    }
     // TWO timed passes, per-query MIN: a single sample records GC pauses /
     // run-position artifacts as if they were the query's cost (a recorded
     // 4.97 s once reran at 1.24 s with zero code change). Min-of-two is
@@ -231,10 +268,7 @@ object Bench {
         .map { case (name, fn) =>
         val t0 = System.nanoTime()
         val r = try { run(fn(spark, sfDir)); Right((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable =>
-          Left(e.getClass.getSimpleName + ": " +
-            String.valueOf(e.getMessage).replaceAll("[\\p{Cntrl}\"\\\\]", " ").take(160))
-        }
+        catch { case e: Throwable => Left(errorText(e)) }
         name -> r
       }.toMap
     val pass1 = timedPass()
@@ -244,9 +278,10 @@ object Bench {
     // dedup cache by rebuilding it (the persisted index tables survive on
     // disk untouched — both passes probe the same prebuilt index)
     graft.ops.CacheScope.default.release()
-    try run(graft.ops.DedupOps.shingleHashSets(
-      graft.sources.Tables(spark, sfDir, "documents")))
-    catch { case _: Throwable => () }
+    setup("dedup_cache_pass2", prebuild = false) {
+      run(graft.ops.DedupOps.shingleHashSets(
+        graft.sources.Tables(spark, sfDir, "documents")))
+    }
     val pass2 = timedPass()
     val merged = mergePasses(pass1, pass2)
     graft.ops.CacheScope.default.release()
@@ -272,7 +307,7 @@ object Bench {
       name -> floor
     }.toMap
     graft.ops.CacheScope.default.release()
-    val json = renderJson(merged, sfDir, retimed)
+    val json = renderJson(merged, sfDir, retimed, setupErrors.toSeq)
     // persist the FULL line to files so the driver's parse never depends
     // on scraping the sbt log tail. A SUBSET run (SPARK_GRAFT_ONLY) never
     // defaults onto BENCH_last.json — that file is the full-suite record
@@ -308,7 +343,8 @@ object Bench {
     // alone exceeded the tail window at 210 queries and truncated
     // mid-line — the r14/r15 lost-PERF root cause)
     println(json)
-    println(renderCompactJson(merged, sfDir, retimed, fullPath))
+    println(renderCompactJson(merged, sfDir, retimed, fullPath, setupErrors.toSeq))
     spark.stop()
+    if (prebuildFailed) sys.exit(1)
   }
 }

@@ -74,9 +74,8 @@ object DedupOps {
     * re-hashing every token once per WINDOW (measured 20x). At corpus scale
     * this is the persisted token-hash table you'd materialize anyway.
     */
-  def tokenHashes(df: DataFrame, textCol: String = "text",
-                  idCol: String = "doc_id",
-                  scope: CacheScope = CacheScope.default): DataFrame = {
+  private def tokenHashes(df: DataFrame, textCol: String, idCol: String,
+                          scope: CacheScope): DataFrame = {
     val th = transform(TextOps.tokens(col(textCol)),
       t => DetHash.md5Hash60(t) % lit(DetHash.P))
     scope.register(df.select(col(idCol).as("id"), th.as("th")))
@@ -143,7 +142,7 @@ object DedupOps {
     * extractions (measured: 8 chars recomputed the two-regex chain 8+
     * times per row, dominating the whole SNM stage).
     */
-  def snmKeyFromCanon(canon: Column, chars: Int = 8): Column = {
+  private def snmKeyFromCanon(canon: Column, chars: Int): Column = {
     require(chars >= 1 && chars <= 10, "chars in [1,10] (6 bits each)")
     (0 until chars).map { i =>
       val a = ascii(substring(canon, i + 1, 1))
@@ -1620,7 +1619,7 @@ object DedupOps {
   }
 
   /** Hamming distance between two 64-bit fingerprints. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
+  private def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** Row-local SimHash fingerprint of a text COLUMN — the same 60-bit value
     * [[simHash60]] produces from shingle rows (asserted in OpsSpec),
@@ -1676,28 +1675,6 @@ object DedupOps {
     }
   }
 
-  /** (id, simhash, band_idx, band_bits): the pigeonhole banding shared by
-    * [[simHashNearDupPairs]] and [[simHashBucketStats]].
-    */
-  private def simHashBands(fingerprints: DataFrame, maxDist: Int,
-                           bits: Int): DataFrame =
-    fingerprints.select(col("id"), col("simhash"),
-      posexplode(array(simHashBandCols(col("simhash"), maxDist, bits): _*))
-        .as(Seq("band_idx", "band_bits")))
-
-  /** One-row bucket-population summary for [[simHashNearDupPairs]]' banding:
-    * (n_buckets, max_bucket, buckets_over_cap). Run this at a representative
-    * scale to confirm `maxBucket` headroom (buckets_over_cap must be 0 for
-    * the pigeonhole recall guarantee to be unconditional) — the pair query
-    * itself is lazy, so truncation can't be logged from inside its plan.
-    */
-  def simHashBucketStats(fingerprints: DataFrame, maxDist: Int = 5,
-                         bits: Int = 60, maxBucket: Int = 10000): DataFrame =
-    simHashBands(fingerprints, maxDist, bits)
-      .groupBy(col("band_idx"), col("band_bits")).agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("n_buckets"), max(col("n")).as("max_bucket"),
-        sum(when(col("n") > maxBucket, 1L).otherwise(0L)).as("buckets_over_cap"))
-
   /** SimHash near-dup retrieval: all pairs with Hamming distance ≤ `maxDist`
     * via banded bucketing — the 60-bit fingerprint splits into maxDist+1
     * bands, and by pigeonhole any pair within `maxDist` collides on at least
@@ -1712,11 +1689,13 @@ object DedupOps {
     * is exact by pigeonhole for pairs that share at least one non-dropped
     * band; a pair whose every shared band is over the cap is missed. On
     * non-pathological corpora no bucket approaches the cap and the output is
-    * the exact pair set — audit headroom with [[simHashBucketStats]].
+    * the exact pair set.
     */
   def simHashNearDupPairs(fingerprints: DataFrame, maxDist: Int = 5,
                           bits: Int = 60, maxBucket: Int = 10000): DataFrame = {
-    val banded = simHashBands(fingerprints, maxDist, bits)
+    val banded = fingerprints.select(col("id"), col("simhash"),
+      posexplode(array(simHashBandCols(col("simhash"), maxDist, bits): _*))
+        .as(Seq("band_idx", "band_bits")))
     // bucket members collect into one sorted array per (band, bits) — the
     // same grouped-bucket shape as minHashCandidates. ONE consumer of the
     // fingerprint subtree (a self-join computes it once per side — measured

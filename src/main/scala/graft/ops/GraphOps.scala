@@ -576,35 +576,6 @@ object GraphOps {
       .select(col("v"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
   }
 
-  /** Per-EDGE triangle support over a normalized undirected edge set:
-    * (a, b, support) for EVERY input edge (edges in no triangle report 0).
-    * One [[oriented]] wedge enumeration; each triangle credits its three
-    * edges (normalized back to a < b), one (a, b)-keyed count, one left
-    * join for the zero rows.
-    */
-  private def edgeSupport(und: DataFrame): DataFrame = {
-    val deg = degrees(und)
-    val o = oriented(und, deg)
-    val x = o.select(col("src"), col("dst").as("v"), col("dd").as("dv"))
-    val y = o.select(col("src"), col("dst").as("w"), col("dd").as("dw"))
-    val sup = x.join(y, Seq("src"))
-      .filter(col("dv") < col("dw") ||
-        (col("dv") === col("dw") && col("v") < col("w")))
-      .join(o.select(col("src").as("v"), col("dst").as("w")), Seq("v", "w"))
-      .select(explode(array(
-          struct(least(col("src"), col("v")).as("a"),
-            greatest(col("src"), col("v")).as("b")),
-          struct(least(col("src"), col("w")).as("a"),
-            greatest(col("src"), col("w")).as("b")),
-          struct(least(col("v"), col("w")).as("a"),
-            greatest(col("v"), col("w")).as("b")))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
-    und.join(sup, Seq("a", "b"), "left")
-      .select(col("a"), col("b"),
-        coalesce(col("support"), lit(0L)).as("support"))
-  }
-
   /** Triangle support over a FIXED-orientation edge list (src, dst, dd):
     * one wedge self-join + one closing join, each triangle crediting its
     * three ORIENTED edges directly — (src, dst, dd, support) for every
@@ -656,7 +627,7 @@ object GraphOps {
     * [[connectedComponents]] exhausted-budget rule — never a silent
     * truncation); rounds needed grows with the deepest peel cascade,
     * small in practice (≤ 2 on every test corpus). Each round is one
-    * bounded [[edgeSupport]] wedge pass (O(m^1.5)) + one filter, each
+    * bounded [[orientedSupport]] wedge pass (O(m^1.5)) + one filter, each
     * intermediate localCheckpoint-ed so lineage stays flat.
     */
   def trussEdges(pairs: DataFrame, k: Int = 3, rounds: Int = 4): DataFrame =
@@ -672,12 +643,17 @@ object GraphOps {
     */
   private def trussPeel(und0: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, "k-truss needs k >= 3")
-    // lazy checkpoints throughout: each round's count() materializes its
-    // frame in the same job (one job per round, not checkpoint + count);
-    // the superseded round is freed only after that count returns
-    val undC = und0.localCheckpoint(eager = false)
+    // the input edge set is checkpointed EAGERLY: the orientation plan
+    // reads it from a broadcast stage and a shuffle stage at once, and two
+    // concurrent jobs materializing one lazy checkpoint can deadlock the
+    // scheduler (the broadcast thread marks the RDD checkpointed under
+    // RDDCheckpointData's lock while the DAG scheduler holds the RDD's).
+    // The rounds stay lazy: each round's count() materializes its frame in
+    // the same job (one job per round, not checkpoint + count); the
+    // superseded round is freed only after that count returns
+    val undC = und0.localCheckpoint(eager = true)
     var o = oriented(undC, degrees(undC)).localCheckpoint(eager = false)
-    var prevCount = o.count() // materializes undC and o in one job
+    var prevCount = o.count()
     freeCheckpoint(undC) // the oriented list is a bijection of the edge set
     var r = 0
     var converged = false

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Keyed-merge maintenance operators — the MERGE INTO / CDC-apply patterns a
@@ -72,15 +72,5 @@ object MergeOps {
     updates.groupBy(col(key)).agg(max(packed).as("__m"))
       .select(col(key) +: (valueCols.map(c => col(s"__m.$c").as(c)) :+
         col(s"__m.$tsCol").as(tsCol)): _*)
-  }
-
-  /** SCD Type 1 (overwrite) upsert: latest value wins, no history — the
-    * compaction shape for a CDC-mirrored table. Anti-join keeps unmatched
-    * base rows; the batch contributes its rows as-is.
-    */
-  def upsert(base: DataFrame, updates: DataFrame, key: String): DataFrame = {
-    val cols = base.columns.map(col).toSeq
-    base.join(updates.select(col(key)), Seq(key), "left_anti")
-      .unionByName(updates.select(cols: _*))
   }
 }

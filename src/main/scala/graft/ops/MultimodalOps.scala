@@ -2,26 +2,22 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing for training-data pipelines: image/audio/video
   * payloads ride as opaque `binary` columns with typed metadata derived by
-  * pure expressions (size, format sniff, chunking), plus a partition-wise
-  * decode stub showing the batch shape a real decoder plugs into.
+  * pure expressions (size, format sniff, chunking), plus partition-wise
+  * decoders.
   *
-  * Design: the image tier is REAL end-to-end for the JDK's bundled formats
-  * (PNG/BMP/GIF/JPEG/WBMP via `javax.imageio`): [[decodeImage]] decodes,
-  * [[resizeImage]] box-filter-scales and PNG-re-encodes, and
-  * [[extractFeatures]] emits DCT perceptual embeddings that feed
-  * [[SimilarityOps]] directly. Audio is real for the JDK's containers
-  * (WAV/AIFF/AU, [[decodeAudio]]); video is real for MJPEG-in-AVI
-  * ([[decodeVideoFrames]] — RIFF walking + per-frame JPEG). The HARD
-  * boundary, stated rather than faked: inter-frame codecs (H.264/VP9/AV1)
-  * and webp/avif need ffmpeg-class native decoders the JDK does not ship.
-  * [[decodeImageStub]] remains as the deterministic fake for payloads past
-  * that boundary; its `mapPartitions` plumbing is identical to the real
-  * decoders', so swapping in an actual codec (JNI/javacpp ffmpeg,
-  * TwelveMonkeys ImageIO, ...) changes no plumbing.
+  * Design: images decode through the JDK's bundled readers
+  * (PNG/BMP/GIF/JPEG/WBMP via `javax.imageio`) into an integer luma grid
+  * ([[lumaGrid]]) and a fixed-point DCT pHash ([[phashBits]]). Audio is
+  * real for the JDK's containers (WAV/AIFF/AU, [[decodeAudio]]); video is
+  * real for MJPEG-in-AVI ([[decodeVideoFrames]] — RIFF walking +
+  * per-frame JPEG). The HARD boundary, stated rather than faked:
+  * inter-frame codecs (H.264/VP9/AV1) and webp/avif need ffmpeg-class
+  * native decoders the JDK does not ship; swapping one in (JNI/javacpp
+  * ffmpeg, TwelveMonkeys ImageIO, ...) changes no `mapPartitions`
+  * plumbing.
   *
   * At 100 TB: payload bytes never shuffle — metadata extraction is a narrow
   * projection fused into the scan; the decode stage is `mapPartitions` over
@@ -50,7 +46,7 @@ object MultimodalOps {
   }
 
   /** Payload byte length. */
-  def payloadSize(bin: Column): Column = octet_length(bin)
+  private def payloadSize(bin: Column): Column = octet_length(bin)
 
   /** Fixed-size chunking (frame/sample windows): array of `chunkBytes`-byte
     * slices. Pure array expression — the unit a decoder or transport layer
@@ -62,7 +58,7 @@ object MultimodalOps {
       i => substring(bin, i * chunkBytes + 1, lit(chunkBytes)))
 
   /** Number of `chunkBytes`-byte chunks. */
-  def numChunks(bin: Column, chunkBytes: Int): Column =
+  private def numChunks(bin: Column, chunkBytes: Int): Column =
     ceil(octet_length(bin).cast("double") / chunkBytes).cast("int")
 
   /** Typed metadata projection over a binary payload column: size, sniffed
@@ -86,92 +82,6 @@ object MultimodalOps {
       .when(id % 4 === 2, concat(unhex(lit("47494638")), body))
       .otherwise(body)
   }
-
-  /** Decoded-image record produced by the decode stage. */
-  final case class DecodedImage(id: Long, width: Int, height: Int,
-                                channels: Int, meanPixel: Double)
-
-  val decodedSchema: StructType = StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("meanPixel", DoubleType, nullable = false)))
-
-  /** STUB decoder: deterministic fake "image decode" — dimensions and mean
-    * pixel derived from the payload bytes, NOT a real codec. The plumbing
-    * around it is the real contract: `mapPartitions` so a production decoder
-    * initializes once per partition and streams rows; input stays
-    * (id, bytes); output is a typed Dataset with a fixed schema.
-    */
-  def decodeImageStub(df: DataFrame, idCol: String, binCol: String): Dataset[DecodedImage] = {
-    val input = df.select(col(idCol).cast("long"), col(binCol))
-      .as(Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-    input.mapPartitions { rows =>
-      // real impl: val decoder = Codec.open() once here, closed at end
-      rows.map { case (id, bytes) =>
-        val n = bytes.length
-        // STUB: fabricate deterministic dims/stats from the bytes
-        val w = 1 + math.abs(if (n > 0) bytes(0).toInt else 0) % 64
-        val h = 1 + math.abs(if (n > 1) bytes(1).toInt else 0) % 64
-        val mean = if (n == 0) 0.0 else bytes.iterator.map(b => (b & 0xff).toDouble).sum / n
-        DecodedImage(id, w, h, 3, mean)
-      }
-    }(Encoders.product[DecodedImage])
-  }
-
-  /** REAL image decode for the formats the JDK ships readers for (PNG, BMP,
-    * GIF, JPEG, WBMP) — `javax.imageio.ImageIO`, zero new dependencies. Same
-    * contract and output schema as [[decodeImageStub]] (which remains the
-    * deterministic fake for formats without a bundled codec): mapPartitions
-    * so reader setup happens once per partition, payload bytes never
-    * shuffle, typed `Dataset[DecodedImage]` out. `channels` is the raster
-    * band count (3 = RGB, 4 = RGBA, 1 = gray), `meanPixel` the mean sample
-    * value over every band of every pixel (0-255 scale).
-    *
-    * Rows whose payload no JDK reader accepts (truncated bytes, formats
-    * like webp/avif, non-images) are DROPPED — decode is a filter+map, the
-    * usual ingest semantics. Run [[payloadMeta]] first when the drop count
-    * needs auditing; the in-memory `ImageIO` cache setting avoids executor
-    * tmp-file churn.
-    */
-  def decodeImage(df: DataFrame, idCol: String, binCol: String): Dataset[DecodedImage] = {
-    val input = df.select(col(idCol).cast("long"), col(binCol))
-      .as(Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-    input.mapPartitions { rows =>
-      // per-partition decoder setup: in-memory stream cache, no tmp files
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.flatMap { case (id, bytes) =>
-        // NonFatal, not just IOException: JDK readers throw runtime
-        // exceptions on corrupt-but-recognized payloads (truncated IHDR,
-        // hostile dimensions), and a NULL payload must drop, not NPE a task
-        val img =
-          if (bytes == null) None
-          else try Option(javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(bytes)))
-          catch { case scala.util.control.NonFatal(_) => None }
-        img.map { im =>
-          val raster = im.getRaster
-          val (w, h, bands) = (im.getWidth, im.getHeight, raster.getNumBands)
-          var sum = 0.0
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              var b = 0
-              while (b < bands) { sum += raster.getSampleDouble(x, y, b); b += 1 }
-              x += 1
-            }
-            y += 1
-          }
-          DecodedImage(id, w, h, bands, sum / (w.toLong * h * bands))
-        }
-      }
-    }(Encoders.product[DecodedImage])
-  }
-
-  /** Resized-payload record: id, target dims, re-encoded bytes. */
-  final case class ResizedImage(id: Long, width: Int, height: Int, payload: Array[Byte])
 
   /** Decode `bytes` with the JDK's bundled readers, or None for anything a
     * crawl can throw at us (corrupt, truncated, non-image, NULL).
@@ -245,55 +155,6 @@ object MultimodalOps {
     (r, g, b)
   }
 
-  /** REAL resize stage: decode (JDK readers), deterministic box-filter scale
-    * to `targetW`×`targetH` in RGB, lossless PNG re-encode via
-    * `ImageIO.write` — zero new dependencies. Same contract as the decode
-    * stage: `mapPartitions` (scaler/encoder state per partition, not per
-    * row), binary in / binary out so stages chain, payload bytes never
-    * shuffle, undecodable rows DROP (decode is a filter+map; audit drop
-    * counts with [[payloadMeta]] upstream).
-    *
-    * The scaling kernel is a hand-rolled box filter rather than
-    * `AffineTransformOp` so output bytes are bit-identical across JDK
-    * builds — resized payloads feed content-addressed dedup
-    * ([[DedupOps]] fingerprints), where platform-dependent resampling would
-    * make equal images hash unequal.
-    */
-  def resizeImage(df: DataFrame, idCol: String, binCol: String,
-                  targetW: Int, targetH: Int): Dataset[ResizedImage] = {
-    require(targetW > 0 && targetH > 0, "target dims must be positive")
-    val input = df.select(col(idCol).cast("long"), col(binCol))
-      .as(Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-    input.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false) // in-memory streams, no tmp files
-      rows.flatMap { case (id, bytes) =>
-        tryDecode(bytes).map { im =>
-          val (w, h) = (im.getWidth, im.getHeight)
-          // normalize banding once, then scale each RGB band with the box filter
-          val rgbIm = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val (rB, gB, bB) = toRgbBands(im)
-          var i = 0
-          while (i < w * h) {
-            rgbIm.setRGB(i % w, i / w, (rB(i) << 16) | (gB(i) << 8) | bB(i)); i += 1
-          }
-          val raster = rgbIm.getRaster
-          val (ro, go, bo) = (boxScaleBand(raster, 0, w, h, targetW, targetH),
-            boxScaleBand(raster, 1, w, h, targetW, targetH),
-            boxScaleBand(raster, 2, w, h, targetW, targetH))
-          val out = new java.awt.image.BufferedImage(targetW, targetH,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var j = 0
-          while (j < targetW * targetH) {
-            out.setRGB(j % targetW, j / targetW, (ro(j) << 16) | (go(j) << 8) | bo(j)); j += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(out, "png", bos) // PNG: lossless + deterministic
-          ResizedImage(id, targetW, targetH, bos.toByteArray)
-        }
-      }
-    }(Encoders.product[ResizedImage])
-  }
-
   /** Orthonormal 2-D DCT-II of an n×n block (row-major). O(n³) per axis —
     * n is the feature grid (≤32), so microseconds per image.
     */
@@ -327,36 +188,8 @@ object MultimodalOps {
     outArr
   }
 
-  /** REAL perceptual feature extraction: decode → Rec.601 luma → box-filter
-    * to a `gridN`×`gridN` intensity grid → orthonormal 2-D DCT-II → the
-    * low-frequency `featN`×`featN` block as a `dim = featN²`-wide
-    * `array<float>` embedding (the classic pHash construction, DC term
-    * included so uniform brightness is representable). Pure JDK math, fully
-    * deterministic; output schema is the `embeddings`-table contract, so the
-    * result feeds every [[SimilarityOps]] operator (brute-force top-k, SRP
-    * dedup, IVF index) unchanged.
-    *
-    * `mapPartitions` keeps the one-context-per-partition shape a learned
-    * encoder would need; swapping DCT for a model session changes no
-    * plumbing. Undecodable rows DROP, as in [[decodeImage]].
-    */
-  def extractFeatures(df: DataFrame, idCol: String, binCol: String,
-                      gridN: Int = 32, featN: Int = 8): DataFrame = {
-    require(featN <= gridN, s"featN=$featN must be <= gridN=$gridN")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val input = df.select(col(idCol).cast("long"), col(binCol))
-      .as(Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-    input.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.flatMap { case (id, bytes) =>
-        tryDecode(bytes).map(im => (id, frameFeature(im, gridN, featN)))
-      }
-    }.toDF(idCol, "embedding")
-  }
-
-  /** The luma→grid→DCT feature of one decoded image — the per-frame body
-    * shared by [[extractFeatures]] and [[decodeVideoFrames]]. */
+  /** The luma→grid→DCT feature of one decoded image: the per-frame body
+    * of [[decodeVideoFrames]]. */
   private def frameFeature(im: java.awt.image.BufferedImage,
                            gridN: Int, featN: Int): Array[Float] = {
     val (w, h) = (im.getWidth, im.getHeight)
@@ -381,7 +214,7 @@ object MultimodalOps {
     v
   }
 
-  /** The INTEGER intensity grid feeding [[extractFeatures]]' DCT — decode
+  /** The INTEGER intensity grid feeding the image DCT — decode
     * (JDK readers) → Rec.601 integer luma `(299r + 587g + 114b) div 1000`
     * → [[boxScaleBand]]'s integer box filter (sum + n/2) div n — exposed
     * as its own stage because every number is EXACT INTEGER arithmetic on
@@ -391,7 +224,7 @@ object MultimodalOps {
     * under the hash gate (the DCT tail stays spec-gated — `math.cos`
     * has no cross-engine bit contract). Output one row per grid cell:
     * (idCol, idx, luma), idx = row-major cell index. Undecodable rows
-    * DROP, as in [[decodeImage]].
+    * DROP (decode is a filter+map, the usual ingest semantics).
     */
   def lumaGrid(df: DataFrame, idCol: String, binCol: String,
                gridN: Int = 2): DataFrame = {
@@ -421,14 +254,6 @@ object MultimodalOps {
     }.toDF(idCol, "idx", "luma")
   }
 
-  /** Frame sampling: every `everyN`-th fixed-size chunk (a video keyframe /
-    * audio window subsample pattern). Pure array expression over
-    * [[chunks]] — no decode needed to thin a payload before shipping it to
-    * an expensive stage.
-    */
-  def sampleFrames(bin: Column, frameBytes: Int, everyN: Int): Column =
-    filter(chunks(bin, frameBytes), (_, i) => i % everyN === 0)
-
   /** Quantization scale of the fixed-point DCT table: coefficients live in
     * units of 2^-14. */
   val dctScaleBits: Int = 14
@@ -455,9 +280,9 @@ object MultimodalOps {
     * the LOWER MEDIAN of the AC coefficients (the value at 0-based sorted
     * index (m−1)/2 of the m = gridN²−1 ACs — an order statistic on exact
     * integers, so both engines agree even under ties). One row per
-    * decodable image: (id, dc, median_ac, phash) — the [[extractFeatures]]
-    * embedding's integer twin whose every bit the SQL oracle replays from
-    * raw payload bytes. Undecodable rows DROP, as in [[decodeImage]].
+    * decodable image: (id, dc, median_ac, phash) — an integer perceptual
+    * hash whose every bit the SQL oracle replays from raw payload bytes.
+    * Undecodable rows DROP, as in [[lumaGrid]].
     *
     * Scale shape: map-only `mapPartitions` over the scan's partitioning
     * (one decode context per partition); no shuffle, no driver state —
@@ -599,15 +424,14 @@ object MultimodalOps {
   /** REAL video decode for MJPEG-in-AVI — the one video container/codec
     * pair the JDK can take end to end (RIFF walking is plain byte
     * arithmetic; every frame chunk is a standalone JPEG for `ImageIO`):
-    * parse the container, keep every `everyN`-th frame ([[sampleFrames]]'
-    * thinning, now at the real frame boundary instead of a byte-chunk
-    * approximation), decode each kept frame, and emit one row per frame
-    * with container facts and the [[extractFeatures]] DCT embedding — so
+    * parse the container, keep every `everyN`-th frame (thinning at the
+    * real frame boundary), decode each kept frame, and emit one row per
+    * frame with container facts and a luma-grid DCT embedding — so
     * frame streams feed [[SimilarityOps]] unchanged (consecutive-frame
     * cosine = scene-change detection; cross-video frame near-dup = clip
     * reuse). Non-AVI payloads, non-MJPEG codecs (H.264/VP9/AV1 need
     * ffmpeg-class decoders — a REAL boundary this module does not fake)
-    * and undecodable frames DROP, the [[decodeImage]] ingest semantics.
+    * and undecodable frames DROP, the [[lumaGrid]] ingest semantics.
     *
     * Truncation is DETECTABLE, not silent: `n_frames` counts the frames
     * that survived the walk (a malformed tail — partial download — stops
@@ -703,7 +527,7 @@ object MultimodalOps {
     * pitch/noisiness proxy), frame count and duration. Supports 8-bit and
     * 16-bit integer PCM (both endiannesses, signed/unsigned); payloads the
     * JDK cannot parse — compressed codecs, truncated bytes, NULLs — are
-    * DROPPED, the same filter+map ingest semantics as [[decodeImage]].
+    * DROPPED, the same filter+map ingest semantics as [[lumaGrid]].
     *
     * Scale shape: mapPartitions, frames streamed through a fixed 8 KiB
     * buffer (an hour-long take never materializes as samples), bytes never
@@ -781,143 +605,6 @@ object MultimodalOps {
     }(Encoders.product[DecodedAudio])
   }
 
-  /** Fixed-dimension per-clip AUDIO embedding — the audio mirror of the
-    * image/video [[extractFeatures]] pHash, so clips flow into every
-    * [[SimilarityOps]] operator (brute top-k, SRP near-dup, IVF index)
-    * for clip-reuse and near-dup detection exactly as video frames do.
-    *
-    * Construction (pure JDK math, bit-deterministic per clip and
-    * therefore partition-invariant): decode PCM as in [[decodeAudio]],
-    * mix channels down per frame, split the clip into `gridN` equal time
-    * windows, and in each window run `gridN` Goertzel filters at fixed
-    * NORMALIZED frequencies f_k = (k+1)/(2·gridN) cycles/sample (band
-    * gridN-1 sits at Nyquist) — a coarse time×frequency energy grid, the
-    * deterministic stand-in for a log-mel spectrogram. Each cell is the
-    * band's recovered sine amplitude (2·√power/windowFrames) on the same
-    * 0-255 scale as the image luma grid; the grid then goes through the
-    * shared orthonormal 2-D [[dct2d]] and the low-frequency
-    * `featN`×`featN` block is the `dim = featN²` `array<float>`
-    * embedding (defaults give dim 64 — the embeddings-table contract).
-    * Byte-identical clips produce bit-identical embeddings; distinct
-    * tones land in different bands.
-    *
-    * Same ingest semantics as [[decodeAudio]]: non-PCM, truncated, NULL,
-    * or unknown-length payloads (a frame count must be declared for the
-    * window split — true for every JDK WAV/AIFF/AU byte payload) DROP.
-    * Compressed codecs remain the honest ffmpeg boundary. Scale shape:
-    * mapPartitions, frames streamed through the fixed decode buffer,
-    * gridN² + gridN·3 doubles of state per clip, bytes never shuffle.
-    */
-  def audioClipEmbedding(df: DataFrame, idCol: String, binCol: String,
-                         gridN: Int = 8, featN: Int = 8): DataFrame = {
-    require(featN <= gridN, s"featN=$featN must be <= gridN=$gridN")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val input = df.select(col(idCol).cast("long"), col(binCol))
-      .as(Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-    input.mapPartitions { rows =>
-      import javax.sound.sampled.{AudioFormat, AudioSystem}
-      rows.flatMap { case (id, bytes) =>
-        val parsed =
-          if (bytes == null) None
-          else try {
-            val in = AudioSystem.getAudioInputStream(
-              new java.io.ByteArrayInputStream(bytes))
-            val f = in.getFormat
-            val enc = f.getEncoding
-            val ok = (enc == AudioFormat.Encoding.PCM_SIGNED ||
-              enc == AudioFormat.Encoding.PCM_UNSIGNED) &&
-              (f.getSampleSizeInBits == 8 || f.getSampleSizeInBits == 16) &&
-              in.getFrameLength > 0
-            if (!ok) { in.close(); None } else Some((in, f))
-          } catch { case scala.util.control.NonFatal(_) => None }
-        parsed.map { case (in, f) =>
-          val n = in.getFrameLength
-          val (ch, bits) = (f.getChannels, f.getSampleSizeInBits)
-          val (signed, bigEndian) =
-            (f.getEncoding == AudioFormat.Encoding.PCM_SIGNED, f.isBigEndian)
-          val bytesPerSample = bits / 8
-          val frameBytes = f.getFrameSize
-          // Goertzel per band: s = x + 2cos(w)·s1 − s2; power at window
-          // end = s1² + s2² − 2cos(w)·s1·s2. cos table fixed per clip.
-          val cw = Array.tabulate(gridN)(k =>
-            math.cos(2.0 * math.Pi * (k + 1) / (2.0 * gridN)))
-          val s1 = new Array[Double](gridN)
-          val s2 = new Array[Double](gridN)
-          val grid = new Array[Double](gridN * gridN)
-          var winIdx = 0L
-          var winFrames = 0L
-          def flushWindow(): Unit = {
-            if (winFrames > 0) {
-              var k = 0
-              while (k < gridN) {
-                val p = s1(k) * s1(k) + s2(k) * s2(k) -
-                  2.0 * cw(k) * s1(k) * s2(k)
-                val amp = 2.0 * math.sqrt(math.max(p, 0.0)) / winFrames
-                grid(winIdx.toInt * gridN + k) = math.min(255.0, amp * 255.0)
-                s1(k) = 0.0; s2(k) = 0.0
-                k += 1
-              }
-            }
-            winFrames = 0L
-          }
-          val buf = new Array[Byte](8192 - 8192 % math.max(frameBytes, 1))
-          var frameIdx = 0L
-          var read = in.read(buf)
-          while (read > 0) {
-            var off = 0
-            while (off + frameBytes <= read && frameIdx < n) {
-              // equal-split window of this frame; flush on boundary cross
-              val w = frameIdx * gridN / n
-              if (w != winIdx) { flushWindow(); winIdx = w }
-              var sMix = 0.0
-              var c = 0
-              while (c < ch) {
-                val base = off + c * bytesPerSample
-                val raw =
-                  if (bits == 8)
-                    if (signed) buf(base).toInt else (buf(base) & 0xff) - 128
-                  else {
-                    val (b0, b1) =
-                      if (bigEndian) (buf(base), buf(base + 1))
-                      else (buf(base + 1), buf(base))
-                    if (signed) (b0 << 8) | (b1 & 0xff)
-                    else (((b0 & 0xff) << 8) | (b1 & 0xff)) - 32768
-                  }
-                sMix += raw.toDouble / (if (bits == 8) 128.0 else 32768.0)
-                c += 1
-              }
-              sMix /= ch
-              var k = 0
-              while (k < gridN) {
-                val s0 = sMix + 2.0 * cw(k) * s1(k) - s2(k)
-                s2(k) = s1(k); s1(k) = s0
-                k += 1
-              }
-              winFrames += 1
-              off += frameBytes
-              frameIdx += 1
-            }
-            read = in.read(buf)
-          }
-          flushWindow()
-          in.close()
-          val coeffs = dct2d(grid, gridN)
-          val v = new Array[Float](featN * featN)
-          var fy = 0
-          while (fy < featN) {
-            var fx = 0
-            while (fx < featN) {
-              v(fy * featN + fx) = coeffs(fy * gridN + fx).toFloat; fx += 1
-            }
-            fy += 1
-          }
-          (id, v)
-        }
-      }
-    }.toDF(idCol, "embedding")
-  }
-
   // ---------- Content-defined chunking (CDC) — binary-level dedup ----------
 
   /** 40-bit rolling-state mask of the gear hash: keeps every engine's
@@ -960,7 +647,7 @@ object MultimodalOps {
     * only the chunk it lands in and boundaries RESYNCHRONIZE — the
     * property that makes chunk-hash dedup robust to edits where fixed-size
     * blocks lose alignment forever. The binary mirror of the text tier's
-    * shingle dedup, for the payloads [[decodeImage]]/[[decodeAudio]] ride
+    * shingle dedup, for the payloads [[lumaGrid]]/[[decodeAudio]] ride
     * in: re-encoded containers, re-uploaded files, appended-footer copies
     * share most chunks even when whole-blob hashes all differ.
     *

@@ -47,7 +47,7 @@ object RelationalOps {
     * sums grew past ~1e10. Bounds for exactness: |k| < 1e9, n < 1e10,
     * Σk² < 1e28 — holds at any Verify scale and to ~10^9-row groups.
     */
-  def decStddev(c: Column, scale: Int = 2): Column = {
+  private def decStddev(c: Column, scale: Int = 2): Column = {
     val pow = math.pow(10, scale).toLong
     val k = (c.cast(DecimalType(18, scale)) * lit(pow)).cast(DecimalType(9, 0))
     val s1 = sum(k).cast(DecimalType(19, 0))
@@ -240,68 +240,6 @@ object RelationalOps {
     val grouped = df.groupBy(col(labelCol)).agg(ratioAggs.head, ratioAggs.tail: _*)
     val maxAggs = cols.map(c => max(col(c)).as(c))
     grouped.agg(maxAggs.head, maxAggs.tail: _*)
-  }
-
-  /** Salted equi-join for skewed keys: the fact side adds a random-free
-    * deterministic salt (hash of a tiebreak column mod `salts`), the
-    * dimension side replicates each row `salts` times, and the join runs on
-    * (key, salt) — a hot key's rows spread over `salts` reducers instead of
-    * one. Result set is identical to the plain join (asserted in tests).
-    * AQE's skew-join handles moderate skew automatically; explicit salting
-    * is for the pathological keys AQE splits can't fix (single giant
-    * build-side partitions) and for deterministic layout control.
-    */
-  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String, salts: Int,
-                 factTiebreak: String): DataFrame = {
-    val salted = fact.withColumn("__salt",
-      pmod(hash(col(factTiebreak)), lit(salts)).cast("int"))
-    val dimRep = dim.withColumn("__salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    salted.join(dimRep, Seq(key, "__salt")).drop("__salt")
-  }
-
-  /** Detect-then-remediate SKEW JOIN: the composition of [[skewProfile]]'s
-    * decision ("this key distribution needs salting") and [[saltedJoin]]'s
-    * fix, applied PER KEY — hot keys (fact-side rows ≥ `hotRowThreshold`)
-    * route through the salted path, everything else through the plain
-    * equi-join, and the union is row-identical to `fact ⋈ dim` (asserted
-    * in OpsSpec, along with the partition spread).
-    *
-    * Why per-key: salting costs `salts`× dim replication, so paying it for
-    * the whole dim is wrong when one tenant/null-surrogate/default key
-    * holds the skew — exactly the case AQE's post-shuffle splits handle
-    * worst (a single giant build partition). The hot-key set is found with
-    * one key-count aggregation (the same shuffle [[skewProfile]] pays),
-    * MATERIALIZED ONCE to the driver — by definition of "hot" it is small
-    * (≤ n_rows / hotRowThreshold keys; fail-fast guarded) — and re-enters
-    * the plan as a literal local relation, so the four semi/anti splits
-    * share one computed set instead of re-running the aggregation per leg
-    * (the k-legs trap [[skewProfile]]'s docs warn about: a derived `fact`
-    * would otherwise pay its whole lineage four more times).
-    */
-  def skewRoutedJoin(fact: DataFrame, dim: DataFrame, key: String,
-                     factTiebreak: String, salts: Int = 16,
-                     hotRowThreshold: Long = 1000000L): DataFrame = {
-    require(salts >= 2, "salts must be >= 2")
-    require(hotRowThreshold >= 1, "hotRowThreshold must be >= 1")
-    val spark = fact.sparkSession
-    val keyField = fact.select(col(key)).schema
-    val maxHotKeys = 1000000
-    val hotRows = fact.groupBy(col(key)).agg(count(lit(1)).as("__c"))
-      .filter(col("__c") >= hotRowThreshold).select(col(key))
-      .limit(maxHotKeys + 1).collect()
-    require(hotRows.length <= maxHotKeys,
-      s"skewRoutedJoin found > $maxHotKeys hot keys at threshold " +
-        s"$hotRowThreshold — that is not skew, it is the whole key space; " +
-        s"raise hotRowThreshold or use saltedJoin on everything")
-    val hot = broadcast(
-      spark.createDataFrame(java.util.Arrays.asList(hotRows: _*), keyField))
-    val factHot = fact.join(hot, Seq(key), "left_semi")
-    val factCold = fact.join(hot, Seq(key), "left_anti")
-    val dimHot = dim.join(hot, Seq(key), "left_semi")
-    val dimCold = dim.join(hot, Seq(key), "left_anti")
-    saltedJoin(factHot, dimHot, key, salts, factTiebreak)
-      .unionByName(factCold.join(dimCold, Seq(key)))
   }
 
   /** Deterministic train/val/test split: each row gets a `split` index
@@ -614,7 +552,7 @@ object RelationalOps {
     * estimate alpha_m·m²/denom in micro units (the one double expression,
     * shared shape with the oracle).
     */
-  def hllEstimate(regs: DataFrame, p: Int = 8): DataFrame = {
+  private def hllEstimate(regs: DataFrame, p: Int): DataFrame = {
     val m = 1 << p
     val s = 60 - p + 1
     val mD = m.toDouble
@@ -727,8 +665,7 @@ object RelationalOps {
       .drop("__h", "__rk")
   }
 
-  /** Join-key SKEW PROFILE — the decision input for [[saltedJoin]] / AQE
-    * skew tuning: one row of exact distribution facts about rows-per-key
+  /** Join-key SKEW PROFILE — the decision input for AQE skew tuning: one row of exact distribution facts about rows-per-key
     * (n_keys, n_rows, max, p50/p90/p99 of per-key counts, and the hottest
     * key's row share in basis points). Percentiles are percentile_disc
     * (value at position ⌈p·n_keys⌉ in count order), computed over the

@@ -8,14 +8,12 @@ import org.apache.spark.sql.functions._
   * sign-random-projection LSH bucketing as the scale path (candidates from
   * bucket equality, exact rerank inside buckets).
   *
-  * Vector math comes in two forms:
-  *   - [[dot]]/[[norm]]/[[cosine]]: higher-order-function folds for
-  *     arbitrary dimension (interpreted — fine for cold paths);
-  *   - [[dotU]]/[[normU]]/[[cosineU]]: dimension-unrolled flat expressions
-  *     that stay inside whole-stage codegen — the hot-path form. Both
-  *     accumulate left-to-right in double precision, so results are
-  *     bit-identical to each other and to a sequential SQL `list_sum`,
-  *     regardless of partitioning.
+  * Dot products come in three forms: [[dot]], a higher-order-function
+  * fold for arbitrary dimension; [[dotU]], a dimension-unrolled flat
+  * expression that stays inside whole-stage codegen; and the native
+  * `dotF` expression ([[cosineF]]). All accumulate left-to-right in double
+  * precision, so results are bit-identical to each other and to a
+  * sequential SQL `list_sum`, regardless of partitioning.
   *
   * SRP hyperplanes are md5-derived constants ([[DetHash.planeComponent]]):
   * the Spark plan embeds them as literals (codegen, no runtime hashing) and
@@ -29,12 +27,6 @@ object SimilarityOps {
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, x) => acc + x)
 
-  /** L2 norm. */
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity. */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Dimension-unrolled dot product: `dim` fused multiply-adds, left-to-right
     * — whole-stage-codegen'd (no interpreted lambda per element).
     */
@@ -43,19 +35,12 @@ object SimilarityOps {
       element_at(a, i + 1).cast("double") * element_at(b, i + 1).cast("double")
     }.reduce(_ + _)
 
-  /** Unrolled L2 norm. */
-  def normU(a: Column, dim: Int): Column = sqrt(dotU(a, a, dim))
-
-  /** Unrolled cosine. */
-  def cosineU(a: Column, b: Column, dim: Int): Column =
-    dotU(a, b, dim) / (normU(a, dim) * normU(b, dim))
-
   /** Cosine via the native [[graft.functions.DotProduct]] expression — one
     * plan node per dot, a codegen'd loop at runtime, bit-identical
     * accumulation. The preferred expression form for array<float> columns
     * (dotU stays for arbitrary element types / parity testing).
     */
-  def cosineF(a: Column, b: Column): Column = {
+  private def cosineF(a: Column, b: Column): Column = {
     import graft.functions.VectorExpressions.dotF
     dotF(a, b) / (sqrt(dotF(a, a)) * sqrt(dotF(b, b)))
   }
@@ -66,9 +51,9 @@ object SimilarityOps {
     * baseline you run on a candidate subset, not the full corpus.
     * Deterministic tiebreak on corpus id.
     *
-    * Kernel shape (the [[ivfTopK]] convention): the queries are collected
-    * and broadcast — the SAME driver-sized build the previous
-    * `crossJoin(broadcast(q))` paid inside its BroadcastExchange — and each
+    * Kernel shape: the queries are collected and broadcast — the SAME
+    * driver-sized build the previous `crossJoin(broadcast(q))` paid inside
+    * its BroadcastExchange — and each
     * corpus partition scores all queries in one compiled loop with a
     * k-bounded insertion sort per query, emitting ≤ |queries|·k partial
     * rows per partition. The expression form materialized all |q|·|c|
@@ -501,7 +486,6 @@ object SimilarityOps {
                       vecCol: String = "embedding"): DataFrame = {
     import graft.functions.VectorExpressions.dotF
     require(dims.nonEmpty, "need at least one truncation width")
-    val spark = df.sparkSession
     def topk(d: Option[Int]): DataFrame = {
       def tr(c: Column) = d.map(n => slice(c, 1, n)).getOrElse(c)
       // norms once per ROW (per width), not per pair — same IEEE value
@@ -656,7 +640,7 @@ object SimilarityOps {
     * Cosine-similar vectors collide with probability (1 - θ/π)^nPlanes per
     * table.
     */
-  def srpBucket(vec: Column, nPlanes: Int, table: Int, dim: Int): Column = {
+  private def srpBucket(vec: Column, nPlanes: Int, table: Int, dim: Int): Column = {
     import graft.functions.VectorExpressions.dotF
     (0 until nPlanes).map { i =>
       val plane = typedlit(
@@ -799,29 +783,7 @@ object SimilarityOps {
   def lshTopKMultiProbe(df: DataFrame, k: Int, nPlanes: Int = 12,
                         nTables: Int = 4, dim: Int = 64,
                         idCol: String = "vec_id", vecCol: String = "embedding",
-                        maxBucket: Int = 10000): DataFrame =
-    lshTopKMultiProbeImpl(df, None, k, nPlanes, nTables, dim, idCol, vecCol,
-      maxBucket)
-
-  /** [[lshTopKMultiProbe]] restricted to a QUERY subset — completes the
-    * family ([[bruteForceTopK]]/[[ivfTopKPersisted]] take query frames,
-    * [[lshTopKForQueries]] covers single-probe): only the subset's rows
-    * fan out probes and pay the rerank/window; the corpus side is banded
-    * and capped exactly as in the full form, so for ids in the subset the
-    * report is row-identical to lshTopKMultiProbe's.
-    */
-  def lshTopKMultiProbeForQueries(df: DataFrame, queries: DataFrame, k: Int,
-                                  nPlanes: Int = 12, nTables: Int = 4,
-                                  dim: Int = 64, idCol: String = "vec_id",
-                                  vecCol: String = "embedding",
-                                  maxBucket: Int = 10000): DataFrame =
-    lshTopKMultiProbeImpl(df, Some(queries), k, nPlanes, nTables, dim, idCol,
-      vecCol, maxBucket)
-
-  private def lshTopKMultiProbeImpl(df: DataFrame, queries: Option[DataFrame],
-                                    k: Int, nPlanes: Int, nTables: Int,
-                                    dim: Int, idCol: String, vecCol: String,
-                                    maxBucket: Int): DataFrame = {
+                        maxBucket: Int = 10000): DataFrame = {
     val banded = df.select(col(idCol).as("id"),
       posexplode(array((0 until nTables).map(t =>
         srpBucket(col(vecCol), nPlanes, t, dim)): _*)).as(Seq("tbl", "bucket")))
@@ -829,14 +791,11 @@ object SimilarityOps {
       .partitionBy(col("tbl"), col("bucket"))
     val kept = banded.withColumn("bn", count(lit(1)).over(w))
       .filter(col("bn") <= maxBucket).drop("bn")
-    // probe 0 = the exact bucket; probes 1..p flip one sign bit each.
-    // A query subset prunes the probe fan-out at its source (the probe
-    // side stays deliberately UNCAPPED either way — see the docstring)
-    val probeSrc = queries.fold(banded)(qs =>
-      banded.join(qs.select(col(idCol).as("id")), Seq("id"), "left_semi"))
+    // probe 0 = the exact bucket; probes 1..p flip one sign bit each (the
+    // probe side stays deliberately UNCAPPED — see the docstring)
     val probeBuckets = array((col("bucket") +:
       (0 until nPlanes).map(i => col("bucket").bitwiseXOR(lit(1L << i)))): _*)
-    val probes = probeSrc.select(col("tbl"), col("id").as("query_id"),
+    val probes = banded.select(col("tbl"), col("id").as("query_id"),
       explode(probeBuckets).as("bucket"))
     val cand = probes
       .join(kept.select(col("tbl"), col("bucket"), col("id").as("neighbor_id")),
@@ -844,9 +803,8 @@ object SimilarityOps {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id")).distinct()
     import graft.functions.VectorExpressions.dotF
-    val q = queries.getOrElse(df)
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        sqrt(dotF(col(vecCol), col(vecCol))).as("qn"))
+    val q = df.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+      sqrt(dotF(col(vecCol), col(vecCol))).as("qn"))
     val n = df.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       sqrt(dotF(col(vecCol), col(vecCol))).as("cn"))
     val scored = cand.join(q, Seq("query_id")).join(n, Seq("neighbor_id"))
@@ -855,104 +813,6 @@ object SimilarityOps {
     RelationalOps.topKPerGroup(scored, Seq("query_id"),
         Seq(col("cos").desc, col("neighbor_id").asc), k)
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn").as("rank"))
-  }
-
-  /** IVF (inverted-file) ANN: a KMeans coarse quantizer assigns every corpus
-    * vector to a cell; each query probes its `nProbe` nearest centroids and
-    * exact-reranks only those cells' members. The cell assignment is the
-    * shuffle/partition key — at corpus scale the index is a bucketed table
-    * and a query touches ~nProbe/nCells of the data. Recall depends on
-    * nProbe and the cluster structure; precision is exact (true cosine
-    * rerank). Returns top-k neighbors per corpus vector (self-ANN, like
-    * [[lshTopK]]).
-    *
-    * THIS form collects the inverted file to the driver and broadcasts it —
-    * a model-sized corpus only (candidate sets, rerank pools), bounded by
-    * the `maxRows` fail-fast. Past that, use [[ivfTopKDistributed]] (the
-    * index never touches the driver) or [[ivfTopKPersisted]] (the index is
-    * a bucketed table probed exchange-free).
-    */
-  def ivfTopK(df: DataFrame, k: Int, nCells: Int = 16, nProbe: Int = 4,
-              seed: Long = 4667979835606274383L,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              scope: CacheScope = CacheScope.default,
-              maxRows: Long = 1L << 20): DataFrame = {
-    import df.sparkSession.implicits._
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    // cached: the quantizer input is consumed by the fit, the member
-    // transform, and the query side — without a cache each re-scans source
-    val vecs = scope.register(df.select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<float>").as("v"))
-      .withColumn("fv", array_to_vector(col("v").cast("array<double>"))))
-    // fail fast instead of silently OOMing the driver (same contract as
-    // cosinePairsExact): limit(maxRows+1) early-exits rather than counting
-    // the full input — and runs BEFORE the KMeans fit, so an oversized
-    // corpus is rejected before any full-corpus work, not after 20
-    // quantizer iterations
-    val bound = math.min(maxRows, Int.MaxValue - 1L).toInt
-    require(vecs.limit(bound + 1).count() <= maxRows,
-      s"ivfTopK collects the inverted file to the driver and is bounded to " +
-        s"maxRows=$maxRows vectors; use ivfTopKDistributed (or " +
-        s"ivfTopKPersisted) at scale")
-    val km = new KMeans().setK(nCells).setSeed(seed).setMaxIter(20)
-      .setFeaturesCol("fv").setPredictionCol("cell")
-    val model = km.fit(vecs)
-    val centers = model.clusterCenters.map(_.toArray)
-    def l2(v: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
-    // The inverted file: cell -> members (id, vector, norm), broadcast like
-    // a model. The query path is FAISS-shaped: per query, distance to all
-    // centroids (nCells·dim flops), probe the nProbe nearest cells, scan
-    // only their members with a compiled cosine loop + a k-bounded
-    // insertion sort. Expression-based rerank measured ~50x slower at 20k
-    // vectors — dense kernels belong in tight loops, not per-pair exprs.
-    val assigned = model.transform(vecs)
-      .select(col("cell"), col("id"), col("v")).as[(Int, Long, Array[Float])]
-    val byCell: Map[Int, Array[(Long, Array[Float], Double)]] = assigned.collect()
-      .groupBy(_._1).map { case (c, ms) => c -> ms.map(m => (m._2, m._3, l2(m._3))) }
-    val sc = df.sparkSession.sparkContext
-    val bcIndex = sc.broadcast(byCell)
-    val bcCenters = sc.broadcast(centers)
-    vecs.select(col("id"), col("v")).as[(Long, Array[Float])].mapPartitions { rows =>
-      val index = bcIndex.value
-      val cents = bcCenters.value
-      rows.flatMap { case (qid, qv) =>
-        val nq = l2(qv)
-        // nProbe nearest centroids
-        val dists = cents.zipWithIndex.map { case (c, ci) =>
-          var s = 0.0; var j = 0
-          while (j < qv.length) { val d = qv(j) - c(j); s += d * d; j += 1 }
-          (s, ci)
-        }
-        val probe = dists.sortBy(_._1).take(nProbe).map(_._2)
-        // top-k over probed members: (cos desc, neighbor_id asc)
-        val top = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-        def better(a: (Long, Double), b: (Long, Double)): Boolean =
-          a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)
-        probe.foreach { cell =>
-          index.getOrElse(cell, Array.empty).foreach { case (nid, nv, nn) =>
-            if (nid != qid) {
-              var dp = 0.0; var j = 0
-              while (j < qv.length) { dp += qv(j).toDouble * nv(j).toDouble; j += 1 }
-              val cand = (nid, dp / (nq * nn))
-              if (top.size < k || better(cand, top.last)) {
-                var i = top.size
-                top.append(cand)
-                while (i > 0 && better(top(i), top(i - 1))) {
-                  val t = top(i); top(i) = top(i - 1); top(i - 1) = t; i -= 1
-                }
-                if (top.size > k) top.remove(k)
-              }
-            }
-          }
-        }
-        top.iterator.zipWithIndex.map { case ((nid, cos), r) => (qid, nid, cos, r + 1) }
-      }
-    }.toDF("query_id", "neighbor_id", "cos", "rank")
   }
 
   /** Embedding near-duplicate pairs at corpus scale: SRP bucket collisions
@@ -1022,7 +882,7 @@ object SimilarityOps {
 
   /** [[srpBucket]] under the STRIDED plane layout (see [[srpPlaneStride]]).
     */
-  def srpBucketStrided(vec: Column, nPlanes: Int, table: Int, dim: Int): Column = {
+  private def srpBucketStrided(vec: Column, nPlanes: Int, table: Int, dim: Int): Column = {
     import graft.functions.VectorExpressions.dotF
     (0 until nPlanes).map { i =>
       val plane = typedlit((0 until dim).map(j =>
@@ -1344,8 +1204,8 @@ object SimilarityOps {
     // consumed in both directions AND by sibling queries — register the
     // verified pairs so every consumer of the same (corpus, floor,
     // operating point) serves from ONE banding + cosine-verify pass
-    // (the semanticDupClusters convention; registration is keyed by the
-    // canonicalized plan, so equivalent call sites share)
+    // (registration is keyed by the canonicalized plan, so equivalent call
+    // sites share)
     knnFromPairs(scope.register(srpNearDupPairs(df, minCos, nPlanes,
       nTables, dim, idCol, vecCol, maxBucket)), kTop)
 
@@ -1403,50 +1263,12 @@ object SimilarityOps {
 
   /** SEMANTIC near-duplicate CLUSTERS over an embedding column: (vec_id,
     * comp) for every vector, where comp = the minimum vec id reachable
-    * through the verified SRP near-dup pair graph at `minCos`
-    * ([[srpNearDupPairs]] edges → [[GraphOps.connectedComponents]]). The
-    * embedding-space analog of [[DedupOps.nearDupClusters]] — the
-    * SemDeDup-style step that groups semantically-redundant documents so
-    * dedup keeps one representative per MEANING, not just per surface form
-    * (A≈B and B≈C must land in one cluster even when cos(A,C) < minCos).
-    * Singleton vectors map to themselves.
-    *
-    * Scale contract: edges come from the bucketed SRP path (no all-pairs),
-    * and the closure is O(log n) rounds of (id, label) shuffles — nothing
-    * ever collects to the driver. Precision of the edge set is exact;
-    * recall follows the SRP collision curve (see [[srpNearDupPairs]]).
-    */
-  def semanticDupClusters(df: DataFrame, minCos: Double, nPlanes: Int = 8,
-                          nTables: Int = 6, dim: Int = 64,
-                          idCol: String = "vec_id", vecCol: String = "embedding",
-                          maxBucket: Int = 10000,
-                          scope: CacheScope = CacheScope.default): DataFrame = {
-    // register the verified edges: the clusters query and the retention
-    // summary plan identical subtrees, served from this cache instead of
-    // re-running the SRP candidate + verify pipeline
-    val pairs = scope.register(
-      srpNearDupPairs(df, minCos, nPlanes, nTables, dim, idCol, vecCol, maxBucket))
-    GraphOps.connectedComponents(pairs, df.select(col(idCol)), idCol)
-  }
-
-  /** Semantic dedup retention summary: one row per semantic cluster with the
-    * kept representative (min vec id) and the member count — the embedding
-    * analog of [[DedupOps.nearDedupSummary]]. Join `keep_id` back to the
-    * corpus to materialize the semantically-deduplicated table.
-    */
-  def semanticDedupSummary(df: DataFrame, minCos: Double, nPlanes: Int = 8,
-                           nTables: Int = 6, dim: Int = 64,
-                           idCol: String = "vec_id", vecCol: String = "embedding",
-                           maxBucket: Int = 10000,
-                           scope: CacheScope = CacheScope.default): DataFrame =
-    semanticDupClusters(df, minCos, nPlanes, nTables, dim, idCol, vecCol,
-        maxBucket, scope)
-      .groupBy(col("comp")).agg(count(lit(1)).as("n_vecs"))
-      .select(col("comp").as("keep_id"), col("n_vecs"))
-
-  /** [[semanticDupClusters]] over the DEGREE-BOUNDED graph: closure runs
-    * on [[knnGraphAuto]]'s mutual-kNN edges (candidate stage auto-sized,
-    * per-vertex degree ≤ kTop) instead of the raw ε-graph — the form whose
+    * through the DEGREE-BOUNDED pair graph — [[knnGraphAuto]]'s mutual-kNN
+    * edges (candidate stage auto-sized, per-vertex degree ≤ kTop) →
+    * [[GraphOps.connectedComponents]]. The embedding-space analog of
+    * [[DedupOps.nearDupClusters]]: the SemDeDup-style step that keeps one
+    * representative per MEANING, not just per surface form. Bounding the
+    * degree instead of closing over the raw ε-graph is the form whose
     * cluster topology cannot densify into one fused component as the
     * corpus grows (the measured fixed-ε failure: 10× the vectors at
     * cos ≥ 0.2 gave ~113× the edges). minCos stays the near-dup FLOOR;
@@ -1464,8 +1286,10 @@ object SimilarityOps {
         maxBucket, targetOccupancy),
       df.select(col(idCol)), idCol)
 
-  /** [[semanticDedupSummary]] over the bounded graph — one row per
-    * mutual-kNN cluster with the kept representative and member count.
+  /** Semantic dedup retention summary: one row per
+    * [[semanticDupClustersBounded]] cluster with the kept representative
+    * (min vec id) and the member count — the embedding analog of
+    * [[DedupOps.nearDedupSummary]].
     */
   def semanticDedupSummaryBounded(df: DataFrame, minCos: Double,
                                   kTop: Int = 4, nTables: Int = 6,
@@ -1801,59 +1625,62 @@ object SimilarityOps {
           .forall(spark.catalog.tableExists)
     }
     if (!upToDate) {
-      val base = df.select(col(idCol).cast("long").as("id"),
-        col(vecCol).as("vec")).dropDuplicates("id")
-      val n = base.count()
-      val planes = autoPlanes(n, targetOccupancy)
-      import graft.functions.VectorExpressions.dotF
-      val vecs = base.withColumn("nrm", sqrt(dotF(col("vec"), col("vec"))))
-      // freeze the split layout on the base corpus's occupancy (one
-      // banding pass; the cells frame is skew-tail-sized)
-      val banded = bandStrided(base, planes, nTables, dim)
-      val cells = splitCellsOf(banded, splitOccupancy,
-        srpPlaneStride - planes).localCheckpoint(true)
-      val epoch = epochIdOf(base)
-      import graft.sources.Bucketing
-      import spark.implicits._
-      // fresh build: recreate the append-only tables; sweep stale
-      // versioned tables (a previous corpus OR the pre-delta formats) so
-      // the warehouse never accumulates unreachable snapshots
-      (Seq("vecs", "bands", "kept").flatMap(t =>
-        spark.catalog.listTables().collect().map(_.name)
-          .filter(_.startsWith(s"${tablePrefix}_${t}_v"))))
-        .foreach(t => Bucketing.dropTableAndLocation(spark, t))
-      Bucketing.writeBucketed(
-        vecs.withColumn("epoch", lit(epoch))
-          .select(col("id"), col("vec"), col("nrm"), col("epoch")),
-        s"${tablePrefix}_vecs", Seq("id"), buckets)
-      Bucketing.writeBucketed(
-        bandSplitFrozen(base, banded, planes, nTables, dim, cells)
-          .withColumn("epoch", lit(epoch))
-          .select(col("id"), col("tbl"), col("bucket"), col("sub"),
-            col("epoch")),
-        s"${tablePrefix}_bands", Seq("bucket"), buckets)
-      Bucketing.saveTable(cells, s"${tablePrefix}_cells")
-      // the base kept lists are computed FROM the just-written tables:
-      // the candidate self-join co-locates on the bands bucketing and the
-      // verify reads the persisted vectors — the corpus never re-bands
-      val bandsT = spark.table(s"${tablePrefix}_bands")
-        .select(col("id"), col("tbl"), col("bucket"), col("sub"))
-      val vecsT = spark.table(s"${tablePrefix}_vecs")
-        .select(col("id"), col("vec"))
-      val kept = knnKeptLists(
-        pairsFromSplitBands(bandsT, vecsT, minCos, "id", "vec"), kTop)
-      Bucketing.writeBucketed(kept.withColumn("kver", lit(1L)),
-        s"${tablePrefix}_kept", Seq("v"), buckets)
-      Bucketing.saveTable(
-        spark.emptyDataset[Long].toDF("id"), s"${tablePrefix}_deleted")
-      // the commit: meta RECREATES on a fresh build — stale rows from a
-      // previous corpus must not keep orphan epochs visible
-      Bucketing.saveTable(
-        Seq((knnIndexFormatVersion, corpusTag, planes, kTop, minCos,
-          nTables, dim, buckets, 1L, epoch, n, targetOccupancy,
-          splitOccupancy))
-          .toDF(knnMetaCols: _*),
-        s"${tablePrefix}_meta")
+      val cps = new CacheScope.Checkpoints
+      try {
+        val base = df.select(col(idCol).cast("long").as("id"),
+          col(vecCol).as("vec")).dropDuplicates("id")
+        val n = base.count()
+        val planes = autoPlanes(n, targetOccupancy)
+        import graft.functions.VectorExpressions.dotF
+        val vecs = base.withColumn("nrm", sqrt(dotF(col("vec"), col("vec"))))
+        // freeze the split layout on the base corpus's occupancy (one
+        // banding pass; the cells frame is skew-tail-sized)
+        val banded = bandStrided(base, planes, nTables, dim)
+        val cells = cps(splitCellsOf(banded, splitOccupancy,
+          srpPlaneStride - planes))
+        val epoch = epochIdOf(base)
+        import graft.sources.Bucketing
+        import spark.implicits._
+        // fresh build: recreate the append-only tables; sweep stale
+        // versioned tables (a previous corpus OR the pre-delta formats) so
+        // the warehouse never accumulates unreachable snapshots
+        (Seq("vecs", "bands", "kept").flatMap(t =>
+          spark.catalog.listTables().collect().map(_.name)
+            .filter(_.startsWith(s"${tablePrefix}_${t}_v"))))
+          .foreach(t => Bucketing.dropTableAndLocation(spark, t))
+        Bucketing.writeBucketed(
+          vecs.withColumn("epoch", lit(epoch))
+            .select(col("id"), col("vec"), col("nrm"), col("epoch")),
+          s"${tablePrefix}_vecs", Seq("id"), buckets)
+        Bucketing.writeBucketed(
+          bandSplitFrozen(base, banded, planes, nTables, dim, cells)
+            .withColumn("epoch", lit(epoch))
+            .select(col("id"), col("tbl"), col("bucket"), col("sub"),
+              col("epoch")),
+          s"${tablePrefix}_bands", Seq("bucket"), buckets)
+        Bucketing.saveTable(cells, s"${tablePrefix}_cells")
+        // the base kept lists are computed FROM the just-written tables:
+        // the candidate self-join co-locates on the bands bucketing and the
+        // verify reads the persisted vectors — the corpus never re-bands
+        val bandsT = spark.table(s"${tablePrefix}_bands")
+          .select(col("id"), col("tbl"), col("bucket"), col("sub"))
+        val vecsT = spark.table(s"${tablePrefix}_vecs")
+          .select(col("id"), col("vec"))
+        val kept = knnKeptLists(
+          pairsFromSplitBands(bandsT, vecsT, minCos, "id", "vec"), kTop)
+        Bucketing.writeBucketed(kept.withColumn("kver", lit(1L)),
+          s"${tablePrefix}_kept", Seq("v"), buckets)
+        Bucketing.saveTable(
+          spark.emptyDataset[Long].toDF("id"), s"${tablePrefix}_deleted")
+        // the commit: meta RECREATES on a fresh build — stale rows from a
+        // previous corpus must not keep orphan epochs visible
+        Bucketing.saveTable(
+          Seq((knnIndexFormatVersion, corpusTag, planes, kTop, minCos,
+            nTables, dim, buckets, 1L, epoch, n, targetOccupancy,
+            splitOccupancy))
+            .toDF(knnMetaCols: _*),
+          s"${tablePrefix}_meta")
+      } finally cps.freeAll()
     }
   }
 
@@ -2003,7 +1830,6 @@ object SimilarityOps {
       // kept delta replaces the round-13 full O(n·kTop) snapshot rewrite.
       // Orphans from a crash anywhere below stay invisible until the meta
       // append commits this epoch (bands/vecs by epoch id, kept by kver).
-      import graft.sources.Bucketing
       import spark.implicits._
       bandsNew.withColumn("epoch", lit(epoch))
         .select(col("id"), col("tbl"), col("bucket"), col("sub"), col("epoch"))
@@ -2082,110 +1908,110 @@ object SimilarityOps {
     val planes = m.getAs[Int]("planes")
     val kTop = m.getAs[Int]("ktop")
     val minCos = m.getAs[Double]("min_cos")
-    val before = graft.sources.Bucketing.freshTable(spark,
-      s"${tablePrefix}_deleted")
-    val merged = before
-      .unionByName(ids.select(col(idCol).cast("long").as("id")))
-      .distinct()
-      .localCheckpoint(true)
-    // grew = this call tombstoned at least one NEW id — even with no kept
-    // list to repair, the meta commit below must land so n_vecs (and the
-    // status/drift-guard arithmetic on it) tracks the live corpus
-    val grew = merged.count() > before.count()
-    import graft.sources.Bucketing
-    Bucketing.saveTable(merged, s"${tablePrefix}_deleted")
-    // everything below uses the MATERIALIZED tombstone frame, never a
-    // re-read of the table this call just replaced — a cloned session's
-    // relation cache (streaming foreachBatch) can otherwise serve the
-    // pre-replace file listing mid-call
-    val del = merged
-    // candidate vertices: any row of ANY version naming a tombstone — a
-    // window-free superset that scopes the version window below to the
-    // churn neighborhood instead of sorting the full O(n·kTop) state
-    val namedSuper = graft.sources.Bucketing
-      .freshTableGated(spark, s"${tablePrefix}_kept", token)
-      .filter(col("kver") <= lit(v))
-      .join(broadcast(del.select(col("id").as("nb"))), Seq("nb"),
-        "left_semi")
-      .select(col("v")).distinct()
-    val kept = committedKept(spark, tablePrefix, v, token, Some(namedSuper))
-    // touched = LIVE vertices whose LATEST kept list names ANY tombstoned
-    // id — the full set, not just this call's: a crashed prior delete
-    // left its vertices un-repaired and this pass self-heals them
-    val touched = kept
-      .join(broadcast(del.select(col("id").as("nb"))), Seq("nb"),
-        "left_semi")
-      .select(col("v"))
-      .join(broadcast(del.select(col("id").as("v"))), Seq("v"), "left_anti")
-      .distinct()
-      .localCheckpoint(true)
-    val vecsLive = liveRows(spark, tablePrefix, "vecs", token)
-      .dropDuplicates("id")
-    // the live count is RE-DERIVED, not decremented: a partially-replayed
-    // delete batch would double-decrement ids already subtracted by the
-    // crashed attempt's committed meta row
-    val nLive = vecsLive.count()
-    // pure replay — every id already tombstoned, every repair committed,
-    // and the committed count already right (the last clause closes the
-    // crash window where a prior attempt wrote tombstones that needed no
-    // repair but died before its meta commit)
-    if (!grew && touched.isEmpty && nLive == m.getAs[Long]("n_vecs")) return
-    // re-probe the touched vertices' bands against the live store —
-    // their FULL candidate set at the frozen (tbl, bucket, sub) layout
-    // (top-k needs what the dead neighbor crowded out, which the kept
-    // state no longer holds)
-    val bandsLive = liveRows(spark, tablePrefix, "bands", token)
-    val tb = bandsLive.join(touched.withColumnRenamed("v", "id"), Seq("id"))
-    val cand = tb
-      .select(col("tbl"), col("bucket"), col("sub"), col("id").as("v"))
-      .join(bandsLive.select(col("tbl"), col("bucket"), col("sub"),
-          col("id").as("nb")),
-        Seq("tbl", "bucket", "sub"))
-      .filter(col("v") =!= col("nb"))
-      .select(col("v"), col("nb")).distinct()
-    import graft.functions.VectorExpressions.dotF
-    val va = vecsLive.select(col("id").as("v"), col("vec").as("va"),
-      col("nrm").as("na"))
-    val vb = vecsLive.select(col("id").as("nb"), col("vec").as("vb"),
-      col("nrm").as("nb_n"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("v")).orderBy(col("cos").desc, col("nb"))
-    val next = v + 1L
-    val reRanked = cand.join(va, Seq("v")).join(vb, Seq("nb"))
-      .select(col("v"), col("nb"),
-        (dotF(col("va"), col("vb")) / (col("na") * col("nb_n"))).as("cos"))
-      .filter(col("cos") >= lit(minCos))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= kTop)
-      .select(col("v"), col("nb"), col("cos"))
-    // a touched vertex whose every candidate died gets an EMPTY-LIST
-    // MARKER (nb = v — a value no real list can hold): under the
-    // delta-versioned layout its stale rows stay on disk, and without a
-    // newer version stamp they would keep serving
-    val markers = touched.join(reRanked.select(col("v")), Seq("v"),
-        "left_anti")
-      .select(col("v"), col("v").as("nb"),
-        lit(0.0).cast("double").as("cos"))
-    // TOUCHED-SIZED kept delta (dead vertices' stale rows stay — the
-    // serve-time endpoint anti-joins hide them and compact removes them
-    // physically), materialized before the self-referential insert
-    val keptAppend = reRanked.unionByName(markers)
-      .withColumn("kver", lit(next))
-      .localCheckpoint(true)
-    keptAppend.select(col("v"), col("nb"), col("cos"), col("kver"))
-      .write.insertInto(s"${tablePrefix}_kept")
-    // a delete epoch's id is salted so it can never alias a data epoch of
-    // the same id set; no _vecs/_bands row carries it, so the committed
-    // view's semi-join simply never matches it
-    val delEpoch = epochIdOf(
-      del.select(concat(lit("del|"), col("id").cast("string")).as("id")))
-    import spark.implicits._
-    Seq((knnIndexFormatVersion, m.getAs[String]("corpus_tag"), planes,
-      kTop, minCos, m.getAs[Int]("n_tables"), m.getAs[Int]("dim"),
-      m.getAs[Int]("buckets"), next, delEpoch, nLive,
-      m.getAs[Long]("target_occupancy"), m.getAs[Long]("split_occupancy")))
-      .toDF(knnMetaCols: _*)
-      .write.mode("append").saveAsTable(s"${tablePrefix}_meta")
+    val cps = new CacheScope.Checkpoints
+    try {
+      val before = graft.sources.Bucketing.freshTable(spark,
+        s"${tablePrefix}_deleted")
+      val merged = cps(before
+        .unionByName(ids.select(col(idCol).cast("long").as("id")))
+        .distinct())
+      // grew = this call tombstoned at least one NEW id — even with no kept
+      // list to repair, the meta commit below must land so n_vecs (and the
+      // status/drift-guard arithmetic on it) tracks the live corpus
+      val grew = merged.count() > before.count()
+      import graft.sources.Bucketing
+      Bucketing.saveTable(merged, s"${tablePrefix}_deleted")
+      // everything below uses the MATERIALIZED tombstone frame, never a
+      // re-read of the table this call just replaced — a cloned session's
+      // relation cache (streaming foreachBatch) can otherwise serve the
+      // pre-replace file listing mid-call
+      val del = merged
+      // candidate vertices: any row of ANY version naming a tombstone — a
+      // window-free superset that scopes the version window below to the
+      // churn neighborhood instead of sorting the full O(n·kTop) state
+      val namedSuper = graft.sources.Bucketing
+        .freshTableGated(spark, s"${tablePrefix}_kept", token)
+        .filter(col("kver") <= lit(v))
+        .join(broadcast(del.select(col("id").as("nb"))), Seq("nb"),
+          "left_semi")
+        .select(col("v")).distinct()
+      val kept = committedKept(spark, tablePrefix, v, token, Some(namedSuper))
+      // touched = LIVE vertices whose LATEST kept list names ANY tombstoned
+      // id — the full set, not just this call's: a crashed prior delete
+      // left its vertices un-repaired and this pass self-heals them
+      val touched = cps(kept
+        .join(broadcast(del.select(col("id").as("nb"))), Seq("nb"),
+          "left_semi")
+        .select(col("v"))
+        .join(broadcast(del.select(col("id").as("v"))), Seq("v"), "left_anti")
+        .distinct())
+      val vecsLive = liveRows(spark, tablePrefix, "vecs", token)
+        .dropDuplicates("id")
+      // the live count is RE-DERIVED, not decremented: a partially-replayed
+      // delete batch would double-decrement ids already subtracted by the
+      // crashed attempt's committed meta row
+      val nLive = vecsLive.count()
+      // pure replay — every id already tombstoned, every repair committed,
+      // and the committed count already right (the last clause closes the
+      // crash window where a prior attempt wrote tombstones that needed no
+      // repair but died before its meta commit)
+      if (!grew && touched.isEmpty && nLive == m.getAs[Long]("n_vecs")) return
+      // re-probe the touched vertices' bands against the live store —
+      // their FULL candidate set at the frozen (tbl, bucket, sub) layout
+      // (top-k needs what the dead neighbor crowded out, which the kept
+      // state no longer holds)
+      val bandsLive = liveRows(spark, tablePrefix, "bands", token)
+      val tb = bandsLive.join(touched.withColumnRenamed("v", "id"), Seq("id"))
+      val cand = tb
+        .select(col("tbl"), col("bucket"), col("sub"), col("id").as("v"))
+        .join(bandsLive.select(col("tbl"), col("bucket"), col("sub"),
+            col("id").as("nb")),
+          Seq("tbl", "bucket", "sub"))
+        .filter(col("v") =!= col("nb"))
+        .select(col("v"), col("nb")).distinct()
+      import graft.functions.VectorExpressions.dotF
+      val va = vecsLive.select(col("id").as("v"), col("vec").as("va"),
+        col("nrm").as("na"))
+      val vb = vecsLive.select(col("id").as("nb"), col("vec").as("vb"),
+        col("nrm").as("nb_n"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("v")).orderBy(col("cos").desc, col("nb"))
+      val next = v + 1L
+      val reRanked = cand.join(va, Seq("v")).join(vb, Seq("nb"))
+        .select(col("v"), col("nb"),
+          (dotF(col("va"), col("vb")) / (col("na") * col("nb_n"))).as("cos"))
+        .filter(col("cos") >= lit(minCos))
+        .withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= kTop)
+        .select(col("v"), col("nb"), col("cos"))
+      // a touched vertex whose every candidate died gets an EMPTY-LIST
+      // MARKER (nb = v — a value no real list can hold): under the
+      // delta-versioned layout its stale rows stay on disk, and without a
+      // newer version stamp they would keep serving
+      val markers = touched.join(reRanked.select(col("v")), Seq("v"),
+          "left_anti")
+        .select(col("v"), col("v").as("nb"),
+          lit(0.0).cast("double").as("cos"))
+      // TOUCHED-SIZED kept delta (dead vertices' stale rows stay — the
+      // serve-time endpoint anti-joins hide them and compact removes them
+      // physically), materialized before the self-referential insert
+      val keptAppend = cps(reRanked.unionByName(markers)
+        .withColumn("kver", lit(next)))
+      keptAppend.select(col("v"), col("nb"), col("cos"), col("kver"))
+        .write.insertInto(s"${tablePrefix}_kept")
+      // a delete epoch's id is salted so it can never alias a data epoch of
+      // the same id set; no _vecs/_bands row carries it, so the committed
+      // view's semi-join simply never matches it
+      val delEpoch = epochIdOf(
+        del.select(concat(lit("del|"), col("id").cast("string")).as("id")))
+      import spark.implicits._
+      Seq((knnIndexFormatVersion, m.getAs[String]("corpus_tag"), planes,
+        kTop, minCos, m.getAs[Int]("n_tables"), m.getAs[Int]("dim"),
+        m.getAs[Int]("buckets"), next, delEpoch, nLive,
+        m.getAs[Long]("target_occupancy"), m.getAs[Long]("split_occupancy")))
+        .toDF(knnMetaCols: _*)
+        .write.mode("append").saveAsTable(s"${tablePrefix}_meta")
+    } finally cps.freeAll()
   }
 
   /** COMPACT the persisted kNN index: physically rewrite `_vecs`/`_bands`
@@ -2214,47 +2040,47 @@ object SimilarityOps {
     val buckets = m.getAs[Int]("buckets")
     val deleted = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
     if (deleted.isEmpty) return
-    import graft.sources.Bucketing
-    val vecsKeep = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_vecs")
-      .join(broadcast(deleted), Seq("id"), "left_anti")
-      .select(col("id"), col("vec"), col("nrm"), col("epoch"))
-      .localCheckpoint(true)
-    val bandsKeep = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_bands")
-      .join(broadcast(deleted), Seq("id"), "left_anti")
-      .select(col("id"), col("tbl"), col("bucket"), col("sub"), col("epoch"))
-      .localCheckpoint(true)
-    // the committed live kept view collapsed to one physical version (the
-    // delete protocol already repaired every live list naming a dead id,
-    // so dropping dead-v rows is the only filter left)
-    val keptKeep = committedKept(spark, tablePrefix, v, token)
-      .join(broadcast(deleted.select(col("id").as("v"))), Seq("v"),
-        "left_anti")
-      .withColumn("kver", lit(v))
-      .select(col("v"), col("nb"), col("cos"), col("kver"))
-      .localCheckpoint(true)
-    Bucketing.writeBucketed(vecsKeep, s"${tablePrefix}_vecs", Seq("id"),
-      buckets)
-    Bucketing.writeBucketed(bandsKeep, s"${tablePrefix}_bands",
-      Seq("bucket"), buckets)
-    Bucketing.writeBucketed(keptKeep, s"${tablePrefix}_kept", Seq("v"),
-      buckets)
-    import spark.implicits._
-    Bucketing.saveTable(
-      spark.emptyDataset[Long].toDF("id"), s"${tablePrefix}_deleted")
-    // commit: the version bump is the signal that moves every gated
-    // reader's token past its cached (pre-rewrite) file listings. The
-    // salted epoch matches no data row, so committed-epoch visibility of
-    // the preserved stamps is unchanged
-    val compactEpoch = epochIdOf(
-      Seq(s"compact|$v").toDF("id"))
-    Seq((knnIndexFormatVersion, m.getAs[String]("corpus_tag"),
-      m.getAs[Int]("planes"), m.getAs[Int]("ktop"),
-      m.getAs[Double]("min_cos"), m.getAs[Int]("n_tables"),
-      m.getAs[Int]("dim"), buckets, v + 1L, compactEpoch,
-      m.getAs[Long]("n_vecs"), m.getAs[Long]("target_occupancy"),
-      m.getAs[Long]("split_occupancy")))
-      .toDF(knnMetaCols: _*)
-      .write.mode("append").saveAsTable(s"${tablePrefix}_meta")
+    val cps = new CacheScope.Checkpoints
+    try {
+      import graft.sources.Bucketing
+      val vecsKeep = cps(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_vecs")
+        .join(broadcast(deleted), Seq("id"), "left_anti")
+        .select(col("id"), col("vec"), col("nrm"), col("epoch")))
+      val bandsKeep = cps(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_bands")
+        .join(broadcast(deleted), Seq("id"), "left_anti")
+        .select(col("id"), col("tbl"), col("bucket"), col("sub"), col("epoch")))
+      // the committed live kept view collapsed to one physical version (the
+      // delete protocol already repaired every live list naming a dead id,
+      // so dropping dead-v rows is the only filter left)
+      val keptKeep = cps(committedKept(spark, tablePrefix, v, token)
+        .join(broadcast(deleted.select(col("id").as("v"))), Seq("v"),
+          "left_anti")
+        .withColumn("kver", lit(v))
+        .select(col("v"), col("nb"), col("cos"), col("kver")))
+      Bucketing.writeBucketed(vecsKeep, s"${tablePrefix}_vecs", Seq("id"),
+        buckets)
+      Bucketing.writeBucketed(bandsKeep, s"${tablePrefix}_bands",
+        Seq("bucket"), buckets)
+      Bucketing.writeBucketed(keptKeep, s"${tablePrefix}_kept", Seq("v"),
+        buckets)
+      import spark.implicits._
+      Bucketing.saveTable(
+        spark.emptyDataset[Long].toDF("id"), s"${tablePrefix}_deleted")
+      // commit: the version bump is the signal that moves every gated
+      // reader's token past its cached (pre-rewrite) file listings. The
+      // salted epoch matches no data row, so committed-epoch visibility of
+      // the preserved stamps is unchanged
+      val compactEpoch = epochIdOf(
+        Seq(s"compact|$v").toDF("id"))
+      Seq((knnIndexFormatVersion, m.getAs[String]("corpus_tag"),
+        m.getAs[Int]("planes"), m.getAs[Int]("ktop"),
+        m.getAs[Double]("min_cos"), m.getAs[Int]("n_tables"),
+        m.getAs[Int]("dim"), buckets, v + 1L, compactEpoch,
+        m.getAs[Long]("n_vecs"), m.getAs[Long]("target_occupancy"),
+        m.getAs[Long]("split_occupancy")))
+        .toDF(knnMetaCols: _*)
+        .write.mode("append").saveAsTable(s"${tablePrefix}_meta")
+    } finally cps.freeAll()
   }
 
   /** One-row OPERATING-POINT status of a persisted kNN index — the
@@ -2351,9 +2177,10 @@ object SimilarityOps {
         aggregate(col("q"), lit(0L), (acc, x) => acc + abs(x)).as("q_l1"))
   }
 
-  /** Fully distributed IVF ANN: same coarse-quantizer semantics as
-    * [[ivfTopK]], but the inverted file NEVER touches the driver — only the
-    * fitted centroids (a model, nCells·dim doubles) are broadcast. Cell
+  /** Fully distributed IVF (inverted-file) ANN: a KMeans coarse quantizer
+    * assigns every corpus vector to a cell; each query probes its `nProbe`
+    * nearest centroids and exact-reranks only those cells' members. The
+    * inverted file NEVER touches the driver — only the fitted centroids (a model, nCells·dim doubles) are broadcast. Cell
     * membership stays a DataFrame keyed by `cell`; each query explodes to
     * its `nProbe` nearest cells and the probe ⋈ member join shuffles on the
     * cell key, followed by a codegen'd cosine rerank and a partitioned
@@ -2603,26 +2430,33 @@ object SimilarityOps {
     *     lifted (the banded-index append contract);
     *   - an id already in `_cells` skips, so a replayed batch inserts
     *     nothing twice. The `_cells` member-id column (`memberId`) is
-    *     semi-joined against the broadcast batch ids first, so only the
-    *     batch-sized set of present ids joins the tombstones in the one
-    *     broadcast the batch is anti-joined against: one pruned scan and
+    *     semi-joined against the broadcast batch ids, so only the
+    *     batch-sized set of present ids is anti-joined: one pruned scan and
     *     no shuffle exchange, whatever the corpus size.
-    * Returned as an EAGER local checkpoint (the banded append's rule): the
-    * plan reads `_cells`, which the caller's insert mutates. The caller
-    * frees it with [[CacheScope.freeCheckpoint]] once the insert is done.
+    * `batch` is evaluated ONCE: its tombstone-filtered (`idCol`, `vecCol`)
+    * projection is checkpointed, and both the broadcast ids and the
+    * admitted rows read that checkpoint. The result is an EAGER local
+    * checkpoint too (the banded append's rule): the plan reads `_cells`,
+    * which the caller's insert mutates. The caller frees it with
+    * [[CacheScope.freeCheckpoint]] once the insert is done.
     */
   private def ivfAdmitted(batch: DataFrame, tablePrefix: String, memberId: String,
                           idCol: String, vecCol: String): DataFrame = {
     val spark = batch.sparkSession
     val dels = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
-    val batchIds = batch.select(col(idCol).cast("long").as("batch_id"))
-    val present = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_cells")
-      .select(col(memberId).as("skip_id"))
-      .join(broadcast(batchIds), col("skip_id") === col("batch_id"), "left_semi")
-    val skip = dels.select(col("id").as("skip_id")).union(present)
-    batch.join(broadcast(skip), col(idCol).cast("long") === col("skip_id"), "left_anti")
+      .select(col("id").as("skip_id"))
+    val live = batch.join(broadcast(dels), col(idCol).cast("long") === col("skip_id"),
+        "left_anti")
       .select(col(idCol), col(vecCol))
       .localCheckpoint(eager = true)
+    try {
+      val present = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_cells")
+        .select(col(memberId).as("skip_id"))
+        .join(broadcast(live.select(col(idCol).cast("long").as("batch_id"))),
+          col("skip_id") === col("batch_id"), "left_semi")
+      live.join(broadcast(present), col(idCol).cast("long") === col("skip_id"), "left_anti")
+        .localCheckpoint(eager = true)
+    } finally CacheScope.freeCheckpoint(live)
   }
 
   /** LOGICAL delete from a persisted IVF or IVF-PQ index — the embedding

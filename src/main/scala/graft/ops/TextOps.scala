@@ -26,11 +26,11 @@ object TextOps {
       "for", "with", "as", "at", "by", "be", "this", "that", "are")
 
   /** Count of tokens that appear in `vocab`. Integer arithmetic — exact. */
-  def vocabHits(toks: Column, vocab: Seq[String]): Column =
+  private def vocabHits(toks: Column, vocab: Seq[String]): Column =
     size(filter(toks, t => array_contains(typedlit(vocab), t)))
 
   /** Sum of token lengths (for mean-token-length style stats). */
-  def totalTokenLen(toks: Column): Column =
+  private def totalTokenLen(toks: Column): Column =
     aggregate(transform(toks, t => length(t)), lit(0), (acc, x) => acc + x)
 
   /** Document LENGTH HISTOGRAM: token counts bucketed to `bucketWidth`-wide
@@ -77,7 +77,7 @@ object TextOps {
     * interpreted higher-order functions re-evaluate an inlined tokenizer
     * per reference.
     */
-  def qualityScore(toks: Column): Column = {
+  private def qualityScore(toks: Column): Column = {
     val nTok = size(toks).cast("double")
     val distinctRatio = size(array_distinct(toks)).cast("double") / nTok
     val stopRatio = vocabHits(toks, enStopwords).cast("double") / nTok
@@ -341,14 +341,6 @@ object TextOps {
       .filter(col("pr") <= keepFrac)
       .select(col("doc_id"), col(langCol), col("quality"))
   }
-
-  /** Full-content fingerprint (md5 hex) — the exact-dedup key. */
-  def fingerprintMd5(text: Column): Column = md5(text)
-
-  /** 64-bit content fingerprint via xxhash64 (cheaper than md5; Spark-only
-    * semantics, used by dedup/simhash internals).
-    */
-  def fingerprint64(text: Column): Column = xxhash64(text)
 
   /** Word k-shingles: sliding windows of k consecutive tokens joined by a
     * space — the standard unit for near-dup fingerprinting (MinHash/SimHash).
@@ -928,17 +920,6 @@ object TextOps {
         lag(col("lnf_micro"), 1).over(Window.orderBy(col("rank"))) - col("lnf_micro"))
       .select(col("rank"), col("term"), col("freq"),
         col("lnf_micro"), col("drop_micro"))
-  }
-
-  /** Rolling-hash document fingerprint: min/max/count over shingle hashes —
-    * a compact content signature robust to small edits at the ends.
-    */
-  def rollingFingerprint(text: Column, k: Int = 5): DataFrame => DataFrame = df => {
-    val sh = shingles(tokens(text), k)
-    val hashes = transform(sh, s => xxhash64(s))
-    df.withColumn("fp_min", array_min(hashes))
-      .withColumn("fp_max", array_max(hashes))
-      .withColumn("fp_n", size(hashes))
   }
 
   /** Gopher-style repetition filters, per document: the most frequent
@@ -1860,10 +1841,9 @@ object TextOps {
     * merge chain (the trainer's own representation), roll up per group.
     * Same output shape, so the bake-off stacks all three trainers.
     */
-  def wordPieceFertility(documents: DataFrame, numMerges: Int = 6,
-                         groupCol: String = "source",
-                         textCol: String = "text",
-                         wordSampleK: Long = 1): DataFrame = {
+  private def wordPieceFertility(documents: DataFrame, numMerges: Int,
+                                 groupCol: String, textCol: String,
+                                 wordSampleK: Long): DataFrame = {
     val mergeRows = trainWordPiece(documents, numMerges, textCol, wordSampleK)
       .orderBy(col("merge_rank")).collect()
     val merges = mergeRows.map(r => (r.getString(1), r.getString(2))).toSeq
@@ -1880,7 +1860,7 @@ object TextOps {
                                    merges: Seq[(String, String)],
                                    groupCol: String,
                                    textCol: String,
-                                   wordSampleK: Long = 1): DataFrame = {
+                                   wordSampleK: Long): DataFrame = {
     // under sampling, fertility restricts to the SAMPLED words too (the
     // oracle's inner join against the trained segmentations does the same).
     // Registered: the BPE and WordPiece rollups build the IDENTICAL
@@ -2072,55 +2052,6 @@ object TextOps {
       .as[String]
       .map(w => (w, viterbiSegment(w, bc.value, maxPieceLen,
         allowUnk = true).toArray))
-      .toDF(wordCol, "symbols")
-    df.join(segs, wordCol)
-  }
-
-  /** GREEDY LONGEST-MATCH-FIRST segmentation — BERT's WordPiece INFERENCE
-    * rule (MaxMatch): at each position take the LONGEST vocabulary piece
-    * matching the remaining prefix; a position no piece covers makes the
-    * whole word `unk` (the BERT behavior, total by construction). This is
-    * the production-inference counterpart of replaying
-    * [[trainWordPiece]]'s merge chain through [[applyBpeMerges]]: the two
-    * AGREE on most words but are NOT the same function (canonical
-    * divergence: vocab {ab, bc, a, b, c} segments "abc" as [ab, c]
-    * greedily but a merge chain could produce [a, bc]) — ship whichever
-    * rule the serving tokenizer uses; this one matches HF/BERT serving.
-    * No `##` continuation forms: [[trainWordPiece]]'s vocabulary is
-    * position-free (documented there as this trainer's simplification).
-    *
-    * `vocab` = the trained pieces (merge table `merged` column + the
-    * corpus's single characters, typically). Adds `symbols` under the
-    * [[applyBpeMerges]] contract. Scale shape: greedy scan on DISTINCT
-    * words against the broadcast vocabulary + one word-keyed join back —
-    * [[applyUnigramLm]]'s exact shape.
-    */
-  def applyWordPieceGreedy(df: DataFrame, vocab: Seq[String],
-                           wordCol: String = "w",
-                           unk: String = "[UNK]"): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val maxLen = vocab.foldLeft(1)((m, p) => math.max(m, p.length))
-    val bc = spark.sparkContext.broadcast(vocab.toSet)
-    val segs = df.select(col(wordCol).cast("string").as("w")).distinct()
-      .as[String]
-      .map { w =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        var p = 0
-        var stuck = false
-        while (p < w.length && !stuck) {
-          var l = math.min(maxLen, w.length - p)
-          var found: String = null
-          while (l >= 1 && found == null) {
-            val cand = w.substring(p, p + l)
-            if (bc.value.contains(cand)) found = cand
-            l -= 1
-          }
-          if (found == null) stuck = true
-          else { out += found; p += found.length }
-        }
-        (w, if (stuck) Array(unk) else out.toArray)
-      }
       .toDF(wordCol, "symbols")
     df.join(segs, wordCol)
   }

@@ -114,6 +114,24 @@ class BenchReportSpec extends AnyFunSuite {
     assert(line.length < 2000, s"compact line too long: ${line.length}")
   }
 
+  test("setup_errors: failed setup steps ride in both lines, the compact one capped at 3 in step order") {
+    val merged = Map[String, Either[String, Double]]("q01_x" -> Right(2.0))
+    val steps = Seq("warmup" -> "boom \"w\"\n", "graft_q90_ivf" -> "IOException: gone",
+      "graft_q108_ivfpq" -> "x", "served_knn_edges" -> "y")
+    val full = Bench.renderJson(merged, "/d", Map.empty, steps)
+    assert(full.contains("\"setup_errors\":{\"warmup\":\"boom  w  \",\"graft_q90_ivf\":" +
+      "\"IOException: gone\",\"graft_q108_ivfpq\":\"x\",\"served_knn_edges\":\"y\"}"), full)
+    assert(full.split("\n").length === 1)
+    val compact = Bench.renderCompactJson(merged, "/d", Map.empty, None, steps)
+    assert(compact.contains("\"n_setup_errors\":4,\"setup_errors\":{\"warmup\":" +
+      "\"boom  w  \",\"graft_q90_ivf\":\"IOException: gone\",\"graft_q108_ivfpq\":\"x\"}"),
+      compact)
+    // a clean setup still states it, in both lines
+    assert(Bench.renderJson(merged, "/d").contains("\"setup_errors\":{}"))
+    assert(Bench.renderCompactJson(merged, "/d", Map.empty, None)
+      .contains("\"n_setup_errors\":0,\"setup_errors\":{}"))
+  }
+
   test("renderJson: retimed floors ride beside the sweep numbers") {
     val merged = Map[String, Either[String, Double]]("q01_x" -> Right(4.0))
     val json = Bench.renderJson(merged, "/d", Map("q01_x" -> 1.5))

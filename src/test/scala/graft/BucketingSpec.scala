@@ -718,6 +718,25 @@ class BucketingSpec extends SparkTestBase {
     }
   }
 
+  test("appendToIvfIndex evaluates its batch once") {
+    import graft.ops.SimilarityOps
+    val emb = Tables(spark, SparkTestBase.sf001, "embeddings")
+    val corpus = emb.filter(col("vec_id") < 150)
+    SimilarityOps.writeIvfIndex(corpus, "t_ivf_once", nCells = 4, buckets = 4)
+    try {
+      val rows = emb.filter(col("vec_id") >= 150 && col("vec_id") < 220)
+      val n = rows.count()
+      // every evaluation of the batch's plan passes its rows through the map
+      val reads = spark.sparkContext.longAccumulator("batch rows read")
+      val batch = spark.createDataFrame(
+        rows.rdd.map { r => reads.add(1L); r }, rows.schema)
+      SimilarityOps.appendToIvfIndex(batch, "t_ivf_once")
+      assert(reads.value === n, "the admission step must read the batch once")
+      assert(spark.table("t_ivf_once_cells").count() === corpus.count() + n)
+    } finally Seq("cells", "centroids", "meta", "deleted").foreach(s =>
+      spark.sql(s"DROP TABLE IF EXISTS t_ivf_once_$s"))
+  }
+
   test("index lifecycle writes free the checkpoints they materialize") {
     import graft.ops.{DedupOps, SimilarityOps}
     import spark.implicits._
@@ -1234,6 +1253,69 @@ class BucketingSpec extends SparkTestBase {
     } finally Seq("cells", "centroids", "meta", "deleted").foreach(s => {
       spark.sql(s"DROP TABLE IF EXISTS t_ivf_mnt_$s")
       spark.sql(s"DROP TABLE IF EXISTS t_ivf_mref_$s")
+    })
+  }
+
+  test("maintainIvfPqIndexFromDiff: delta-maintained == frozen-model rebuild at exhaustive probe; re-add compacts") {
+    import graft.ops.{RelationalOps, SimilarityOps}
+    val emb = Tables(spark, SparkTestBase.sf001, "embeddings")
+    val queries = emb.filter(col("vec_id") % 25 === 7)
+    // old snapshot: md5 bucket != 0; new: bucket != 1, bucket-2 vectors
+    // revised (negated) — the diff carries removed, changed and added ids
+    val b = pmod(graft.ops.DetHash.md5Hash60(
+      concat(lit("esnap|"), col("vec_id").cast("string"))), lit(10L))
+    val oldSnap = emb.withColumn("b", b).filter(col("b") =!= 0).drop("b")
+    val newSnap = emb.withColumn("b", b).filter(col("b") =!= 1)
+      .withColumn("embedding", when(col("b") === 2,
+        transform(col("embedding"), x => -x)).otherwise(col("embedding")))
+      .drop("b")
+    def sig(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("sig", col("embedding").cast("string"))
+    def maintain(from: org.apache.spark.sql.DataFrame,
+                 to: org.apache.spark.sql.DataFrame, tag: String): Unit =
+      SimilarityOps.maintainIvfPqIndexFromDiff(to,
+        RelationalOps.snapshotDiff(sig(from), sig(to), "vec_id", "sig"),
+        "t_pq_mnt", newCorpusTag = tag)
+    // both indexes train their coarse quantizer and codebook on the same
+    // base, so both hold the same frozen models
+    Seq("t_pq_mnt", "t_pq_mref").foreach(prefix =>
+      SimilarityOps.ensureIvfPqIndex(oldSnap, prefix, corpusTag = "v1",
+        nCells = 4, buckets = 4))
+    try {
+      // exhaustive probes (nProbe = nCells): results depend only on the
+      // live codes, so the two indexes compare row for row
+      def probe(prefix: String) =
+        SimilarityOps.ivfPqTopKPersisted(queries, prefix, k = 5, nProbe = 4)
+          .collect().map(_.toString).sorted.toSeq
+      // reference: every base id tombstoned and compacted away, then the
+      // new snapshot appended under the frozen models
+      SimilarityOps.deleteFromIvfIndex(oldSnap.select(col("vec_id")), "t_pq_mref")
+      SimilarityOps.compactIvfIndex("t_pq_mref")
+      SimilarityOps.appendToIvfPqIndex(newSnap, "t_pq_mref")
+      maintain(oldSnap, newSnap, "v2")
+      val rebuilt = probe("t_pq_mref")
+      assert(rebuilt.nonEmpty)
+      assert(probe("t_pq_mnt") === rebuilt,
+        "delta maintenance must be probe-equivalent to a frozen-model rebuild")
+      assert(spark.table("t_pq_mnt_meta").head()
+        .getAs[String]("corpus_tag") === "v2")
+      // changed vectors forced a compact, so no tombstones linger
+      assert(spark.table("t_pq_mnt_deleted").count() === 0)
+      // REMOVALS-ONLY cycle then RE-ADD: pure removals stay a logical
+      // delete; the re-add must compact the standing tombstones, or the
+      // returning vectors would vanish in the append's anti-join
+      val snap3 = newSnap.filter(col("vec_id") % 9 =!= 3)
+      maintain(newSnap, snap3, "v3")
+      assert(spark.table("t_pq_mnt_deleted").count() > 0,
+        "a removals-only delta stays a logical delete")
+      maintain(snap3, newSnap, "v4")
+      assert(spark.table("t_pq_mnt_deleted").count() === 0,
+        "the re-add must have compacted the standing tombstones")
+      assert(probe("t_pq_mnt") === rebuilt,
+        "the v3/v4 round trip must restore the v2 answers")
+    } finally Seq("cells", "centroids", "codebook", "meta", "deleted").foreach(s => {
+      spark.sql(s"DROP TABLE IF EXISTS t_pq_mnt_$s")
+      spark.sql(s"DROP TABLE IF EXISTS t_pq_mref_$s")
     })
   }
 

@@ -236,26 +236,6 @@ class OpsSpec extends SparkTestBase {
     scope.release()
   }
 
-  test("simHashBucketStats: cap headroom on the fixture corpus, truncation visible on a pathological one") {
-    val scope = CacheScope()
-    val docs = Tables(spark, SparkTestBase.sf001, "documents")
-    val fps = DedupOps.simHash60(DedupOps.shingleHashRows(docs, scope = scope))
-    val stats = DedupOps.simHashBucketStats(fps).collect()(0)
-    // verify-scale guarantee for q30: no bucket approaches the default cap,
-    // so the pigeonhole recall claim is unconditional on this corpus
-    assert(stats.getAs[Long]("buckets_over_cap") === 0L)
-    assert(stats.getAs[Long]("max_bucket") < 1000L)
-    assert(stats.getAs[Long]("n_buckets") > 0L)
-    // the pathological corpus from the cap test IS visible in the stats
-    val dup = (0L until 12L).map(i => (i, "the same exact duplicated text again and again"))
-      .toDF("doc_id", "text")
-    val dupFps = DedupOps.simHash60(DedupOps.shingleHashRows(dup, scope = scope))
-    val dupStats = DedupOps.simHashBucketStats(dupFps, maxBucket = 5).collect()(0)
-    assert(dupStats.getAs[Long]("buckets_over_cap") > 0L)
-    assert(dupStats.getAs[Long]("max_bucket") === 12L)
-    scope.release()
-  }
-
   test("connectedComponents: path graph + isolated pair + singleton, logarithmic rounds") {
     // a 32-vertex path is the worst case for plain min-propagation (31
     // rounds); pointer jumping must converge well inside maxIter=25
@@ -875,27 +855,20 @@ class OpsSpec extends SparkTestBase {
     ).toDF("vec_id", "embedding")
   }
 
-  test("dot/norm/cosine: HOF, unrolled, and native-expression forms agree bit-for-bit") {
+  test("dot: HOF, unrolled, and native-expression forms agree bit-for-bit") {
     val df = vecsDf.select(
       SimilarityOps.dot($"embedding", $"embedding").as("d"),
       SimilarityOps.dotU($"embedding", $"embedding", 4).as("du"),
-      graft.functions.VectorExpressions.dotF($"embedding", $"embedding").as("df_"),
-      SimilarityOps.norm($"embedding").as("n"),
-      SimilarityOps.normU($"embedding", 4).as("nu"))
+      graft.functions.VectorExpressions.dotF($"embedding", $"embedding").as("df_"))
     df.collect().foreach { r =>
       assert(r.getDouble(0) === r.getDouble(1))
       assert(r.getDouble(0) === r.getDouble(2)) // custom Expression parity
-      assert(r.getDouble(3) === r.getDouble(4))
     }
     // SQL surface via SparkSessionExtensions (spark.sql.extensions=graft.GraftExtensions)
     val viaSql = spark.sql(
       "SELECT dot_f(CAST(array(1.0, 2.0) AS array<float>), CAST(array(3.0, 4.0) AS array<float>))")
       .head().getDouble(0)
     assert(viaSql === 11.0)
-    val c01 = vecsDf.filter($"vec_id" === 0).crossJoin(
-        vecsDf.filter($"vec_id" === 1).select($"embedding".as("e2")))
-      .select(SimilarityOps.cosineU($"embedding", $"e2", 4).as("c")).head().getDouble(0)
-    assert(c01 > 0.99 && c01 <= 1.0)
   }
 
   test("cosinePairsExact: finds parallel pair, excludes orthogonal/anti, exact values") {
@@ -949,7 +922,7 @@ class OpsSpec extends SparkTestBase {
     assert(rows.exists(r => r.getLong(0) === 0L && r.getLong(1) === 1L))
   }
 
-  test("ivfTopK: high recall vs brute force on clustered vectors") {
+  test("ivfTopKDistributed: high recall vs brute force on clustered vectors") {
     // 3 tight clusters of 8 vectors in 4-d: IVF with nProbe=2 must recover
     // each vector's true top-3 (same-cluster members dominate)
     val rnd = new scala.util.Random(7)
@@ -959,26 +932,13 @@ class OpsSpec extends SparkTestBase {
       (i.toLong, base.map(x => x + rnd.nextFloat() * 0.1f))
     }
     val df = data.toDF("vec_id", "embedding")
-    val ivf = SimilarityOps.ivfTopK(df, k = 3, nCells = 3, nProbe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val brute = SimilarityOps.bruteForceTopK(df, df, 3, dim = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = ivf.intersect(brute).size.toDouble / brute.size
-    assert(recall > 0.95, s"IVF recall $recall")
-
-    // the distributed variant (index never collected to the driver — only
-    // the centroids travel) must hit the same recall bar
+    // the index is never collected to the driver — only the centroids travel
     val ivfDist = SimilarityOps.ivfTopKDistributed(df, k = 3, nCells = 3, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recallDist = ivfDist.intersect(brute).size.toDouble / brute.size
     assert(recallDist > 0.95, s"distributed IVF recall $recallDist")
-  }
-
-  test("ivfTopK: fails fast past its driver-collect row bound") {
-    val e = intercept[IllegalArgumentException] {
-      SimilarityOps.ivfTopK(vecsDf, k = 1, nCells = 2, nProbe = 1, maxRows = 2L)
-    }
-    assert(e.getMessage.contains("ivfTopKDistributed"))
   }
 
   test("srpNearDupPairs: exact precision, high recall on true near-dups") {
@@ -1012,16 +972,6 @@ class OpsSpec extends SparkTestBase {
       .collect().toSet
     assert(sub === all, "query-subset form must reproduce lshTopK's rows")
     assert(sub.nonEmpty)
-    val allMp = SimilarityOps.lshTopKMultiProbe(vecsDf, k = 2, nPlanes = 4,
-        nTables = 8, dim = 4)
-      .filter($"query_id" < 2).collect().toSet
-    val subMp = SimilarityOps.lshTopKMultiProbeForQueries(vecsDf,
-        vecsDf.filter($"vec_id" < 2), k = 2, nPlanes = 4, nTables = 8,
-        dim = 4)
-      .collect().toSet
-    assert(subMp === allMp,
-      "multi-probe subset form must reproduce lshTopKMultiProbe's rows")
-    assert(subMp.nonEmpty)
   }
 
   test("lshTopK: tiny maxBucket drops hot buckets but the plan stays bounded") {
@@ -1206,7 +1156,7 @@ class OpsSpec extends SparkTestBase {
 
   // ---- multimodal ----
 
-  test("multimodal: sniff formats via magic bytes, chunking, stub decode") {
+  test("multimodal: sniff formats via magic bytes, chunking") {
     val payloads = docsDf.select($"doc_id",
       MultimodalOps.demoPayload($"doc_id", $"text").as("p"))
     val meta = MultimodalOps.payloadMeta(payloads, "p").collect()
@@ -1224,160 +1174,13 @@ class OpsSpec extends SparkTestBase {
     val r0 = payloads.select(MultimodalOps.chunks($"p", 7).as("cs"), $"p").head
     val joined = r0.getSeq[Array[Byte]](0).toArray.flatten
     assert(java.util.Arrays.equals(joined, r0.getAs[Array[Byte]](1)))
-    // deterministic decode stub: plumbing produces one typed row per input
-    val decoded = MultimodalOps.decodeImageStub(payloads, "doc_id", "p").collect()
-    assert(decoded.length === 6)
-    assert(decoded.forall(d => d.width > 0 && d.height > 0 && d.meanPixel >= 0))
   }
 
-  test("multimodal: REAL javax.imageio decode — PNG and BMP fixtures, undecodable rows dropped") {
-    import java.awt.image.BufferedImage
-    def encode(im: BufferedImage, fmt: String): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(im, fmt, bos), s"JDK must ship a $fmt writer")
-      bos.toByteArray
-    }
-    // 1x1 PNG with one known RGB pixel: mean over bands is exact
-    val png1 = new BufferedImage(1, 1, BufferedImage.TYPE_INT_RGB)
-    png1.setRGB(0, 0, (10 << 16) | (20 << 8) | 30)
-    // 2x1 BMP: pixels (0,0,0) and (90,120,150) -> band mean = 60
-    val bmp = new BufferedImage(2, 1, BufferedImage.TYPE_INT_RGB)
-    bmp.setRGB(0, 0, 0)
-    bmp.setRGB(1, 0, (90 << 16) | (120 << 8) | 150)
-    // hostile rows a crawl WILL contain: non-image bytes, a NULL payload,
-    // and a recognized-magic-but-corrupt PNG — all must DROP, never crash
-    val corruptPng = encode(png1, "png").take(12)
-    val rows = Seq(
-      (0L, encode(png1, "png")),
-      (1L, encode(bmp, "bmp")),
-      (2L, "definitely not an image".getBytes("UTF-8")),
-      (5L, null.asInstanceOf[Array[Byte]]),
-      (6L, corruptPng))
-    val df = rows.toDF("doc_id", "p")
-    // the payloads really carry the formats they claim (same sniff as q31)
-    val sniffed = MultimodalOps.payloadMeta(df, "p").collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("format")).toMap
-    assert(sniffed(0L) === "png")
-    assert(sniffed(2L) === "bin")
-    val out = MultimodalOps.decodeImage(df, "doc_id", "p").collect()
-      .map(d => d.id -> d).toMap
-    assert(out.keySet === Set(0L, 1L), "undecodable row must be dropped")
-    assert(out(0L).width === 1 && out(0L).height === 1 && out(0L).channels === 3)
-    assert(out(0L).meanPixel === 20.0) // (10+20+30)/3
-    assert(out(1L).width === 2 && out(1L).height === 1 && out(1L).channels === 3)
-    assert(out(1L).meanPixel === 60.0) // (0+0+0+90+120+150)/6
-    // round-trip invariance: a decode of the re-encoded decode matches dims
-    val reenc = Seq((7L, encode(png1, "bmp"))).toDF("doc_id", "p")
-    val r = MultimodalOps.decodeImage(reenc, "doc_id", "p").head()
-    assert(r.width === 1 && r.height === 1 && r.meanPixel === 20.0)
-  }
-
-  // shared fixture encoder for the real image stages
+  // fixture encoder for the video-frame tests
   private def encodeImage(im: java.awt.image.BufferedImage, fmt: String): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(im, fmt, bos), s"JDK must ship a $fmt writer")
     bos.toByteArray
-  }
-
-  test("multimodal: REAL resize — box-filter golden pixels, PNG round-trip, drops") {
-    import java.awt.image.BufferedImage
-    // 2x2 with known pixels; 1x1 box average is exact: r=70 g=80 b=90
-    val im2 = new BufferedImage(2, 2, BufferedImage.TYPE_INT_RGB)
-    im2.setRGB(0, 0, (10 << 16) | (20 << 8) | 30)
-    im2.setRGB(1, 0, (50 << 16) | (60 << 8) | 70)
-    im2.setRGB(0, 1, (90 << 16) | (100 << 8) | 110)
-    im2.setRGB(1, 1, (130 << 16) | (140 << 8) | 150)
-    // 1x1 for the upscale direction
-    val im1 = new BufferedImage(1, 1, BufferedImage.TYPE_INT_RGB)
-    im1.setRGB(0, 0, (10 << 16) | (20 << 8) | 30)
-    val df = Seq(
-      (0L, encodeImage(im2, "png")),
-      (1L, encodeImage(im1, "bmp")), // cross-format: decode is format-agnostic
-      (2L, "not an image".getBytes("UTF-8")),
-      (3L, null.asInstanceOf[Array[Byte]])).toDF("doc_id", "p")
-    val down = MultimodalOps.resizeImage(df.filter($"doc_id" === 0), "doc_id", "p", 1, 1).collect()
-    assert(down.length === 1 && down(0).width === 1 && down(0).height === 1)
-    // re-decode the re-encoded PNG: the single pixel is the exact box mean
-    val reDec = MultimodalOps.decodeImage(
-      Seq((0L, down(0).payload)).toDF("doc_id", "p"), "doc_id", "p").head()
-    assert(reDec.width === 1 && reDec.height === 1)
-    assert(reDec.meanPixel === 80.0) // (70+80+90)/3
-    // upscale: every target pixel replicates the source pixel
-    val up = MultimodalOps.resizeImage(df.filter($"doc_id" === 1), "doc_id", "p", 3, 2).collect()
-    val upDec = MultimodalOps.decodeImage(
-      Seq((1L, up(0).payload)).toDF("doc_id", "p"), "doc_id", "p").head()
-    assert(upDec.width === 3 && upDec.height === 2)
-    assert(upDec.meanPixel === 20.0) // (10+20+30)/3 everywhere
-    // undecodable rows drop; decodable survive; output is valid PNG by sniff
-    val all = MultimodalOps.resizeImage(df, "doc_id", "p", 2, 2)
-    assert(all.collect().map(_.id).toSet === Set(0L, 1L))
-    val sniffed = MultimodalOps.payloadMeta(all.toDF(), "payload").collect()
-    assert(sniffed.forall(_.getAs[String]("format") === "png"))
-    // bit-determinism: same input → identical bytes (content-address safe)
-    val again = MultimodalOps.resizeImage(df, "doc_id", "p", 2, 2).collect()
-    assert(all.collect().sortBy(_.id).map(_.payload.toSeq).toSeq ===
-      again.sortBy(_.id).map(_.payload.toSeq).toSeq)
-  }
-
-  test("multimodal: REAL DCT features — golden DC, AC≈0 on uniform, ANN chain") {
-    import java.awt.image.BufferedImage
-    def gray(w: Int, h: Int, v: Int): BufferedImage = {
-      val im = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) im.setRGB(x, y, (v << 16) | (v << 8) | v)
-      im
-    }
-    // horizontal gradient and its mirror: same mean luma, opposite AC phase
-    def grad(w: Int, h: Int, flip: Boolean): BufferedImage = {
-      val im = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) {
-        val v = ((if (flip) w - 1 - x else x) * 255) / (w - 1)
-        im.setRGB(x, y, (v << 16) | (v << 8) | v)
-      }
-      im
-    }
-    // near-dup of the gradient: one corner pixel nudged
-    val nearDup = grad(16, 16, flip = false)
-    nearDup.setRGB(0, 0, (5 << 16) | (5 << 8) | 5)
-    val df = Seq(
-      (0L, encodeImage(gray(5, 7, 100), "png")),
-      (1L, encodeImage(grad(16, 16, flip = false), "png")),
-      (2L, encodeImage(grad(16, 16, flip = true), "png")),
-      (3L, encodeImage(nearDup, "png")),
-      (4L, "junk".getBytes("UTF-8"))).toDF("doc_id", "p")
-    val feats = MultimodalOps.extractFeatures(df, "doc_id", "p", gridN = 32, featN = 8)
-    assert(feats.columns === Array("doc_id", "embedding"))
-    val byId = feats.collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getSeq[Float](1)).toMap
-    assert(byId.keySet === Set(0L, 1L, 2L, 3L), "undecodable row must drop")
-    // uniform gray 100: luma 100 everywhere; orthonormal DC = 100*gridN = 3200
-    val uni = byId(0L)
-    assert(uni.length === 64)
-    assert(math.abs(uni(0) - 3200.0) < 1e-3)
-    assert(uni.drop(1).forall(c => math.abs(c) < 1e-3), "uniform image has zero AC energy")
-    // perceptual ordering: near-dup of the gradient beats the mirrored one
-    def cos(a: Seq[Float], b: Seq[Float]): Double = {
-      val dot = a.zip(b).map { case (x, y) => x.toDouble * y }.sum
-      dot / (math.sqrt(a.map(x => x.toDouble * x).sum) * math.sqrt(b.map(x => x.toDouble * x).sum))
-    }
-    assert(cos(byId(1L), byId(3L)) > 0.999)
-    assert(cos(byId(1L), byId(3L)) > cos(byId(1L), byId(2L)))
-    // the chain feeds SimilarityOps unchanged (embeddings-table contract)
-    val corpus = feats.withColumnRenamed("doc_id", "vec_id")
-    val top = SimilarityOps.bruteForceTopK(
-      corpus, corpus.filter($"vec_id" === 3), 2, dim = 64)
-      .orderBy($"rank").collect()
-    assert(top.head.getAs[Long]("neighbor_id") === 1L,
-      "nearest neighbor of the near-dup is its source image")
-  }
-
-  test("multimodal: frame sampling thins payloads without decode") {
-    val payloads = docsDf.select($"doc_id",
-      MultimodalOps.demoPayload($"doc_id", $"text").as("p"))
-    val frames = payloads.select(
-      MultimodalOps.sampleFrames($"p", 7, 2).as("f"),
-      MultimodalOps.chunks($"p", 7).as("all")).head
-    assert(frames.getSeq[Array[Byte]](0).length ===
-      (frames.getSeq[Array[Byte]](1).length + 1) / 2)
   }
 
   test("decodeVideoFrames: real MJPEG-AVI decode — header facts, frame features, sampling; junk drops") {
@@ -1685,31 +1488,6 @@ class OpsSpec extends SparkTestBase {
     assert(byWord("pun") === Seq("pu", "n"))
   }
 
-  test("applyWordPieceGreedy: MaxMatch semantics, UNK totality, divergence from merge replay pinned") {
-    // trained-vocab shape: singles + the two merges from the test above
-    val vocab = Seq("h", "u", "g", "p", "n", "b", "s", "gs", "pu")
-    val seg = TextOps.applyWordPieceGreedy(
-      Seq("hugs", "pun", "pug", "quiz").toDF("w"), vocab)
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    assert(seg("hugs") === Seq("h", "u", "gs"))
-    assert(seg("pun") === Seq("pu", "n"))
-    assert(seg("pug") === Seq("pu", "g"))
-    assert(seg("quiz") === Seq("[UNK]"), "uncovered char -> whole word UNK")
-    // canonical greedy-vs-chain divergence: greedy takes the longest
-    // prefix even when it strands the rest on smaller pieces
-    val div = TextOps.applyWordPieceGreedy(
-      Seq("abc").toDF("w"), Seq("ab", "bc", "a", "b", "c"))
-      .collect()(0).getSeq[String](1)
-    assert(div === Seq("ab", "c"))
-    // greedy = longest FIRST, not fewest pieces overall: "abcd" over
-    // {abc, ab, cd, a, b, c, d} goes [abc, d] not [ab, cd] — same count
-    // here, but the tiebreak is positional, pinned
-    val pos = TextOps.applyWordPieceGreedy(
-      Seq("abcd").toDF("w"), Seq("abc", "ab", "cd", "a", "b", "c", "d"))
-      .collect()(0).getSeq[String](1)
-    assert(pos === Seq("abc", "d"))
-  }
-
   test("trainBpe merge fold handles runs leftmost-first (the replace-semantics lemma)") {
     // [a,a,a,a] + (a,a) must give [aa,aa], and [a,a,a] must give [aa,a]
     val segged = TextOps.applyBpeMerges(Seq("aaaa", "aaa").toDF("w"), Seq(("a", "a")))
@@ -1748,55 +1526,6 @@ class OpsSpec extends SparkTestBase {
       get_json_object(col("props"), "$.k").cast("long").as("stringly"))
     assert(both.filter(col("typed") =!= col("stringly")).count() === 0L)
     assert(both.filter(col("typed").isNull).count() === 0L)
-  }
-
-  test("saltedJoin: identical results to the plain join under a hot key") {
-    // pathological skew: 90% of fact rows share one key
-    val fact = spark.range(1000).toDF("i")
-      .withColumn("k", when(col("i") % 10 === 0, col("i") % 7).otherwise(lit(999L)))
-      .withColumn("v", col("i") * 2)
-    val dim = Seq((999L, "hot"), (0L, "a"), (1L, "b"), (2L, "c")).toDF("k", "name")
-    val plain = fact.join(dim, Seq("k")).select("i", "name").collect().toSet
-    val salted = RelationalOps.saltedJoin(fact, dim, "k", salts = 8, factTiebreak = "i")
-      .select("i", "name").collect().toSet
-    assert(salted === plain)
-    // the salted fact side spreads the hot key over multiple salt values
-    val spread = fact.withColumn("__salt", pmod(hash(col("i")), lit(8)))
-      .filter(col("k") === 999L).select("__salt").distinct().count()
-    assert(spread > 1)
-  }
-
-  test("skewRoutedJoin: detect→salt composition equals plain join, hot key spreads") {
-    // same pathological corpus as above: one key holds 90% of fact rows
-    val fact = spark.range(1000).toDF("i")
-      .withColumn("k", when(col("i") % 10 === 0, col("i") % 7).otherwise(lit(999L)))
-      .withColumn("v", col("i") * 2)
-    val dim = Seq((999L, "hot"), (0L, "a"), (1L, "b"), (2L, "c")).toDF("k", "name")
-    // the profile actually flags this distribution (the "detect" half)
-    val prof = RelationalOps.skewProfile(fact, "k").head()
-    assert(prof.getAs[Long]("top1_share_bp") >= 9000L)
-    val routed = RelationalOps.skewRoutedJoin(fact, dim, "k",
-      factTiebreak = "i", salts = 4, hotRowThreshold = 100L)
-    val plain = fact.join(dim, Seq("k")).select("i", "name").collect().toSet
-    assert(routed.select("i", "name").collect().toSet === plain)
-    // partition-size evidence the hot key spread: with AQE off (so neither
-    // plan gets runtime skew splits), the plain join concentrates ≥90% of
-    // rows in one shuffle partition; the routed join's largest partition
-    // carries far less
-    val old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      def maxPartShare(df: org.apache.spark.sql.DataFrame): Double = {
-        val sizes = df.toDF().rdd.mapPartitions(it => Iterator.single(it.size)).collect()
-        sizes.max.toDouble / sizes.sum.max(1)
-      }
-      val plainShare = maxPartShare(fact.join(dim, Seq("k"))
-        .repartition(col("k")))
-      val routedShare = maxPartShare(RelationalOps.skewRoutedJoin(fact, dim, "k",
-        factTiebreak = "i", salts = 4, hotRowThreshold = 100L))
-      assert(plainShare >= 0.9, s"baseline should concentrate: $plainShare")
-      assert(routedShare <= 0.5, s"routed join must spread the hot key: $routedShare")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", old)
   }
 
   test("deterministicShuffle: exact permutation, equals the global-sort rank, partition-invariant") {
@@ -2695,14 +2424,6 @@ class OpsSpec extends SparkTestBase {
       (3L, 0L, 0L)))
   }
 
-  test("rollingFingerprint: stable content signature columns") {
-    val fp = TextOps.rollingFingerprint(col("text"))(docsDf).collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        ((r.getAs[Any]("fp_min"), r.getAs[Any]("fp_max"), r.getAs[Int]("fp_n")))).toMap
-    assert(fp(0L) === fp(1L)) // identical docs
-    assert(fp(0L) !== fp(3L))
-  }
-
   test("repetitionStats: exact top-token and duplicate-bigram fractions, tie to smallest") {
     val docs = Seq(
       (0L, "a a a b"), // top a 3/4; bigrams [a a, a a, a b] → 1 - 2/3
@@ -3100,58 +2821,6 @@ class OpsSpec extends SparkTestBase {
     assert(math.abs(u8.rms - 0.5 / math.sqrt(2.0)) < 0.02)
   }
 
-  test("audioClipEmbedding: identical clips collide, distinct tones differ, partition-invariant, feeds ANN") {
-    import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
-    def sineWav(freqHz: Double, rateHz: Int, n: Int, amp: Double): Array[Byte] = {
-      val pcm = new Array[Byte](n * 2)
-      (0 until n).foreach { i =>
-        val v = math.round(amp * 32767.0 *
-          math.sin(2 * math.Pi * freqHz * i / rateHz)).toShort
-        pcm(2 * i) = (v & 0xff).toByte
-        pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
-      }
-      val fmt = new AudioFormat(rateHz.toFloat, 16, 1, true, false)
-      val bos = new java.io.ByteArrayOutputStream()
-      AudioSystem.write(new AudioInputStream(
-        new java.io.ByteArrayInputStream(pcm), fmt, n.toLong),
-        AudioFileFormat.Type.WAVE, bos)
-      bos.toByteArray
-    }
-    // same full-scale amplitude and length — a flat RMS envelope can't
-    // separate these; only the frequency bands can. 500 Hz at 8 kHz sits
-    // in band 0 (f/rate = 1/16), 2000 Hz in band 3 (4/16).
-    val a = sineWav(500.0, 8000, 4000, 1.0)
-    val b = sineWav(2000.0, 8000, 4000, 1.0)
-    val rows = Seq((1L, a), (2L, a.clone()), (3L, b),
-      (4L, Array[Byte](9, 9, 9)), (5L, null.asInstanceOf[Array[Byte]]))
-    val emb = MultimodalOps.audioClipEmbedding(
-      rows.toDF("id", "payload"), "id", "payload")
-    val got = emb.collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    assert(got.keySet === Set(1L, 2L, 3L), "undecodable payloads must drop")
-    assert(got(1L).length === 64)
-    assert(got(1L) === got(2L), "byte-identical clips must embed bit-identically")
-    def cos(x: Seq[Float], y: Seq[Float]): Double = {
-      val d = x.zip(y).map { case (p, q) => p.toDouble * q }.sum
-      d / (math.sqrt(x.map(p => p.toDouble * p).sum) *
-        math.sqrt(y.map(p => p.toDouble * p).sum))
-    }
-    assert(cos(got(1L), got(3L)) < 0.9,
-      s"distinct tones must separate, cos=${cos(got(1L), got(3L))}")
-    // partition-invariance: per-clip arithmetic only, so the plan's
-    // partitioning must not change a single bit
-    val multi = MultimodalOps.audioClipEmbedding(
-        rows.toDF("id", "payload").repartition(7), "id", "payload")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    assert(multi === got, "embedding must be partition-invariant")
-    // composition: the embedding frame IS the SimilarityOps contract —
-    // the clip-reuse query (dim 64, cosine top-k) runs unchanged
-    val nn = SimilarityOps.bruteForceTopK(emb, emb.filter(col("id") === 1L),
-        k = 1, idCol = "id").collect()
-    assert(nn.length === 1)
-    assert(nn.head.getLong(1) === 2L, "the byte-identical clip is the top-1")
-    assert(nn.head.getDouble(2) > 0.999999)
-  }
-
   test("signalCorrelationMatrix: hand values, symmetry-free pairs, bounds") {
     val docs = Tables(spark, SparkTestBase.sf001, "documents")
     val m = TextOps.signalCorrelationMatrix(docs).collect()
@@ -3397,16 +3066,12 @@ class OpsSpec extends SparkTestBase {
     assert(closed7.last.getString(1) === "Z2" && closed7.last.isNullAt(3))
   }
 
-  test("upsert + latestPerKey: last change per key wins, unmatched base survives") {
-    val base = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+  test("latestPerKey: last change per key wins") {
     val cdc = Seq((2L, "b1", 10L), (2L, "b2", 20L), (3L, "c", 5L))
       .toDF("k", "v", "ts")
     val latest = MergeOps.latestPerKey(cdc, "k", Seq("v"))
     assert(latest.orderBy(col("k")).collect().map(r => (r.getLong(0), r.getString(1)))
       .toSeq === Seq((2L, "b2"), (3L, "c")))
-    val up = MergeOps.upsert(base, latest.select(col("k"), col("v")), "k")
-    assert(up.orderBy(col("k")).collect().map(r => (r.getLong(0), r.getString(1)))
-      .toSeq === Seq((1L, "a"), (2L, "b2"), (3L, "c")))
   }
 
   test("native SimHash60 expression: bit-parity with the aggregate form, SQL surface works") {
@@ -3454,7 +3119,9 @@ class OpsSpec extends SparkTestBase {
       .filter(col("mx") > 0)
       .withColumn("q", transform(col("v"), x => floor(x * (lit(127.0) / col("mx")))))
       .withColumn("dq", transform(col("q"), x => x * col("mx") / lit(127.0)))
-      .withColumn("cos_vq", SimilarityOps.cosine(col("v"), col("dq")))
+      .withColumn("cos_vq", SimilarityOps.dot(col("v"), col("dq")) /
+        (sqrt(SimilarityOps.dot(col("v"), col("v"))) *
+          sqrt(SimilarityOps.dot(col("dq"), col("dq")))))
     val worst = deq.agg(min(col("cos_vq"))).head().getDouble(0)
     assert(worst > 0.99, s"int8 dequantized cosine degraded to $worst")
   }
@@ -4323,6 +3990,33 @@ class OpsSpec extends SparkTestBase {
       SimilarityOps.maintainKnnIndex(emb.filter(isDel), pfx)
       assert(edges() === global(emb),
         "re-adding after compact folds back to the full recompute")
+    } finally spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith(pfx)).foreach(t =>
+        graft.sources.Bucketing.dropTableAndLocation(spark, t))
+  }
+
+  test("kNN index ensure, delete and compact free the checkpoints they take") {
+    val sc = spark.sparkContext
+    val emb = Tables(spark, SparkTestBase.sf001, "embeddings")
+    val pfx = "graft_test_knn_free"
+    val victims = emb.filter(col("vec_id") % 7 === 3).select(col("vec_id"))
+    // each call, followed by a release of the default scope's caches, must
+    // leave no persisted RDD behind that was not there before it
+    def leavesNothing(name: String)(call: => Unit): Unit = {
+      graft.ops.CacheScope.default.release()
+      val before = sc.getPersistentRDDs.keySet.toSet
+      call
+      graft.ops.CacheScope.default.release()
+      assert(sc.getPersistentRDDs.keySet.toSet -- before === Set.empty[Int], name)
+    }
+    try {
+      leavesNothing("ensure")(SimilarityOps.ensureKnnIndex(emb, pfx,
+        corpusTag = "f#1", minCos = 0.2, kTop = 4))
+      leavesNothing("delete")(SimilarityOps.deleteFromKnnIndex(victims, pfx))
+      // the replay takes the early-return path
+      leavesNothing("replayed delete")(SimilarityOps.deleteFromKnnIndex(victims, pfx))
+      leavesNothing("compact")(SimilarityOps.compactKnnIndex(pfx))
+      assert(spark.table(pfx + "_deleted").isEmpty, "the compact ran")
     } finally spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith(pfx)).foreach(t =>
         graft.sources.Bucketing.dropTableAndLocation(spark, t))
