@@ -26,12 +26,14 @@ object Bench {
     * fast run — failed setup steps (step → message, in step order) in
     * `setup_errors`, and the variance pass's floors in `retimed` beside
     * the sweep numbers, so the artifact separates spread from signal
-    * itself.
+    * itself. A variance-pass run that threw lands in `retime_errors`
+    * (query → message); its floor covers the successful runs only.
     */
   private[graft] def renderJson(merged: Map[String, Either[String, Double]],
                                 sfDir: String,
                                 retimed: Map[String, Double] = Map.empty,
-                                setupErrors: Seq[(String, String)] = Seq.empty)
+                                setupErrors: Seq[(String, String)] = Seq.empty,
+                                retimeErrors: Seq[(String, String)] = Seq.empty)
       : String = {
     val ok = merged.collect { case (k, Right(v)) => k -> v }
     val errs = merged.collect { case (k, Left(e)) => k -> e }
@@ -43,7 +45,8 @@ object Bench {
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""errors":${stringMap(errs.toSeq)},""" +
       s""""setup_errors":${stringMap(setupErrors)},""" +
-      s""""retimed":$rt,"methodology":"min-of-two-passes; """ +
+      s""""retimed":$rt,"retime_errors":${stringMap(retimeErrors)},""" +
+      s""""methodology":"min-of-two-passes; """ +
       s"""errored queries excluded from queries/total; persisted indexes """ +
       s"""prebuilt; retimed = min-of-5 floors of the worst movers vs the """ +
       s"""previous artifact","sf":"$sfDir"}"""
@@ -58,13 +61,15 @@ object Bench {
     * (ties by name), the error count with the first 3 errors by name
     * (errors must stay loud, but a sweep where every query fails must not
     * push the line past the window), the setup-error count with the first
-    * 3 failed steps in step order, and the PATH of the full artifact
-    * holding every query, or null when no file was written.
+    * 3 failed steps in step order, the number of queries whose variance
+    * pass threw, and the PATH of the full artifact holding every query,
+    * or null when no file was written.
     */
   private[graft] def renderCompactJson(
       merged: Map[String, Either[String, Double]], sfDir: String,
       retimed: Map[String, Double], fullPath: Option[String],
-      setupErrors: Seq[(String, String)] = Seq.empty): String = {
+      setupErrors: Seq[(String, String)] = Seq.empty,
+      retimeErrors: Seq[(String, String)] = Seq.empty): String = {
     val ok = merged.collect { case (k, Right(v)) => k -> v }
     val errs = merged.collect { case (k, Left(e)) => k -> e }.toSeq.sortBy(_._1)
     val slowest = ok.toSeq.sortBy { case (k, v) => (-v, k) }
@@ -80,7 +85,8 @@ object Bench {
       s""""n_errors":${errs.size},"errors":${stringMap(errs.take(3))},""" +
       s""""n_setup_errors":${setupErrors.size},""" +
       s""""setup_errors":${stringMap(setupErrors.take(3))},""" +
-      s""""retimed":${retimed.size},"queries_file":$file,"sf":"$sfDir"}"""
+      s""""retimed":${retimed.size},"n_retime_errors":${retimeErrors.size},""" +
+      s""""queries_file":$file,"sf":"$sfDir"}"""
   }
 
   private[graft] val compactQueriesChars = 1500
@@ -296,18 +302,20 @@ object Bench {
     val ref = refTimes(sys.env.getOrElse("SPARK_GRAFT_RETIME_REF",
       "BENCH_last.json"))
     val okNow = merged.collect { case (k, Right(v)) => k -> v }
+    val retimeErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val retimed = worstMovers(okNow, ref, retimeN).map { name =>
       val fn = SparkEntry.queries(name)
-      val floor = (okNow(name) +: (1 to 3).map { _ =>
+      val runs = (1 to 3).flatMap { _ =>
         graft.ops.CacheScope.default.release()
         val t0 = System.nanoTime()
-        try { run(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => Double.MaxValue }
-      }).min
-      name -> floor
+        try { run(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable => retimeErrors(name) = errorText(e); None }
+      }
+      name -> (okNow(name) +: runs).min
     }.toMap
     graft.ops.CacheScope.default.release()
-    val json = renderJson(merged, sfDir, retimed, setupErrors.toSeq)
+    val json = renderJson(merged, sfDir, retimed, setupErrors.toSeq,
+      retimeErrors.toSeq)
     // persist the FULL line to files so the driver's parse never depends
     // on scraping the sbt log tail. A SUBSET run (SPARK_GRAFT_ONLY) never
     // defaults onto BENCH_last.json — that file is the full-suite record
@@ -343,7 +351,8 @@ object Bench {
     // alone exceeded the tail window at 210 queries and truncated
     // mid-line — the r14/r15 lost-PERF root cause)
     println(json)
-    println(renderCompactJson(merged, sfDir, retimed, fullPath, setupErrors.toSeq))
+    println(renderCompactJson(merged, sfDir, retimed, fullPath,
+      setupErrors.toSeq, retimeErrors.toSeq))
     spark.stop()
     if (prebuildFailed) sys.exit(1)
   }

@@ -1,9 +1,10 @@
 package graft.ops
 
 import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -56,12 +57,27 @@ object CacheScope {
 
   def apply(): CacheScope = new CacheScope
 
-  /** Unpersists the blocks behind a frame returned by `localCheckpoint`
-    * (eager or lazy): the RDD at the root of its `LogicalRDD` plan, which
-    * the SQL CacheManager never sees, so no scope can release it. Free a
-    * frame only after an action has materialized every frame that reads
-    * it: checkpoints truncate lineage, so a successor materialized later
-    * would find its input blocks gone. Throws on any other frame.
+  /** Takes a local checkpoint of `df` and materializes it before returning,
+    * in ONE job on the calling thread that also folds each partition's rows
+    * with `measure` (a count, a label sum, an edge-set fingerprint): a round
+    * loop gets its convergence measure from the job that writes the round.
+    * No checkpoint stays lazy, since whichever jobs first read a lazy one
+    * materialize it: a `jstack` of a hung test run showed a broadcast thread
+    * and the DAG scheduler doing so at once, each holding one of the RDD's
+    * and `RDDCheckpointData`'s locks and waiting for the other. Returns the
+    * checkpoint and the per-partition measures. */
+  private[graft] def checkpointed[A: ClassTag](df: DataFrame)(
+      measure: Iterator[Row] => A): (DataFrame, Array[A]) = {
+    val cp = df.localCheckpoint(eager = false)
+    (cp, cp.rdd.mapPartitions(it => Iterator(measure(it))).collect())
+  }
+
+  /** Unpersists the blocks behind a frame returned by `localCheckpoint`:
+    * the RDD at the root of its `LogicalRDD` plan, which the SQL
+    * CacheManager never sees, so no scope can release it. Free a frame only
+    * after every frame that reads it is materialized: checkpoints truncate
+    * lineage, so a successor materialized later would find its input
+    * blocks gone. Throws on any other frame.
     */
   private[graft] def freeCheckpoint(frame: DataFrame): Unit =
     frame.queryExecution.logical match {
@@ -70,12 +86,26 @@ object CacheScope {
         s"freeCheckpoint needs a localCheckpoint frame, got a ${p.nodeName} plan")
     }
 
+  /** Unpersists every `LogicalRDD` leaf of a frame's plan: the checkpoints
+    * backing an operator's result, once the last action reading it ran. */
+  private[graft] def freeBacking(frame: DataFrame): Unit =
+    frame.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
   /** The local checkpoints one write takes: [[freeAll]] them in a `finally`
     * after the write's last read, so a throwing write leaks none either. */
   private[graft] final class Checkpoints {
     private val taken = ArrayBuffer.empty[DataFrame]
-    def apply(df: DataFrame, eager: Boolean = true): DataFrame =
-      (taken += df.localCheckpoint(eager)).last
+    def apply(df: DataFrame): DataFrame = (taken += df.localCheckpoint()).last
+    /** [[checkpointed]], recorded for [[freeAll]]. */
+    def measured[A: ClassTag](df: DataFrame)(
+        measure: Iterator[Row] => A): (DataFrame, Array[A]) = {
+      val r = checkpointed(df)(measure)
+      taken += r._1
+      r
+    }
     def freeAll(): Unit = taken.foreach(freeCheckpoint)
   }
 }

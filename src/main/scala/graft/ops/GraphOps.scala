@@ -1,10 +1,12 @@
 package graft.ops
 
+import scala.util.hashing.MurmurHash3
+
 import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import CacheScope.freeCheckpoint
+import CacheScope.{checkpointed, freeCheckpoint}
 
 /** Distributed graph primitives for training-data pipelines — currently
   * connected components, the step that turns a near-duplicate PAIR list into
@@ -27,7 +29,7 @@ object GraphOps {
     *      for — have tiny diameters, so 2-3 rounds typically reach the
     *      true fixpoint, at two cheap (id, label)-keyed shuffles per
     *      round. Convergence detection is EXACT: labels are monotone
-    *      non-increasing, so an unchanged Σcomp (decimal, overflow-safe)
+    *      non-increasing, so an unchanged Σcomp (exact, overflow-safe)
     *      means NO label moved; at that fixpoint labels are constant on
     *      every component and the minimum vertex keeps itself, i.e. the
     *      labeling is correct — never a truncation.
@@ -66,14 +68,13 @@ object GraphOps {
     * shuffles + one label-keyed self-join; per star round, two edge-keyed
     * min-aggregations + two joins + a distinct on the CURRENT quotient
     * edge list — which only shrinks; no collect, no per-component state,
-    * no corpus-wide window. Each intermediate is `localCheckpoint`ed to
-    * truncate lineage (iterative plans otherwise grow one join-tree per
-    * round and overwhelm the optimizer); on a real cluster prefer
-    * `checkpoint` with a reliable dir if executor loss matters
-    * mid-computation. Star-phase convergence detection: a (count,
-    * Σ xxhash64) edge-set fingerprint as the cheap per-round filter, then
-    * an EXACT `except` equality check before declaring the fixpoint — the
-    * fingerprint alone never terminates the loop.
+    * no corpus-wide window. Every round is ONE materialize-and-measure
+    * job: its frame is `localCheckpoint`ed (flat lineage — iterative plans
+    * otherwise overwhelm the optimizer) and measured by the job that
+    * writes it ([[CacheScope.checkpointed]]): Σcomp in phase 1, a
+    * (count, Σ hash) edge-set fingerprint in phase 2, where an EXACT
+    * `except` check then confirms the fixpoint. On a real cluster prefer
+    * `checkpoint` with a reliable dir if executor loss matters.
     *
     * A labeling that has NOT converged is silently wrong (components
     * split), so exhausting `maxIter` star rounds THROWS rather than
@@ -95,29 +96,19 @@ object GraphOps {
     // normalized undirected edge list: (hi, lo) with hi > lo throughout —
     // both star steps emit (bigger, smaller) by construction, so the
     // invariant is free after the initial normalization
-    // all three setup checkpoints are LAZY: round 1's Σcomp action (or,
-    // when propRounds = 0, the quotient fingerprint) materializes them in
-    // ONE job instead of three eager checkpoint jobs — the setup cost that
-    // dominated the tiny sampled-graph queries. Safe by the freeCheckpoint
-    // rule: every one of them is materialized by an action before any
-    // frame reading it is freed
     val e0 = edges.select(
         greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("hi"),
         least(col(aCol).cast("long"), col(bCol).cast("long")).as("lo"))
       .filter(col("hi") =!= col("lo")).distinct()
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
 
     // ---- phase 1: bounded min-label propagation with pointer jumping ----
     val sym = e0.select(col("hi").as("x"), col("lo").as("nb"))
       .union(e0.select(col("lo").as("x"), col("hi").as("nb")))
-      .localCheckpoint(eager = false)
-    var labels = vertices.select(col(idCol).cast("long").as("x"),
-        col(idCol).cast("long").as("comp"))
-      .localCheckpoint(eager = false)
-    var prevSum: java.math.BigDecimal = null
-    var propDone = false
-    var r = 0
-    while (!propDone && r < propRounds) {
+    // labels are monotone non-increasing, so Σcomp unchanged ⇔ fixpoint
+    val (labels, propDone) = fixpoint(compSum(vertices.select(
+        col(idCol).cast("long").as("x"), col(idCol).cast("long").as("comp"))),
+      propRounds, compSum) { labels =>
       val fromNbrs = sym
         .join(labels.select(col("x").as("nb"), col("comp")), Seq("nb"))
         .select(col("x"), col("comp"))
@@ -126,25 +117,11 @@ object GraphOps {
       // pointer jumping: every label is itself a vertex id, so its current
       // label exists in `merged` — the join is total by the vertex-cover
       // contract, coalesce guards the (contract-violating) missing case
-      val jumped = merged
+      merged
         .join(merged.select(col("x").as("comp"), col("comp").as("comp2")),
           Seq("comp"), "left")
         .select(col("x"), coalesce(col("comp2"), col("comp")).as("comp"))
-      // lazy checkpoint: the Σcomp action below materializes `next` (one
-      // job per round, not checkpoint + agg); the superseded round is
-      // freed only after that action returns
-      val next = jumped.localCheckpoint(eager = false)
-      // labels are monotone non-increasing, so Σcomp unchanged ⇔ fixpoint;
-      // decimal accumulation — a sum of n ids can overflow a long at scale
-      val row = next.agg(sum(col("comp").cast("decimal(38,0)"))).head()
-      val s = if (row.isNullAt(0)) java.math.BigDecimal.ZERO else row.getDecimal(0)
-      propDone = prevSum != null && s.compareTo(prevSum) == 0
-      prevSum = s
-      freeCheckpoint(labels) // superseded round (next is already materialized)
-      labels = next
-      r += 1
-    }
-    freeCheckpoint(sym)
+    }((prev, next) => next._2 == prev._2)
     if (propDone) {
       // true propagation fixpoint — labels already final (constant on each
       // component, minimum keeps itself); the star phase has nothing to do
@@ -152,22 +129,13 @@ object GraphOps {
       labels.select(col("x").as(idCol), col("comp"))
     } else {
       // ---- phase 2: star rounds on the label-contracted quotient graph ----
-      // lazy: the fingerprint below materializes the quotient in its job
-      var l = e0
+      val quotient = fingerprint(e0
         .join(labels.select(col("x").as("hi"), col("comp").as("ch")), Seq("hi"))
         .join(labels.select(col("x").as("lo"), col("comp").as("cl")), Seq("lo"))
         .select(greatest(col("ch"), col("cl")).as("hi"),
           least(col("ch"), col("cl")).as("lo"))
-        .filter(col("hi") =!= col("lo")).distinct()
-        .localCheckpoint(eager = false)
-      // cheap edge-set fingerprint; decimal accumulation — a sum of n 64-bit
-      // hashes overflows a long at scale
-      def fingerprint(df: DataFrame): (Long, java.math.BigDecimal) = {
-        val row = df.agg(count(lit(1)),
-          sum(xxhash64(col("hi"), col("lo")).cast("decimal(38,0)"))).head()
-        (row.getLong(0),
-          if (row.isNullAt(1)) java.math.BigDecimal.ZERO else row.getDecimal(1))
-      }
+        .filter(col("hi") =!= col("lo")).distinct())
+      freeCheckpoint(e0)
       // large-star: group every edge at its SMALLER endpoint u (via the
       // symmetrized view), attach m = min(Γ(u) ∪ {u}), re-link each larger
       // neighbor v to (v, m); v > u >= m keeps the (hi, lo) invariant
@@ -192,35 +160,15 @@ object GraphOps {
             col("m").as("lo"))
           .distinct()
       }
-      var (cnt, chk) = fingerprint(l) // materializes the lazy quotient
-      // e0 may be freed only AFTER the quotient is materialized: l's lazy
-      // checkpoint reads e0's blocks, and an eager localCheckpoint has
-      // truncated lineage — freeing first would make the star phase
-      // recompute through missing blocks (the freeCheckpoint rule)
-      freeCheckpoint(e0)
-      var it = 0
-      var done = false
-      while (!done && it < maxIter && cnt > 0) {
-        // both lazy: the round's fingerprint materializes ls and ss in ONE
-        // job (ls's shuffle output is shared by smallStar's two readers);
-        // ls is freed only after that job, so nothing recomputes through
-        // a truncated lineage
-        val ls = largeStar(l).localCheckpoint(eager = false)
-        val ss = smallStar(ls).localCheckpoint(eager = false)
-        val (c2, k2) = fingerprint(ss)
-        freeCheckpoint(ls) // intermediate, superseded by ss (now materialized)
-        // fingerprint equality gates the exact check; `except` confirms the
-        // true fixpoint (runs on two checkpointed frames, and only in the
-        // rare rounds the fingerprints collide or the loop is converging)
-        done = c2 == cnt && k2.compareTo(chk) == 0 &&
-          ss.except(l).head(1).isEmpty
-        freeCheckpoint(l)
-        l = ss
-        cnt = c2
-        chk = k2
-        it += 1
-      }
-      if (!done && cnt > 0)
+      // equal fingerprints gate the exact check; `except` confirms the
+      // true fixpoint (on two checkpointed frames, and only in the rounds
+      // the fingerprints collide or the loop is converging)
+      val (l, done) =
+        if (quotient._2._1 == 0) (quotient._1, true)
+        else fixpoint(quotient, maxIter, fingerprint)(
+            cur => smallStar(largeStar(cur)))((prev, next) =>
+          next._2 == prev._2 && next._1.except(prev._1).head(1).isEmpty)
+      if (!done)
         throw new IllegalStateException(
           s"connectedComponents did not converge in $maxIter star rounds — " +
             "the result would be a silently split labeling; raise maxIter")
@@ -235,6 +183,45 @@ object GraphOps {
         .select(col("x").as(idCol), coalesce(col("root"), col("comp")).as("comp"))
     }
   }
+
+  /** The round loop of [[connectedComponents]]' two phases and the truss
+    * peel. From `init` (a checkpoint and its measure), each round takes
+    * and measures `step(current)` in one job (`take`), asks `done(previous,
+    * next)`, then frees the superseded frame. Runs at most `maxRounds`
+    * rounds; returns the last frame and whether `done` held. */
+  private def fixpoint[A](init: (DataFrame, A), maxRounds: Int,
+                          take: DataFrame => (DataFrame, A))(
+      step: DataFrame => DataFrame)(
+      done: ((DataFrame, A), (DataFrame, A)) => Boolean): (DataFrame, Boolean) = {
+    var cur = init
+    var converged = false
+    var r = 0
+    while (!converged && r < maxRounds) {
+      val next = take(step(cur._1))
+      converged = done(cur, next)
+      freeCheckpoint(cur._1)
+      cur = next
+      r += 1
+    }
+    (cur._1, converged)
+  }
+
+  /** The round measures, folded per partition by the job that writes the
+    * checkpoint: the row count; Σ comp, exact (a sum of n ids overflows a
+    * long at scale); and an (hi, lo) edge-set fingerprint (count, Σ hash),
+    * where any deterministic hash will do since `except` decides. */
+  private def counted(df: DataFrame): (DataFrame, Long) =
+    checkpointed(df)(_.size.toLong) match { case (cp, ns) => (cp, ns.sum) }
+
+  private def compSum(df: DataFrame): (DataFrame, BigInt) =
+    checkpointed(df)(_.foldLeft(BigInt(0)) { (s, r) =>
+      if (r.isNullAt(1)) s else s + r.getLong(1)
+    }) match { case (cp, ss) => (cp, ss.sum) }
+
+  private def fingerprint(df: DataFrame): (DataFrame, (Long, Long)) =
+    checkpointed(df)(_.foldLeft((0L, 0L)) { case ((n, h), r) =>
+      (n + 1, h + MurmurHash3.productHash((r.getLong(0), r.getLong(1))))
+    }) match { case (cp, fs) => (cp, (fs.map(_._1).sum, fs.map(_._2).sum)) }
 
   /** INCREMENTAL connected-component maintenance — fold a batch of new
     * edges (and new vertices) into an EXISTING labeling without re-running
@@ -268,12 +255,8 @@ object GraphOps {
                             newVertices: DataFrame,
                             idCol: String = "id",
                             aCol: String = "a", bCol: String = "b"): DataFrame = {
-    // LAZY checkpoints (multi-consumer frames, materialized by the CC
-    // run's first action before anything that reads them could recompute
-    // — the freeCheckpoint rule; nothing here is ever explicitly freed):
-    // two eager checkpoint jobs per maintain epoch fold into the CC run
     val asg = assignments.select(col(idCol).cast("long").as("x"),
-      col("comp").cast("long").as("comp")).localCheckpoint(eager = false)
+      col("comp").cast("long").as("comp")).localCheckpoint()
     val e = newEdges.select(col(aCol).cast("long").as("a"),
       col(bCol).cast("long").as("b"))
     // ids the batch introduces: declared new vertices plus any edge
@@ -284,7 +267,7 @@ object GraphOps {
       .unionByName(e.select(col("b").as("x")))
       .distinct()
       .join(asg, Seq("x"), "left_anti")
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     // batch endpoints mapped through the old labeling; genuinely-new ids
     // contract to themselves; intra-component edges become self-loops and
     // drop
@@ -297,10 +280,9 @@ object GraphOps {
     val qv = qe.select(col("a").as("id")).unionByName(qe.select(col("b").as("id")))
       .unionByName(newIds.select(col("x").as("id")))
       .distinct()
-    // CC on the quotient only — batch-sized regardless of corpus size
-    // (lazy: the caller's one consuming action materializes it for both
-    // the relabel and the fresh-id join)
-    val sub = connectedComponents(qe, qv).localCheckpoint(eager = false)
+    // CC on the quotient only — batch-sized regardless of corpus size; its
+    // checkpoints back the relabel and the fresh-id join
+    val sub = connectedComponents(qe, qv)
     val relabel = sub.select(col("id").as("comp"), col("comp").as("__new"))
     val keptOld = asg.join(relabel, Seq("comp"), "left")
       .select(col("x").as(idCol),
@@ -375,8 +357,9 @@ object GraphOps {
     if (!upToDate) {
       val asg = connectedComponents(pairs, vertices, idCol)
         .select(col(idCol).cast("long").as("id"), col("comp"))
-      writeClusterAssignments(spark, asg, tablePrefix, corpusTag, buckets,
+      try writeClusterAssignments(spark, asg, tablePrefix, corpusTag, buckets,
         fresh = true)
+      finally CacheScope.freeBacking(asg)
     }
   }
 
@@ -409,12 +392,12 @@ object GraphOps {
     val spark = newEdges.sparkSession
     val cur = clusterAssignments(spark, tablePrefix)
     // the versioned write never replaces its own input table (v+1 is a
-    // new name), so no defensive checkpoint is needed before the write;
-    // incrementalComponents materializes the assignment scan itself
+    // new name), so no defensive checkpoint is needed before the write
     val next = incrementalComponents(cur, newEdges,
       newVertices.select(col(idCol).cast("long").as("id")), "id")
-    writeClusterAssignments(spark, next, tablePrefix, newCorpusTag, buckets,
-      fresh = false)
+    try writeClusterAssignments(spark, next, tablePrefix, newCorpusTag,
+      buckets, fresh = false)
+    finally CacheScope.freeBacking(next)
   }
 
   private def writeClusterAssignments(spark: org.apache.spark.sql.SparkSession,
@@ -630,51 +613,31 @@ object GraphOps {
     * bounded [[orientedSupport]] wedge pass (O(m^1.5)) + one filter, each
     * intermediate localCheckpoint-ed so lineage stays flat.
     */
-  def trussEdges(pairs: DataFrame, k: Int = 3, rounds: Int = 4): DataFrame =
-    trussPeel(normalized(pairs), k, rounds)
+  def trussEdges(pairs: DataFrame, k: Int = 3, rounds: Int = 4): DataFrame = {
+    val und = normalized(pairs).localCheckpoint()
+    try trussPeel(und, k, rounds) finally freeCheckpoint(und)
+  }
 
-  /** The peel loop over an already-NORMALIZED edge set (private fast path:
-    * [[trussDedupEffect]] passes its checkpointed edge list straight in,
-    * skipping the re-distinct the public entry pays). Orients ONCE under
-    * the input graph's (degree, id) order and peels the ORIENTED list —
-    * per round one wedge pass over the fixed orientation
-    * ([[orientedSupport]]'s exactness argument) instead of a full
-    * degrees + orientation + support + join-back rebuild.
+  /** The peel loop over a checkpointed, NORMALIZED edge set, which it
+    * does not read once it returns. Orients ONCE under the input graph's
+    * (degree, id) order and peels the ORIENTED list — per round one wedge
+    * pass over the fixed orientation ([[orientedSupport]]'s exactness
+    * argument) instead of a full degrees + orientation + support +
+    * join-back rebuild.
     */
-  private def trussPeel(und0: DataFrame, k: Int, rounds: Int): DataFrame = {
+  private def trussPeel(und: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, "k-truss needs k >= 3")
-    // the input edge set is checkpointed EAGERLY: the orientation plan
-    // reads it from a broadcast stage and a shuffle stage at once, and two
-    // concurrent jobs materializing one lazy checkpoint can deadlock the
-    // scheduler (the broadcast thread marks the RDD checkpointed under
-    // RDDCheckpointData's lock while the DAG scheduler holds the RDD's).
-    // The rounds stay lazy: each round's count() materializes its frame in
-    // the same job (one job per round, not checkpoint + count); the
-    // superseded round is freed only after that count returns
-    val undC = und0.localCheckpoint(eager = true)
-    var o = oriented(undC, degrees(undC)).localCheckpoint(eager = false)
-    var prevCount = o.count()
-    freeCheckpoint(undC) // the oriented list is a bijection of the edge set
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      // support >= k-2 >= 1 drops zero-support edges by construction
-      // (they never earn a credit row), so the filtered support table IS
-      // the next oriented edge list — no join back per round
-      val next = orientedSupport(o).filter(col("support") >= k - 2)
+    // support >= k-2 >= 1 drops zero-support edges by construction (they
+    // never earn a credit row), so the filtered support table IS the next
+    // oriented edge list — no join back per round. Edge counts only fall
+    // under peeling; an UNCHANGED count means no edge was dropped, i.e.
+    // every edge already had support >= k-2 within the current subgraph —
+    // the fixpoint, proven without an extra verification pass
+    val (o, converged) = fixpoint(counted(oriented(und, degrees(und))),
+      rounds, counted) { o =>
+      orientedSupport(o).filter(col("support") >= k - 2)
         .select(col("src"), col("dst"), col("dd"))
-        .localCheckpoint(eager = false)
-      // edge counts are monotone decreasing under peeling; an UNCHANGED
-      // count means no edge was dropped, i.e. every edge already had
-      // support >= k-2 within the current subgraph — the fixpoint, proven
-      // without the extra verification pass (counts on checkpointed
-      // frames are cheap)
-      val n = next.count()
-      freeCheckpoint(o); o = next
-      converged = n == prevCount
-      prevCount = n
-      r += 1
-    }
+    }((prev, next) => next._2 == prev._2)
     // final support values on the converged edge set, mapped back to the
     // normalized (a, b) form with zero-support edges kept (the ≥ operator
     // of the orientation: a = min endpoint, b = max endpoint)
@@ -687,14 +650,11 @@ object GraphOps {
         Seq("a", "b"), "left")
       .select(col("a"), col("b"),
         coalesce(col("support"), lit(0L)).as("support"))
-    if (!converged) {
-      val bad = fin.filter(col("support") < k - 2).limit(1).count()
-      if (bad > 0) {
-        freeCheckpoint(o)
-        throw new IllegalStateException(
-          s"trussEdges did not converge in $rounds rounds (k=$k) — raise " +
-            "`rounds`; refusing to return a non-truss silently")
-      }
+    if (!converged && fin.filter(col("support") < k - 2).limit(1).count() > 0) {
+      freeCheckpoint(o)
+      throw new IllegalStateException(
+        s"trussEdges did not converge in $rounds rounds (k=$k) — raise " +
+          "`rounds`; refusing to return a non-truss silently")
     }
     fin
   }
@@ -715,10 +675,9 @@ object GraphOps {
   def trussDedupEffect(pairs: DataFrame, k: Int = 3,
                        rounds: Int = 4): DataFrame = {
     val und = normalized(pairs).localCheckpoint()
-    // lazy: materialized inside the union CC's own first job; consumed
-    // again (blocks only) by the per-scheme edge count
-    val trussE = trussPeel(und, k, rounds).select(col("a"), col("b"))
-      .localCheckpoint(eager = false)
+    val peeled = trussPeel(und, k, rounds)
+    val trussE = peeled.select(col("a"), col("b")).localCheckpoint()
+    CacheScope.freeBacking(peeled)
     // ONE connectedComponents run for BOTH schemes, on the PARITY-TAGGED
     // disjoint union: closure edges at id·2, truss edges at id·2+1.
     // Exact because components never cross parities (no edge joins an

@@ -1741,23 +1741,19 @@ object SimilarityOps {
     val cps = new CacheScope.Checkpoints // read only by this epoch's inserts
     try {
       // replayed ids drop structurally; consumed by banding AND verify AND
-      // the inserts — materialize the (batch-sized) frame once. A
-      // TOMBSTONED id cannot re-enter before a compact (the banded-index
-      // X85 rule: the tombstone suppresses its stale committed rows, so a
-      // re-insert under the same id would vanish with them on read and
-      // resurface BOTH after a naive un-tombstone)
-      // LAZY: the count() right below materializes it — one job, not
-      // checkpoint-job + count-job (the epoch's job-count diet: every
-      // intermediate here is materialized by a later action BEFORE the
-      // inserts mutate the tables it reads)
-      val fresh = cps(batch
+      // the inserts — materialize the (batch-sized) frame once, counted in
+      // the same job. A TOMBSTONED id cannot re-enter before a compact
+      // (the banded-index X85 rule: the tombstone suppresses its stale
+      // committed rows, so a re-insert under the same id would vanish with
+      // them on read and resurface BOTH after a naive un-tombstone)
+      val (fresh, counts) = cps.measured(batch
         .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
         .dropDuplicates("id")
         .join(vecs.select(col("id")), Seq("id"), "left_anti")
         .join(broadcast(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")),
           Seq("id"), "left_anti")
-        .withColumn("nrm", sqrt(dotF(col("vec"), col("vec")))), eager = false)
-      val nFresh = fresh.count()
+        .withColumn("nrm", sqrt(dotF(col("vec"), col("vec")))))(_.size.toLong)
+      val nFresh = counts.sum
       if (nFresh == 0) return
       val nNext = m.getAs[Long]("n_vecs") + nFresh
       val drift = autoPlanes(nNext, targetOcc) - planes
@@ -1775,7 +1771,7 @@ object SimilarityOps {
       val bandsNew = cps(bandSplitFrozen(fresh.select(col("id"), col("vec")),
         bandStrided(fresh.select(col("id"), col("vec")), planes, nTables,
           dim),
-        planes, nTables, dim, cells), eager = false)
+        planes, nTables, dim, cells))
       // candidates: batch bands probe (stored ∪ batch) bands — never
       // corpus × corpus; orientation dedupes the (new, new) double hit
       val cand = bandsNew
@@ -1797,16 +1793,13 @@ object SimilarityOps {
       val newPairs = cps(cand.join(va, Seq("a")).join(vb, Seq("b"))
         .select(col("a"), col("b"),
           (dotF(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
-        .filter(col("cos") >= lit(minCos)), eager = false)
+        .filter(col("cos") >= lit(minCos)))
       val dirsNew = newPairs
         .select(col("a").as("v"), col("b").as("nb"), col("cos"))
         .unionByName(newPairs
           .select(col("b").as("v"), col("a").as("nb"), col("cos")))
-      // bandsNew / newPairs / touched are all LAZY: keptAppend's eager
-      // checkpoint below is the epoch's ONE materialization job for the
-      // whole chain (it reads kept→touched→dirsNew→newPairs→cand→bandsNew),
-      // and it runs before the first insertInto mutates any table they read
-      val touched = cps(dirsNew.select(col("v")).distinct(), eager = false)
+      // read only by keptAppend, which is materialized before any insert
+      val touched = dirsNew.select(col("v")).distinct()
       // re-rank touched vertices over (old kept ∪ new candidates); a kept
       // (v, nb) row can never duplicate a new candidate — nb is new to
       // this epoch in every new pair. Touched vertices always re-rank

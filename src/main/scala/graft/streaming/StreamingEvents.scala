@@ -496,6 +496,7 @@ object StreamingEvents {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         val scope = graft.ops.CacheScope()
+        val cps = new graft.ops.CacheScope.Checkpoints
         try {
           // one pass over the batch feeds both the probe and the append
           val b = scope.register(batch)
@@ -512,13 +513,15 @@ object StreamingEvents {
             // half-mutated index (every doc would match its own just-
             // inserted bands → novel collapses to empty → the _sets insert
             // writes nothing and the index is permanently inconsistent)
-            val novel = b.join(
-                report.filter(col("novel")).select(col(idCol)), Seq(idCol), "left_semi")
-              .localCheckpoint()
+            val novel = cps(b.join(
+              report.filter(col("novel")).select(col(idCol)), Seq(idCol), "left_semi"))
             graft.ops.DedupOps.appendToBandedIndex(novel, tablePrefix,
               textCol, idCol, newCorpusTag = s"stream-epoch-$epoch", scope = scope)
           }
-        } finally scope.release()
+        } finally {
+          scope.release()
+          cps.freeAll()
+        }
       }
 
   /** STREAMING maintenance of the persisted IVF ANN index — the embedding
@@ -562,11 +565,11 @@ object StreamingEvents {
             .select(col("query_id"))
           // eager lineage truncation before mutating the probed table —
           // same recompute hazard as bandedIndexIngest
-          val novel = batch.join(dup,
-              batch(idCol).cast("long") === dup("query_id"), "left_anti")
-            .localCheckpoint()
-          graft.ops.SimilarityOps.appendToIvfIndex(novel, tablePrefix,
-            idCol, vecCol)
+          val cps = new graft.ops.CacheScope.Checkpoints
+          try graft.ops.SimilarityOps.appendToIvfIndex(cps(batch.join(dup,
+              batch(idCol).cast("long") === dup("query_id"), "left_anti")),
+            tablePrefix, idCol, vecCol)
+          finally cps.freeAll()
         }
       }
 
@@ -627,11 +630,12 @@ object StreamingEvents {
         .join(broadcast(bc.select(keys.map(col) :+
           col("vec_id").as("bid"): _*)), keys.toSeq)
         .select(col("bid")).distinct()
-      val novel = batch.join(dup,
-          batch(idCol).cast("long") === dup("bid"), "left_anti")
-        .localCheckpoint() // truncate lineage before mutating the probed table
-      graft.ops.SimilarityOps.appendToIvfPqIndex(novel, tablePrefix,
-        idCol, vecCol)
+      // truncate lineage before mutating the probed table
+      val cps = new graft.ops.CacheScope.Checkpoints
+      try graft.ops.SimilarityOps.appendToIvfPqIndex(cps(batch.join(dup,
+          batch(idCol).cast("long") === dup("bid"), "left_anti")),
+        tablePrefix, idCol, vecCol)
+      finally cps.freeAll()
     }
 
   /** STREAMING ANN-RECALL monitor — the operational "is the index
@@ -1036,12 +1040,14 @@ object StreamingEvents {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         if (!batch.isEmpty) {
-          val e = batch.select(col(aCol).cast("long").as("a"),
-            col(bCol).cast("long").as("b")).localCheckpoint()
+          val cps = new graft.ops.CacheScope.Checkpoints
+          val e = cps(batch.select(col(aCol).cast("long").as("a"),
+            col(bCol).cast("long").as("b")))
           val v = e.select(col("a").as("id"))
             .unionByName(e.select(col("b").as("id"))).distinct()
-          graft.ops.GraphOps.maintainClusterAssignments(e, v, tablePrefix,
+          try graft.ops.GraphOps.maintainClusterAssignments(e, v, tablePrefix,
             newCorpusTag = s"stream-epoch-$epoch", idCol = "id")
+          finally cps.freeAll()
         }
       }
 

@@ -132,6 +132,24 @@ class BenchReportSpec extends AnyFunSuite {
       .contains("\"n_setup_errors\":0,\"setup_errors\":{}"))
   }
 
+  test("retime_errors: a thrown re-time run rides in the full line by name, counted in the compact one") {
+    val merged = Map[String, Either[String, Double]]("q01_x" -> Right(4.0),
+      "q02_y" -> Right(3.0))
+    val fails = Seq("q02_y" -> "IllegalStateException: \"gone\"\n")
+    val full = Bench.renderJson(merged, "/d", Map("q01_x" -> 1.5, "q02_y" -> 3.0),
+      Seq.empty, fails)
+    assert(full.contains("\"retimed\":{\"q01_x\":1.5,\"q02_y\":3.0}," +
+      "\"retime_errors\":{\"q02_y\":\"IllegalStateException:  gone  \"}"), full)
+    assert(full.split("\n").length === 1)
+    val compact = Bench.renderCompactJson(merged, "/d", Map("q01_x" -> 1.5),
+      None, Seq.empty, fails)
+    assert(compact.contains("\"retimed\":1,\"n_retime_errors\":1,"), compact)
+    // a clean variance pass still states it, in both lines
+    assert(Bench.renderJson(merged, "/d").contains("\"retime_errors\":{}"))
+    assert(Bench.renderCompactJson(merged, "/d", Map.empty, None)
+      .contains("\"n_retime_errors\":0"))
+  }
+
   test("renderJson: retimed floors ride beside the sweep numbers") {
     val merged = Map[String, Either[String, Double]]("q01_x" -> Right(4.0))
     val json = Bench.renderJson(merged, "/d", Map("q01_x" -> 1.5))

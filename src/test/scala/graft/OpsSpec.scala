@@ -344,6 +344,42 @@ class OpsSpec extends SparkTestBase {
     }
   }
 
+  test("graph operators return frames whose every checkpoint is materialized") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    // the graphs of the CC and truss tests above: the path + isolated pair
+    // + singleton, and the triangle + pendant + chain + K4 pair list
+    val path = ((0L until 31L).map(i => (i, i + 1)) :+ ((40L, 41L))).toDF("a", "b")
+    val pathV = ((0L to 31L) ++ Seq(40L, 41L, 50L)).toDF("id")
+    val pairs = Seq(
+      (1L, 2L), (2L, 3L), (1L, 3L), (1L, 8L),
+      (4L, 5L), (5L, 6L), (6L, 7L),
+      (10L, 11L), (10L, 12L), (10L, 13L), (11L, 12L), (11L, 13L), (12L, 13L)
+    ).toDF("a", "b")
+    val pairsV = pairs.select(col("a").as("id"))
+      .union(pairs.select(col("b").as("id"))).distinct()
+    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "cc, propagation converges" ->
+        (() => GraphOps.connectedComponents(pairs, pairsV)),
+      "cc, star phase" ->
+        (() => GraphOps.connectedComponents(path, pathV, propRounds = 1)),
+      "cc, propRounds = 0" ->
+        (() => GraphOps.connectedComponents(path, pathV, propRounds = 0)),
+      "incrementalComponents" -> (() => GraphOps.incrementalComponents(
+        GraphOps.connectedComponents(pairs, pairsV),
+        Seq((8L, 4L), (60L, 61L)).toDF("a", "b"), Seq(60L, 61L).toDF("id"))),
+      "trussEdges" -> (() => GraphOps.trussEdges(pairs)),
+      "trussDedupEffect" -> (() => GraphOps.trussDedupEffect(pairs)))
+    val pending = cases.flatMap { case (name, run) =>
+      val leaves = run().queryExecution.logical.collect {
+        case r: LogicalRDD => r.rdd
+      }
+      assert(leaves.nonEmpty, name)
+      val n = leaves.count(!_.isCheckpointed)
+      if (n > 0) Some(s"$name: $n of ${leaves.size}") else None
+    }
+    assert(pending.isEmpty, s"unmaterialized checkpoints returned: $pending")
+  }
+
   test("transitionMatrix: per-user consecutive pairs, row-normalized micro probabilities") {
     def ts(s: Long) = new java.sql.Timestamp(s * 1000L)
     // u1: a->b->a->c ; u2: b->a ; u3: singleton (no transitions).
@@ -4463,7 +4499,7 @@ class OpsSpec extends SparkTestBase {
         s"$name left RDDs ${added -- backing} that its result does not read")
     }
     // the function frees only frames that localCheckpoint returned
-    val cp = path.localCheckpoint(eager = false)
+    val cp = path.localCheckpoint(eager = true)
     intercept[IllegalArgumentException](CacheScope.freeCheckpoint(cp.select(col("a"))))
     CacheScope.freeCheckpoint(cp)
   }

@@ -24,18 +24,18 @@ class RoundLoopSpec extends SparkTestBase {
                           iterations: Int,
                           scale: Long = 1000000000000L): Map[Long, Long] = {
     val v = vertices.select(col("id").cast("long").as("x"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = true)
     val e = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = true)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(eager = false)
-    val ed = e.join(deg, Seq("src")).localCheckpoint(eager = false)
+      .localCheckpoint(eager = true)
+    val ed = e.join(deg, Seq("src")).localCheckpoint(eager = true)
     val n = v.count()
     val init = scale / math.max(n, 1L)
     val base = 15L * init / 100L
     var ranks = v.select(col("x"), lit(init).as("rank"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = true)
     (0 until iterations).foreach { _ =>
       val contribs = ed
         .join(ranks.select(col("x").as("src"), col("rank")), Seq("src"))
@@ -159,7 +159,7 @@ class RoundLoopSpec extends SparkTestBase {
         top(0).getLong(3)))
       val next = segs.withColumn("seg", replace(col("seg"),
           lit(Sep + l + Sep2 + r + Sep), lit(Sep + l + r + Sep)))
-        .localCheckpoint(eager = false)
+        .localCheckpoint(eager = true)
       top = if (merges.length < numMerges) argmax(next) else Array.empty
       CacheScope.freeCheckpoint(segs)
       segs = next

@@ -33,6 +33,16 @@ class StreamingSpec extends SparkTestBase {
   // far enough ahead that the 2h watermark closes every hour-10 window
   private val hour14 = Seq(Ev(5L, ts(14, 1), 3L, "click", 7.0))
 
+  /** Persisted RDD ids now, to compare against after a stream's batches:
+    * a sink frees what each micro-batch persisted before the batch ends. */
+  private def persistedIds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def assertNoneLeft(before: Set[Int]): Unit = {
+    val left = persistedIds() -- before
+    assert(left.isEmpty, s"micro-batches left persisted RDDs $left behind")
+  }
+
   test("packingIngest: streamed full blocks == batch packSequences over the same order") {
     implicit val sqlCtx = spark.sqlContext
     val docs = graft.sources.Tables(spark, SparkTestBase.sf001, "documents")
@@ -413,6 +423,7 @@ class StreamingSpec extends SparkTestBase {
       corpusTag = "base")
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ingest").toString
     val mem = MemoryStream[Doc]
+    val before = persistedIds()
     val query = StreamingEvents.bandedIndexIngest(mem.toDF(), "t_stream_idx",
       checkpointDir = ckpt).start()
     try {
@@ -424,6 +435,7 @@ class StreamingSpec extends SparkTestBase {
       mem.addData(Doc(12L, ts(10, 10), l11.replace("gamma7", "changed")),
         Doc(13L, ts(10, 11), l13))
       query.processAllAvailable()
+      assertNoneLeft(before)
       val indexed = spark.table("t_stream_idx_sets")
         .select("id").collect().map(_.getLong(0)).toSet
       assert(indexed === Set(1L, 2L, 11L, 13L),
@@ -594,6 +606,7 @@ class StreamingSpec extends SparkTestBase {
       Seq.empty[Long].toDF("id"), "graft_test_ci", corpusTag = "ci#0")
     val mem = MemoryStream[(Long, Long)]
     val edges = mem.toDF().toDF("a", "b")
+    val before = persistedIds()
     val query = StreamingEvents.clusterIngest(edges, "graft_test_ci", ckpt).start()
     val epochs = Seq(
       Seq((1L, 2L), (3L, 4L)),          // two pairs
@@ -602,6 +615,7 @@ class StreamingSpec extends SparkTestBase {
     )
     try epochs.foreach { e => mem.addData(e: _*); query.processAllAvailable() }
     finally query.stop()
+    assertNoneLeft(before)
     val served = GraphOps.clusterAssignments(spark, "graft_test_ci")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val all = epochs.flatten.toDF("a", "b")
@@ -729,6 +743,7 @@ class StreamingSpec extends SparkTestBase {
     val mem = MemoryStream[Vec]
     // nProbe = nCells: recall is exact in-test, so accept/reject is
     // deterministic
+    val before = persistedIds()
     val query = StreamingEvents.ivfIndexIngest(mem.toDF(), "t_stream_ivf",
       minCos = 0.95, nProbe = 3, checkpointDir = ckpt).start()
     try {
@@ -743,6 +758,7 @@ class StreamingSpec extends SparkTestBase {
       // re-append forever; the ingest probe must find it and reject
       mem.addData(Vec(101L, axis(3)))
       query.processAllAvailable()
+      assertNoneLeft(before)
       val indexed = spark.table("t_stream_ivf_cells")
         .select("neighbor_id").collect().map(_.getLong(0)).toSeq
       assert(indexed.sorted === ((0L until 12L) :+ 101L).sorted,
@@ -867,6 +883,7 @@ class StreamingSpec extends SparkTestBase {
       numSub = 2, numCentroids = 4, buckets = 4)
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ivfpq-ingest").toString
     val mem = MemoryStream[Vec]
+    val before = persistedIds()
     val query = StreamingEvents.ivfPqIndexIngest(mem.toDF(), "t_stream_ivfpq",
       checkpointDir = ckpt).start()
     try {
@@ -882,6 +899,7 @@ class StreamingSpec extends SparkTestBase {
       // collide with its own indexed copy, never re-append
       mem.addData(Vec(101L, axis(3)))
       query.processAllAvailable()
+      assertNoneLeft(before)
       val indexed = spark.table("t_stream_ivfpq_cells")
         .select("vec_id").collect().map(_.getLong(0)).toSeq
       assert(indexed.sorted === ((0L until 12L) :+ 101L).sorted,
